@@ -21,7 +21,7 @@ from .functions.text import N_BANDS
 from .operators.dedup import connected_components, minhash_near_dup
 from .queries_text import _SQL_DTOKS, _sql_minhash_bands
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, substrate
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -429,38 +429,30 @@ def q_vector_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- dedup clustering (connected components) -------------------------------
 
-#: clustering result memoized per (app, corpus identity) — the same
-#: materialized-intermediate pattern as the IVF codebook cache
-#: (operators/similarity.py:265): q_dedup_components and
-#: q_dedup_survivorship are two POLICIES over one clustering, and a
-#: production dedup pipeline materializes the cluster assignment once,
-#: not once per consumer. Keyed on the parquet's (mtime, size) so a
-#: regenerated fixture can never serve a stale clustering; the cached
-#: plan is an eager localCheckpoint (a few rows per cluster), so the
-#: second consumer pays a scan of that, not the LSH + CC rounds.
-_CC_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+# clustering result memoized per (app, corpus identity) — the same
+# materialized-intermediate pattern as the IVF codebook
+# (operators/similarity.train_centroids_sample): q_dedup_components and
+# q_dedup_survivorship are two POLICIES over one clustering, and a
+# production dedup pipeline materializes the cluster assignment once,
+# not once per consumer. Keyed on the parquet's (mtime, size) so a
+# regenerated fixture can never serve a stale clustering; the cached
+# plan is an eager localCheckpoint (a few rows per cluster), so the
+# second consumer pays a scan of that, not the LSH + CC rounds.
+def _components_key(a: dict) -> tuple:
     import os
 
-    path = os.path.join(sf_dir, "documents.parquet")
+    path = os.path.abspath(os.path.join(a["sf_dir"], "documents.parquet"))
     st = os.stat(path)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        st.st_mtime_ns,
-        st.st_size,
+    return (a["spark"].sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
+
+
+@substrate("dedup_components", warm=(), key=_components_key)
+def _components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+    edges = minhash_near_dup(docs, threshold=0.7)
+    return connected_components(edges, docs, id_col="doc_id").localCheckpoint(
+        eager=True
     )
-    df = _CC_CACHE.get(key)
-    if df is None:
-        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-        edges = minhash_near_dup(docs, threshold=0.7)
-        df = connected_components(edges, docs, id_col="doc_id").localCheckpoint(
-            eager=True
-        )
-        _CC_CACHE[key] = df
-    return df
 
 
 def _sql_dedup_components(threshold: float) -> str:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import query
-from .sources.loaders import load_table, scatter
+from .sources.loaders import load_table, scatter, substrate
 
 # Shared tokenizer expressions (functions/tokenize — the engine-wide
 # tokenization contract, one source for both engines).
@@ -290,18 +290,12 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: distinct (c, p) edge list, and the orders⋈lineitem+distinct build is
 #: most of the query's wall — build it once per (session, sf_dir) like
 #: the part-part edges substrate in queries_graphstats.
-_BIPARTITE_CACHE: dict = {}
-
-
+@substrate("bipartite_edges")
 def _bipartite_edges(spark: SparkSession, sf_dir: str):
     """(edges(c, p), degc(c, dc), degp(p, dp)) — distinct co-purchase
     pairs with per-side degrees, each eagerly checkpointed once per
     (session, sf_dir); |edges| is bounded by distinct customer-part
     pairs, degrees by the dimensions."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BIPARTITE_CACHE.get(key)
-    if hit is not None:
-        return hit
     orders = load_table(spark, "orders", sf_dir).select(
         F.col("o_custkey").alias("c"), "o_orderkey"
     )
@@ -317,7 +311,6 @@ def _bipartite_edges(spark: SparkSession, sf_dir: str):
     degc = edges.groupBy("c").agg(F.count(F.lit(1)).alias("dc")).localCheckpoint()
     degp = edges.groupBy("p").agg(F.count(F.lit(1)).alias("dp")).localCheckpoint()
     out = (edges, degc, degp)
-    _BIPARTITE_CACHE[key] = out
     return out
 
 

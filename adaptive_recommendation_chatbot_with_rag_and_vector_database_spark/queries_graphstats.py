@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, substrate
 
 # Co-purchase graph construction shared with q_pagerank (same
 # decimation, so the two queries describe the same graph).
@@ -40,18 +40,12 @@ _GRAPH_SQL = """
 #: assortativity, Katz, k-core, PageRank) each re-derived the SAME
 #: lineitem self-join before — the module's single heaviest repeated
 #: subplan. One checkpoint per session serves them all.
-_EDGES_CACHE: dict = {}
-
-
+@substrate("copurchase_edges")
 def _undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected co-purchase edge list (a < b), checkpointed once per
     (session, sf_dir): every consumer (degrees, orientation, wedge
     stats, |E|, PageRank's symmetrization) reads ONE materialization
     instead of re-deriving the lineitem self-join per query."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EDGES_CACHE.get(key)
-    if hit is not None:
-        return hit
     li = (
         load_table(spark, "lineitem", sf_dir)
         .filter(F.col("l_orderkey") % 20 == 0)
@@ -71,7 +65,6 @@ def _undirected_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    _EDGES_CACHE[key] = e
     return e
 
 
@@ -279,14 +272,8 @@ _CN_TOPK = 20
 #: subtree re-ran for every consumer branch). Counts/degrees are exact
 #: int64; both consumers apply their own further filters on top, so
 #: sharing changes no value.
-_CN_EDGES_CACHE: dict = {}
-
-
+@substrate("cn_edges")
 def _cn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CN_EDGES_CACHE.get(key)
-    if hit is not None:
-        return hit
     orders = load_table(spark, "orders", sf_dir).filter(
         F.col("o_orderkey") % _CN_ORDER_MOD == 0
     )
@@ -314,7 +301,6 @@ def _cn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.loaders import release_local_checkpoint
 
     release_local_checkpoint(e)
-    _CN_EDGES_CACHE[key] = kept
     return kept
 
 

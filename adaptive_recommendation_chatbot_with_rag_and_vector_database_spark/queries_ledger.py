@@ -589,27 +589,10 @@ def q_fifo_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     match set; the part dimension is broadcast into the scan filter.
     At 100 TB the equi-key carries all parallelism and per-part state
     is the pair of cumsum columns — no iteration, no driver loop."""
-    part = (
-        load_table(spark, "part", sf_dir)
-        .filter(F.col("p_brand") == _FIFO_BRAND)
-        .select("p_partkey")
-    )
-    base = (
-        load_table(spark, "lineitem", sf_dir)
-        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .select(
-            "l_partkey",
-            "l_linestatus",
-            F.col("l_quantity").cast("long").alias("qty"),
-            "l_shipdate",
-            "l_orderkey",
-            "l_linenumber",
-        )
-        # lazy checkpoint (r12 scan-dupe paydown): the brand-filtered
-        # slice feeds BOTH the receipt and the issue cumsum sides — as
-        # plain subtrees the fact scan+dim probe ran twice per call
-        .localCheckpoint(eager=False)
-    )
+    # lazy checkpoint (r12 scan-dupe paydown): the brand-filtered slice
+    # feeds BOTH the receipt and the issue cumsum sides — as plain
+    # subtrees the fact scan+dim probe ran twice per call
+    base = fifo_slice_frame(spark, sf_dir).localCheckpoint(eager=False)
     wo = (
         Window.partitionBy("l_partkey")
         .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
@@ -656,6 +639,30 @@ def q_fifo_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("l_partkey", "receipt_seq", "issue_seq")
+    )
+
+
+def fifo_slice_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The un-checkpointed brand-filtered lineitem slice
+    :func:`q_fifo_inventory` checkpoints — exposed so plan tests can
+    assert the part broadcast the checkpoint otherwise hides behind
+    ``Scan ExistingRDD``."""
+    part = (
+        load_table(spark, "part", sf_dir)
+        .filter(F.col("p_brand") == _FIFO_BRAND)
+        .select("p_partkey")
+    )
+    return (
+        load_table(spark, "lineitem", sf_dir)
+        .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+        .select(
+            "l_partkey",
+            "l_linestatus",
+            F.col("l_quantity").cast("long").alias("qty"),
+            "l_shipdate",
+            "l_orderkey",
+            "l_linenumber",
+        )
     )
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, substrate
 
 # --- W18a: PSI feature-drift report ----------------------------------------
 
@@ -1097,19 +1097,13 @@ def q_feature_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: orders⋈lineitem label join + two aggregates — so it's built once
 #: per session (the daily_orders pattern). Values bit-identical to
 #: each query's standalone build; no oracle changes.
-_SCORE_CLASSES_CACHE: dict = {}
-
-
+@substrate("score_classes")
 def _score_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(score, pos_cnt, neg_cnt, bkt) over orders' does-price-predict-
     returns label: score = o_totalprice, pos = the order has a returned
     line, counts int64-exact, bkt = floor(score/10000) (the two-phase
     prefix-sum bucket both AUC siblings window on). Eagerly
     checkpointed once per (session, sf_dir); |distinct scores| rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SCORE_CLASSES_CACHE.get(key)
-    if hit is not None:
-        return hit
     o = load_table(spark, "orders", sf_dir)
     li = load_table(spark, "lineitem", sf_dir)
     lab = (
@@ -1130,7 +1124,6 @@ def _score_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("bkt", F.floor(F.col("score") / 10000.0).cast("long"))
         .localCheckpoint()
     )
-    _SCORE_CLASSES_CACHE[key] = b
     return b
 
 

@@ -32,7 +32,7 @@ from .operators.ranking import (
     rrf_fuse,
 )
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, substrate
 
 # Fixed lexical query: three mid-frequency corpus terms (order matters —
 # the per-term contribution sum is left-to-right on both engines).
@@ -600,9 +600,7 @@ _RM_IDCG = (0, 1000000, 1630930, 2130930, 2561607, 2948460,
 #: rollup feeds two consumers). The _exact_panel pattern applied to
 #: the R8 evaluation panel; sharing is semantics-free, every consumer
 #: read bit-identical rows before.
-_RM_HITS_CACHE: dict = {}
-
-
+@substrate("rm_hits")
 def _rm_hits(spark: SparkSession, sf_dir: str):
     """(hits(query_id, vec_id, rnk), panel_rows): checkpointed once
     per (session, sf_dir); panel_rows carries (vec_id, embedding,
@@ -611,10 +609,6 @@ def _rm_hits(spark: SparkSession, sf_dir: str):
     from .operators.similarity import brute_topk_partials
     from .sources.loaders import scatter
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _RM_HITS_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = load_table(spark, "embeddings", sf_dir)
     # bounded-by-construction driver collect: the fixed probe panel
     panel_rows = (
@@ -636,7 +630,6 @@ def _rm_hits(spark: SparkSession, sf_dir: str):
         .localCheckpoint()
     )
     out = (hits, panel_rows)
-    _RM_HITS_CACHE[key] = out
     return out
 
 

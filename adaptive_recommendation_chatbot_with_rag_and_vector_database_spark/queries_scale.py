@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, substrate
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -296,19 +296,13 @@ def q_vector_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ALS recommendations (rows-only: iterative MLlib factorization) --------
 
-# Fitted recommendation DataFrames memoized per (session, sf_dir): a
-# factorization is a STATIC model artifact — real deployments fit once
-# per corpus snapshot and serve the factors (the codebook convention,
-# operators/similarity._CODEBOOKS). Within a session, the quality query
-# and repeated bench runs must not re-run the alternating solves.
-_ALS_RECS: dict[tuple, DataFrame] = {}
-
-
+#: Fitted recommendation DataFrames memoized per (session, sf_dir): a
+#: factorization is a STATIC model artifact — real deployments fit once
+#: per corpus snapshot and serve the factors (the codebook convention,
+#: operators/similarity.train_centroids_sample). Within a session, the quality query
+#: and repeated bench runs must not re-run the alternating solves.
+@substrate("als_recs")
 def _als_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ALS_RECS.get(key)
-    if cached is not None:
-        return cached
     from pyspark.ml.recommendation import ALS
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
@@ -349,7 +343,6 @@ def _als_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # EVERY action against the cached frame (measured 7 s/run warm)
         .localCheckpoint()
     )
-    _ALS_RECS[key] = out
     return out
 
 
@@ -1128,10 +1121,7 @@ def grouped_quantiles_from_ranked(
 #: Σcnt + re-rank over |classes| rows — no second fact scan, values
 #: identical by construction (counts are integers; cum is recomputed
 #: from scratch), so no oracle changes.
-_PRICE_CLASSES_G_CACHE: dict = {}
-_PRICE_CLASSES_CACHE: dict = {}
-
-
+@substrate("price_classes_grouped", warm=())
 def price_classes_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_returnflag, v, cnt, w, cum) tie classes of l_extendedprice
     per return flag — ``grouped_ranked_tie_classes`` on the fact with
@@ -1141,10 +1131,6 @@ def price_classes_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     the substrate grain IS the query's own (flag, price) grain, so
     sharing is value-identical) — computed once per (session,
     sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PRICE_CLASSES_G_CACHE.get(key)
-    if hit is not None:
-        return hit
     li = load_table(spark, "lineitem", sf_dir).select(
         "l_returnflag", "l_extendedprice", "l_quantity"
     )
@@ -1154,27 +1140,21 @@ def price_classes_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         extra_aggs=(F.sum("l_quantity").alias("w"),),
     )
-    _PRICE_CLASSES_G_CACHE[key] = g
     return g
 
 
+@substrate("price_classes")
 def price_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(v, cnt, cum) ungrouped l_extendedprice tie classes, derived
     from the grouped session substrate (Σcnt over the ≤|classes| rows,
     then the same floor-bucket re-rank) — value-identical to
     ``ranked_tie_classes`` on the raw column, one fact scan fewer."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PRICE_CLASSES_CACHE.get(key)
-    if hit is not None:
-        return hit
     vc = (
         price_classes_grouped(spark, sf_dir)
         .groupBy("v")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    flat = classes_from_counts(vc)
-    _PRICE_CLASSES_CACHE[key] = flat
-    return flat
+    return classes_from_counts(vc)
 
 
 @query(

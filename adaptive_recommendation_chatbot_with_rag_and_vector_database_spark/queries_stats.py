@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, substrate
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -40,17 +40,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: pivoted per-status subcounts), used directly (brown_forsythe), or
 #: summed over statuses (l_moments) — is value-identical to its
 #: standalone build; no oracle changes. |status × distinct value| rows.
-_ORDER_VALUE_CLASSES_CACHE: dict = {}
-
-
+@substrate("order_value_classes")
 def _order_value_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ORDER_VALUE_CLASSES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    ovc = order_value_classes_frame(spark, sf_dir).localCheckpoint()
-    _ORDER_VALUE_CLASSES_CACHE[key] = ovc
-    return ovc
+    return order_value_classes_frame(spark, sf_dir).localCheckpoint()
 
 
 def order_value_classes_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,17 +69,9 @@ def order_value_classes_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: consumer (declared: the one rank-pivot query); it lives here rather
 #: than per-call because the pivot is a static derivation of the
 #: same-session value-class substrate, not per-query state.
-_ORDER_VALUE_PIVOT_CACHE: dict = {}
-
-
+@substrate("order_value_pivot")
 def _order_value_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ORDER_VALUE_PIVOT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    piv = order_value_pivot_frame(spark, sf_dir).localCheckpoint()
-    _ORDER_VALUE_PIVOT_CACHE[key] = piv
-    return piv
+    return order_value_pivot_frame(spark, sf_dir).localCheckpoint()
 
 
 def order_value_pivot_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -47,7 +47,7 @@ from .operators.dedup import (
     inverted_index_overlap,
 )
 from .registry import query
-from .sources.loaders import doc_tokens, load_table, scatter
+from .sources.loaders import doc_tokens, load_table, scatter, substrate
 
 # --- shared DuckDB SQL fragments (from the same constants) -----------------
 
@@ -136,16 +136,10 @@ def _sql_minhash_bands(table: str = "documents") -> str:
 #: are cheap in-row codegen over the checkpointed tokh arrays. At
 #: cluster scale this is the standard "tokenize once, reuse" corpus
 #: materialization; locally it replaces three full text scans.
-_DOC_SKETCH_CACHE: dict = {}
-
-
+@substrate("doc_sketch")
 def _doc_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import _with_sketch
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DOC_SKETCH_CACHE.get(key)
-    if hit is not None:
-        return hit
     # scatter = min-parallelism guard: the fixture scan is ONE partition
     # and the tokenize+hash fold is the build's whole cost, so it must
     # fan out locally; on a cluster-scale scan scatter is a no-op (zero
@@ -160,7 +154,6 @@ def _doc_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("sig", minhash_signature(F.col("tokh")))
         .localCheckpoint()
     )
-    _DOC_SKETCH_CACHE[key] = sk
     return sk
 
 
@@ -172,18 +165,12 @@ def _doc_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: packed — the explode is cheap codegen each consumer keeps local),
 #: so the checkpoint is the corpus's bigram footprint, the same order
 #: as the gram-keyed shuffle every consumer already pays.
-_DOC_BIGRAMS_CACHE: dict = {}
-
-
+@substrate("doc_bigrams")
 def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, bigrams) with bigrams = array_distinct word
     bigrams of the tokenize-contract tokens — eagerly checkpointed once
     per (session, sf_dir); scatter fans the single-partition fixture
     scan out before the regex work (no-op on a cluster-scale scan)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DOC_BIGRAMS_CACHE.get(key)
-    if hit is not None:
-        return hit
     bg = (
         scatter(_docs(spark, sf_dir))
         .select(
@@ -193,7 +180,6 @@ def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _DOC_BIGRAMS_CACHE[key] = bg
     return bg
 
 

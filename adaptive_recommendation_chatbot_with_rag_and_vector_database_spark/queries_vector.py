@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from .functions.vector import cosine_sim
 from .operators.retrieval import build_chunk_index
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, substrate
 
 #: session-cached chunk index, keyed by (applicationId, sf_dir): the
 #: build (S4) and its invariant audit (q_index_quality) consume the
@@ -28,17 +28,9 @@ from .sources.loaders import load_table
 #: pipeline's two Python stages (chunker + embedder — the single most
 #: expensive per-query cost in the round-9 bench). Values unchanged:
 #: both consumers read the same deterministic rows either way.
-_CHUNK_INDEX_CACHE: dict = {}
-
-
+@substrate("chunk_index")
 def _chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CHUNK_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    idx = build_chunk_index(load_table(spark, "documents", sf_dir)).localCheckpoint()
-    _CHUNK_INDEX_CACHE[key] = idx
-    return idx
+    return build_chunk_index(load_table(spark, "documents", sf_dir)).localCheckpoint()
 
 # Query side of the kNN join: one probe row every 50 ids (10 probes over
 # the 500-row fixture index) — scan-friendly and self-contained in SQL.
@@ -204,17 +196,11 @@ def _probes(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: bit-identical rows — no second ANN pass. q_ann_ivf's default-budget
 #: call has one consumer and stays uncached (a checkpoint there would
 #: only add a materialization job).
-_ANN_RESULT_CACHE: dict = {}
-
-
+@substrate("ann_{}_result", warm=(("lsh",), ("ivf12",), ("auto",)))
 def _ann_result(spark: SparkSession, sf_dir: str, route: str) -> DataFrame:
     from .operators.retrieval import knn_auto
     from .operators.similarity import ivf_knn, lsh_knn
 
-    key = (spark.sparkContext.applicationId, sf_dir, route)
-    hit = _ANN_RESULT_CACHE.get(key)
-    if hit is not None:
-        return hit
     if route == "lsh":
         ann = lsh_knn(_probes(spark, sf_dir), _emb(spark, sf_dir), k=_K)
     elif route == "ivf12":
@@ -236,9 +222,7 @@ def _ann_result(spark: SparkSession, sf_dir: str, route: str) -> DataFrame:
         )
     else:  # pragma: no cover - internal routes only
         raise KeyError(route)
-    ann = ann.localCheckpoint()
-    _ANN_RESULT_CACHE[key] = ann
-    return ann
+    return ann.localCheckpoint()
 
 
 @query("q_ann_lsh")  # approximate by design → rows-only oracle
@@ -283,9 +267,7 @@ _PARITY_PANEL = 512
 #: duplicate full-index Arrow passes from any run that executes them
 #: together (the round-8 bench's single largest duplication). Sharing
 #: is semantics-free: every consumer read bit-identical rows before.
-_GT_PANEL_CACHE: dict = {}
-
-
+@substrate("ann_exact_panel")
 def _exact_panel(spark: SparkSession, sf_dir: str):
     """(exact_df, panel_query_ids): the brute-force (query_id, vec_id)
     top-{_K} over the fixed {_RECALL_PANEL}-probe panel via the Arrow
@@ -294,10 +276,6 @@ def _exact_panel(spark: SparkSession, sf_dir: str):
     from .operators.similarity import brute_topk_partials
     from .sources.loaders import scatter
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GT_PANEL_CACHE.get(key)
-    if hit is not None:
-        return hit
     probes = _probes(spark, sf_dir).orderBy("query_id").limit(_RECALL_PANEL)
     panel = [(r.query_id, r.qvec) for r in probes.collect()]
     dim = len(panel[0][1])
@@ -312,7 +290,6 @@ def _exact_panel(spark: SparkSession, sf_dir: str):
         .localCheckpoint()
     )
     out = (exact, [q for q, _ in panel])
-    _GT_PANEL_CACHE[key] = out
     return out
 
 
@@ -419,15 +396,6 @@ def q_ann_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the old single-plan form had); the checkpointed frames are
     # k·panel rows, never corpus-sized.
     from concurrent.futures import ThreadPoolExecutor
-
-    from .operators.similarity import train_centroids_sample
-
-    # pre-warm the shared codebook ONCE before the concurrent builds
-    # (ADVICE r11 #2): on a cold _CODEBOOKS cache the two threads would
-    # otherwise race the unsynchronized check-then-set and BOTH run the
-    # KMeans fit — parity stayed correct (training is deterministic)
-    # but the duplicated fit wasted the wall the overlap buys
-    train_centroids_sample(emb, 16, "embedding", cache_key=sf_dir)
 
     def _ckpt(kernel):
         return kernel(

@@ -1685,27 +1685,10 @@ def q_top_supplier_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     table JOINED back (never a whole-nation window over fact rows);
     the rn <= 3 cut runs as WindowGroupLimit below the exchange
     (plan-pinned)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    sup = _t(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_name", "s_nationkey"
-    )
-    nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .groupBy("n_name", "s_name")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("rev")
-        )
-        # lazy checkpoint (r12 scan-dupe paydown): the |nation×supplier|
-        # rollup feeds the nation totals AND the ranked join-back — as
-        # plain subtrees the fact scan+aggregate ran twice per call
-        .localCheckpoint(eager=False)
-    )
+    # lazy checkpoint (r12 scan-dupe paydown): the |nation×supplier|
+    # rollup feeds the nation totals AND the ranked join-back — as
+    # plain subtrees the fact scan+aggregate ran twice per call
+    rev = supplier_revenue_frame(spark, sf_dir).localCheckpoint(eager=False)
     tot = rev.groupBy("n_name").agg(F.sum("rev").alias("tot"))
     w = Window.partitionBy("n_name").orderBy(F.desc("rev"), F.asc("s_name"))
     return (
@@ -1720,6 +1703,30 @@ def q_top_supplier_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("rev") / F.col("tot"), 6).alias("share"),
         )
         .orderBy("n_name", "rn")
+    )
+
+
+def supplier_revenue_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The un-checkpointed (n_name, s_name, rev) rollup
+    :func:`q_top_supplier_share` checkpoints — exposed so plan tests can
+    assert the two dimension broadcasts the checkpoint otherwise hides
+    behind ``Scan ExistingRDD``."""
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_suppkey", "l_extendedprice", "l_discount"
+    )
+    sup = _t(spark, sf_dir, "supplier").select(
+        "s_suppkey", "s_name", "s_nationkey"
+    )
+    nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
+        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
+        .groupBy("n_name", "s_name")
+        .agg(
+            F.sum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount"))
+            ).alias("rev")
+        )
     )
 
 

@@ -49,9 +49,9 @@ def get_spark(app_name: str = "rag_engine", cpus: int | None = None) -> SparkSes
 
 
 def _hook_substrate_eviction(spark: SparkSession) -> None:
-    """Wrap ``spark.stop`` so every session-substrate cache is dropped
-    at teardown (VERDICT r10 #4): the module-level caches otherwise
-    hold checkpointed DataFrames — and their Python references — for
+    """Wrap ``spark.stop`` so every session-substrate entry is dropped
+    at teardown (VERDICT r10 #4): the substrate registry otherwise
+    holds checkpointed DataFrames — and their Python references — for
     the life of the process, a leak in any long-lived service that
     cycles sessions. The checkpoint BLOCKS die with the SparkContext;
     this releases the references so the entries can't be mistaken for

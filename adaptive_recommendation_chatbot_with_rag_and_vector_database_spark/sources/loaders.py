@@ -7,6 +7,12 @@ reader, predicate pushdown, and column pruning for free.
 
 from __future__ import annotations
 
+import functools
+import inspect
+import threading
+import time
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -64,6 +70,112 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return df
 
 
+#: every session substrate by name, in registration (import) order
+_SUBSTRATES: dict[str, Callable] = {}
+#: guards the per-key lock tables of every substrate
+_LOCK_GUARD = threading.Lock()
+_MISS = object()
+
+
+def substrate(
+    name: str,
+    *,
+    warm: tuple[tuple, ...] = ((),),
+    key: Callable[[dict], tuple | None] | None = None,
+):
+    """Memoize a session substrate: an expensive intermediate several
+    queries share (a checkpointed rollup, a fitted model, a codebook).
+
+    The key is ``(applicationId, *args)`` — the session of the first
+    argument plus every other argument, defaults filled in, so
+    positional and keyword calls share an entry. ``key`` replaces that
+    rule: it receives the bound arguments by name and returns the key,
+    or None to build without memoizing. A per-key lock makes a cold key
+    build exactly once however many threads ask for it; different keys
+    build concurrently, so substrates may call one another.
+
+    ``warm`` lists the extra arguments (after ``spark, sf_dir``) that
+    :func:`warm_substrates` builds, one entry each, named
+    ``name.format(*extra)``; ``()`` leaves the substrate out of the warm.
+    The decorated function keeps its signature and gains ``cache`` (the
+    key → value store :func:`clear_substrate_caches` empties) and
+    ``timed`` (same call, returning ``(value, build seconds)``, 0.0 on
+    a hit)."""
+
+    def deco(build: Callable) -> Callable:
+        sig = inspect.signature(build)
+        cache: dict = {}
+        locks: dict = {}
+
+        def timed(*args, **kwargs):
+            bound = sig.bind(*args, **kwargs)
+            bound.apply_defaults()
+            if key is None:
+                spark, *rest = bound.arguments.values()
+                k = (spark.sparkContext.applicationId, *rest)
+            else:
+                k = key(bound.arguments)
+                if k is None:
+                    return build(*args, **kwargs), 0.0
+            hit = cache.get(k, _MISS)
+            if hit is not _MISS:
+                return hit, 0.0
+            with _LOCK_GUARD:
+                lock = locks.setdefault(k, threading.Lock())
+            with lock:
+                hit = cache.get(k, _MISS)
+                if hit is not _MISS:
+                    return hit, 0.0
+                t0 = time.perf_counter()
+                value = cache[k] = build(*args, **kwargs)
+                return value, time.perf_counter() - t0
+
+        @functools.wraps(build)
+        def cached(*args, **kwargs):
+            return timed(*args, **kwargs)[0]
+
+        cached.cache, cached.timed = cache, timed
+        cached._locks, cached._warm = locks, warm
+        _SUBSTRATES[name] = cached
+        return cached
+
+    return deco
+
+
+def clear_substrate_caches() -> int:
+    """Drop every session-substrate entry, returning how many were
+    dropped. Entries otherwise hold checkpointed frames for the life of
+    the process, stopped sessions' included. Unpersisting is left to
+    session teardown — localCheckpoint blocks die with their
+    SparkContext — so this only releases the Python references."""
+    n = 0
+    with _LOCK_GUARD:
+        for fn in _SUBSTRATES.values():
+            n += len(fn.cache)
+            fn.cache.clear()
+            fn._locks.clear()
+    return n
+
+
+def warm_substrates(spark: SparkSession, sf_dir: str) -> dict:
+    """Build every warmed session substrate eagerly, returning
+    {name: build seconds} (0.0 for one already built).
+
+    Bench warm-up calls this so substrate construction is a visible
+    line item instead of landing inside whichever consumer query runs
+    first (q_ann_recall once read 12.2 s purely because it built the
+    shared ground-truth panel). A substrate that nests another reports
+    both builds unless the inner one is warmed first."""
+    from ..registry import queries
+
+    queries()  # imports every query module, registering its substrates
+    timings = {}
+    for name, fn in list(_SUBSTRATES.items()):
+        for extra in fn._warm:
+            timings[name.format(*extra)] = round(fn.timed(spark, sf_dir, *extra)[1], 3)
+    return timings
+
+
 #: session-cached day-level orders rollup, keyed by (applicationId,
 #: sf_dir): five temporal/measurement queries (q_kendall_tau,
 #: q_runs_test, q_holt_forecast, q_evt_gumbel,
@@ -74,9 +186,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
 #: values (count / 4-dp-rounded sum / 4-dp-rounded max) are exactly
 #: what each consumer computed standalone, so sharing changes no
 #: result and no oracle.
-_DAILY_ORDERS_CACHE: dict = {}
-
-
+@substrate("daily_orders")
 def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(d, n_orders, rev, mx) per order day — d = to_date(o_orderdate),
     n_orders = count, rev = round(sum(o_totalprice), 4),
@@ -86,11 +196,7 @@ def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     here so every consumer inherits cross-engine-stable inputs."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DAILY_ORDERS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    daily = (
+    return (
         load_table(spark, "orders", sf_dir)
         .groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
@@ -100,8 +206,6 @@ def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _DAILY_ORDERS_CACHE[key] = daily
-    return daily
 
 
 #: session-cached part-level revenue rollup, keyed by (applicationId,
@@ -113,16 +217,7 @@ def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: gross/net are exact 2-4-decimal quantities, so the true per-part sum
 #: is an exact 4-dp decimal and the two-stage float error (~1e-9 rel)
 #: never reaches the 5e-5 rounding boundary — oracles unchanged.
-_PART_REVENUE_CACHE: dict = {}
-
-#: session-cached customer lifetime-revenue rollup: q_lorenz_gini,
-#: q_theil_index (rounded rev) and q_pareto_concentration (raw rev)
-#: each re-scanned orders for the same per-customer sum. Both the
-#: 4-dp-rounded and raw values are carried so every consumer reads
-#: bit-identical inputs to its standalone form — no oracle changes.
-_CUST_REVENUE_CACHE: dict = {}
-
-
+@substrate("part_revenue")
 def part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_partkey, yr, week, gross, net, qty) per part × ship-year ×
     ship-week — yr = year(l_shipdate), week = the Monday of
@@ -145,11 +240,7 @@ def part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale factor."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PART_REVENUE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pr = (
+    return (
         load_table(spark, "lineitem", sf_dir)
         .groupBy(
             "l_partkey",
@@ -165,10 +256,14 @@ def part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _PART_REVENUE_CACHE[key] = pr
-    return pr
 
 
+#: session-cached customer lifetime-revenue rollup: q_lorenz_gini,
+#: q_theil_index (rounded rev) and q_pareto_concentration (raw rev)
+#: each re-scanned orders for the same per-customer sum. Both the
+#: 4-dp-rounded and raw values are carried so every consumer reads
+#: bit-identical inputs to its standalone form — no oracle changes.
+@substrate("cust_revenue")
 def cust_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_custkey, rev, rev_raw) per ordering customer — rev =
     round(sum(o_totalprice), 4) (the module convention q_lorenz_gini /
@@ -177,11 +272,7 @@ def cust_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (session, sf_dir). |customers| rows."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CUST_REVENUE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cust = (
+    return (
         load_table(spark, "orders", sf_dir)
         .groupBy("o_custkey")
         .agg(
@@ -190,8 +281,6 @@ def cust_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _CUST_REVENUE_CACHE[key] = cust
-    return cust
 
 
 #: session-cached per-document token/length counts: six registered
@@ -205,9 +294,7 @@ def cust_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: contract of functions/tokenize.py) and ``nt_space`` (the raw
 #: single-space split q_pack_sequences/q_corpus_mixture mirror with
 #: DuckDB ``string_split(text, ' ')``).
-_DOC_TOKENS_CACHE: dict = {}
-
-
+@substrate("doc_tokens")
 def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, source, chars, n_tok, nt_space, bpe_tok) per
     document — chars = length(text), n_tok = |lower/\\s+ tokens|,
@@ -217,13 +304,7 @@ def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     every consumer reads the exact column type it computed standalone.
     |docs| rows × 7 scalars: the checkpoint is dimension-sized, never
     corpus-sized, at any scale factor."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DOC_TOKENS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    dt = doc_tokens_frame(spark, sf_dir).localCheckpoint()
-    _DOC_TOKENS_CACHE[key] = dt
-    return dt
+    return doc_tokens_frame(spark, sf_dir).localCheckpoint()
 
 
 def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,132 +331,6 @@ def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         token_count_bpe("text").alias("bpe_tok"),
     )
-
-
-def clear_substrate_caches() -> int:
-    """Drop every session-substrate cache entry (ADVICE r9: the
-    module-level caches otherwise hold checkpointed DataFrames for the
-    life of the process, including entries for stopped sessions).
-    Returns the number of entries dropped. Unpersisting is left to
-    session teardown — localCheckpoint blocks die with their
-    SparkContext — so this only releases the Python references."""
-    from .. import (
-        queries_curation,
-        queries_graphstats,
-        queries_mlops,
-        queries_retrieval,
-        queries_scale,
-        queries_stats,
-        queries_text,
-        queries_vector,
-    )
-
-    caches = (
-        queries_retrieval._RM_HITS_CACHE,
-        queries_stats._ORDER_VALUE_CLASSES_CACHE,
-        queries_stats._ORDER_VALUE_PIVOT_CACHE,
-        queries_text._DOC_SKETCH_CACHE,
-        queries_text._DOC_BIGRAMS_CACHE,
-        queries_graphstats._EDGES_CACHE,
-        queries_graphstats._CN_EDGES_CACHE,
-        queries_curation._BIPARTITE_CACHE,
-        _DAILY_ORDERS_CACHE,
-        _PART_REVENUE_CACHE,
-        _CUST_REVENUE_CACHE,
-        _DOC_TOKENS_CACHE,
-        queries_scale._PRICE_CLASSES_G_CACHE,
-        queries_scale._PRICE_CLASSES_CACHE,
-        queries_scale._ALS_RECS,
-        queries_mlops._SCORE_CLASSES_CACHE,
-        queries_vector._CHUNK_INDEX_CACHE,
-        queries_vector._GT_PANEL_CACHE,
-        queries_vector._ANN_RESULT_CACHE,
-    )
-    n = sum(len(c) for c in caches)
-    for c in caches:
-        c.clear()
-    return n
-
-
-def warm_substrates(spark: SparkSession, sf_dir: str) -> dict:
-    """Build every session substrate eagerly, returning {name: sec}.
-
-    Called from bench warm-up so substrate construction is a visible
-    line item instead of silently landing inside whichever consumer
-    query happens to run first (VERDICT r9 #5/#6: q_ann_recall read
-    12.2 s in the r9 pair purely because it built the shared ground-
-    truth panel). Consumers hit the session caches afterwards, exactly
-    as they do in any multi-query session."""
-    import time
-
-    from .. import (
-        queries_curation,
-        queries_graphstats,
-        queries_retrieval,
-        queries_scale,
-        queries_stats,
-        queries_text,
-        queries_vector,
-    )
-    from ..queries_mlops import _score_classes as _mlops_classes
-
-    timings = {}
-    for name, build in (
-        ("daily_orders", lambda: daily_orders(spark, sf_dir)),
-        ("part_revenue", lambda: part_revenue(spark, sf_dir)),
-        ("cust_revenue", lambda: cust_revenue(spark, sf_dir)),
-        ("doc_tokens", lambda: doc_tokens(spark, sf_dir)),
-        (
-            "price_classes",
-            lambda: (
-                queries_scale.price_classes_grouped(spark, sf_dir),
-                queries_scale.price_classes(spark, sf_dir),
-            ),
-        ),
-        ("score_classes", lambda: _mlops_classes(spark, sf_dir)),
-        ("chunk_index", lambda: queries_vector._chunk_index(spark, sf_dir)),
-        ("ann_exact_panel", lambda: queries_vector._exact_panel(spark, sf_dir)),
-        ("ann_lsh_result", lambda: queries_vector._ann_result(spark, sf_dir, "lsh")),
-        (
-            "ann_ivf12_result",
-            lambda: queries_vector._ann_result(spark, sf_dir, "ivf12"),
-        ),
-        (
-            "ann_auto_result",
-            lambda: queries_vector._ann_result(spark, sf_dir, "auto"),
-        ),
-        ("als_recs", lambda: queries_scale._als_recs(spark, sf_dir)),
-        ("doc_sketch", lambda: queries_text._doc_sketch(spark, sf_dir)),
-        ("doc_bigrams", lambda: queries_text._doc_bigrams(spark, sf_dir)),
-        (
-            "copurchase_edges",
-            lambda: queries_graphstats._undirected_edges(spark, sf_dir),
-        ),
-        (
-            "bipartite_edges",
-            lambda: queries_curation._bipartite_edges(spark, sf_dir),
-        ),
-        (
-            "order_value_classes",
-            lambda: queries_stats._order_value_classes(spark, sf_dir),
-        ),
-        (
-            "order_value_pivot",
-            lambda: queries_stats._order_value_pivot(spark, sf_dir),
-        ),
-        (
-            "cn_edges",
-            lambda: queries_graphstats._cn_edges(spark, sf_dir),
-        ),
-        (
-            "rm_hits",
-            lambda: queries_retrieval._rm_hits(spark, sf_dir),
-        ),
-    ):
-        t0 = time.perf_counter()
-        build()
-        timings[name] = round(time.perf_counter() - t0, 3)
-    return timings
 
 
 def release_local_checkpoint(df: DataFrame) -> bool:

@@ -92,14 +92,13 @@ def test_doc_sketch_substrate_scatters_once_and_consumers_read_it(spark):
     # substrate build, and each consumer's plan reads the checkpointed
     # RDD — no re-scan of documents, no second tokenize pass
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_text import (
-        _DOC_SKETCH_CACHE,
         _doc_sketch,
     )
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
         DEFAULT_SF_DIR,
     )
 
-    _DOC_SKETCH_CACHE.clear()
+    _doc_sketch.cache.clear()
     try:
         # ADVICE r10 #1: the checkpoint hides the substrate-build
         # exchange, so assert scatter on the PRE-checkpoint build plan
@@ -131,7 +130,7 @@ def test_doc_sketch_substrate_scatters_once_and_consumers_read_it(spark):
             assert "Scan ExistingRDD" in plan  # reads the checkpoint
             assert "FileScan" not in plan  # never re-reads documents
     finally:
-        _DOC_SKETCH_CACHE.clear()
+        _doc_sketch.cache.clear()
 
 
 def test_scatter_is_noop_on_well_partitioned_input(spark):
@@ -798,8 +797,15 @@ def test_fifo_join_is_keyed_not_cartesian(spark):
     # range predicates as post-filters — never a cartesian pair space
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # brand filter reaches the part dimension as a broadcast
-    assert "BroadcastHashJoin" in plan
+    # brand filter reaches the part dimension as a broadcast — asserted
+    # on the un-checkpointed slice, which the final plan reads as
+    # Scan ExistingRDD
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_ledger import (
+        fifo_slice_frame,
+    )
+
+    slice_plan = fifo_slice_frame(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in slice_plan
 
 
 def test_ranking_metrics_index_never_shuffled(spark):
@@ -1167,11 +1173,20 @@ def test_poisson_gof_single_pass_and_broadcast_bins(spark):
 
 def test_top_supplier_share_windowgrouplimit_and_broadcast_dims(spark):
     plan = _plan(spark, "q_top_supplier_share")
-    # rn<=3 runs as partial top-k below the exchange; both dims broadcast;
-    # nation totals come from an aggregate join (post-agg row counts —
-    # AQE broadcasts it at runtime), never a fact-row window
+    # rn<=3 runs as partial top-k below the exchange; nation totals come
+    # from an aggregate join (post-agg row counts — AQE broadcasts it at
+    # runtime), never a fact-row window
     assert "WindowGroupLimit" in plan
-    assert plan.count("BroadcastHashJoin") >= 2
+    # both dims broadcast — asserted on the un-checkpointed rollup,
+    # which the final plan reads as Scan ExistingRDD
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_warehouse import (
+        supplier_revenue_frame,
+    )
+
+    rollup_plan = (
+        supplier_revenue_frame(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert rollup_plan.count("BroadcastHashJoin") >= 2
 
 
 def test_sql_udf_inlines_into_codegen(spark):

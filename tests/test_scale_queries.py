@@ -248,10 +248,10 @@ def test_als_fit_memoized_per_session_and_corpus(spark):
         queries_scale as S,
     )
 
-    S._ALS_RECS.clear()
+    S._als_recs.cache.clear()
     a = S._als_recs(spark, SF)
-    assert len(S._ALS_RECS) == 1
+    assert len(S._als_recs.cache) == 1
     b = S._als_recs(spark, SF)
     assert b is a  # cache hit: same DataFrame, no re-fit
     S.q_recommend_quality(spark, SF).collect()
-    assert len(S._ALS_RECS) == 1  # quality query reused the same fit
+    assert len(S._als_recs.cache) == 1  # quality query reused the same fit

@@ -320,19 +320,138 @@ def test_substrate_caches_evict_on_session_stop(spark):
     fake = FakeSession()
     _hook_substrate_eviction(fake)
     sentinel = ("test-app", "test-sf")
-    loaders._DAILY_ORDERS_CACHE[sentinel] = object()
-    loaders._DOC_TOKENS_CACHE[sentinel] = object()
+    loaders.daily_orders.cache[sentinel] = object()
+    loaders.doc_tokens.cache[sentinel] = object()
     try:
         fake.stop()
         assert fake.stopped
-        assert sentinel not in loaders._DAILY_ORDERS_CACHE
-        assert sentinel not in loaders._DOC_TOKENS_CACHE
+        assert sentinel not in loaders.daily_orders.cache
+        assert sentinel not in loaders.doc_tokens.cache
         # idempotent: re-hooking must not double-wrap
         _hook_substrate_eviction(fake)
         assert getattr(fake, "_substrate_evict_hooked", False)
     finally:
-        loaders._DAILY_ORDERS_CACHE.pop(sentinel, None)
-        loaders._DOC_TOKENS_CACHE.pop(sentinel, None)
+        loaders.daily_orders.cache.pop(sentinel, None)
+        loaders.doc_tokens.cache.pop(sentinel, None)
+
+
+def test_clearing_drops_every_substrate_entry(spark):
+    """clear_substrate_caches — and stop() on a hooked session — leaves
+    no entry behind: the warmed substrates, the dedup clustering (keyed
+    on the parquet's file stats) and a keyed IVF codebook (keyed
+    without a session) all live in the one registry."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.similarity import (
+        train_centroids_sample,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_analytics import (
+        _components_cached,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.session import (
+        _hook_substrate_eviction,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources import (
+        loaders,
+    )
+
+    sf = loaders.DEFAULT_SF_DIR
+    emb = loaders.load_table(spark, "embeddings", sf)
+    timings = loaders.warm_substrates(spark, sf)
+    assert set(timings) == {
+        "daily_orders", "part_revenue", "cust_revenue", "doc_tokens",
+        "price_classes", "score_classes", "chunk_index", "ann_exact_panel",
+        "ann_lsh_result", "ann_ivf12_result", "ann_auto_result", "als_recs",
+        "doc_sketch", "doc_bigrams", "copurchase_edges", "bipartite_edges",
+        "order_value_classes", "order_value_pivot", "cn_edges", "rm_hits",
+    }
+    _components_cached(spark, sf)
+    train_centroids_sample(emb, 4, cache_key="clear-test")
+    assert _components_cached.cache and train_centroids_sample.cache
+    assert loaders.clear_substrate_caches() > 0
+    assert not _components_cached.cache and not train_centroids_sample.cache
+    assert loaders.clear_substrate_caches() == 0  # nothing was left
+
+    class FakeSession:
+        def stop(self):
+            pass
+
+    loaders.daily_orders(spark, sf)
+    _components_cached(spark, sf)
+    train_centroids_sample(emb, 4, cache_key="clear-test")
+    fake = FakeSession()
+    _hook_substrate_eviction(fake)
+    fake.stop()
+    assert loaders.clear_substrate_caches() == 0
+
+
+def test_cold_substrate_key_builds_once_across_threads(spark, monkeypatch):
+    """Threads cold-calling one substrate key wait on its per-key lock:
+    exactly one KMeans fit runs and every caller gets its codebook."""
+    import sys
+    import threading
+
+    from pyspark.ml.clustering import KMeans
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.similarity import (
+        train_centroids_sample,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        DEFAULT_SF_DIR,
+        load_table,
+    )
+
+    fits = []
+    real_fit = KMeans.fit
+
+    def counting_fit(self, *args, **kwargs):
+        fits.append(1)
+        return real_fit(self, *args, **kwargs)
+
+    monkeypatch.setattr(KMeans, "fit", counting_fit)
+    emb = load_table(spark, "embeddings", DEFAULT_SF_DIR)
+    n = 8
+    barrier = threading.Barrier(n)
+    out = [None] * n
+
+    def worker(i):
+        barrier.wait(timeout=60)
+        out[i] = train_centroids_sample(emb, 4, cache_key="race-test")
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+        train_centroids_sample.cache.clear()
+    assert not any(t.is_alive() for t in threads)
+    assert len(fits) == 1
+    assert all(o is out[0] for o in out)
+
+
+def test_dedup_clustering_rebuilds_when_the_corpus_file_changes(spark, tmp_path):
+    """The clustering substrate keys on the parquet's (mtime, size), so
+    a regenerated corpus never serves a stale clustering."""
+    import os
+    import shutil
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_analytics import (
+        _components_cached,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        DEFAULT_SF_DIR,
+    )
+
+    path = tmp_path / "documents.parquet"
+    shutil.copy(os.path.join(DEFAULT_SF_DIR, "documents.parquet"), path)
+    a = _components_cached(spark, str(tmp_path))
+    assert _components_cached(spark, str(tmp_path)) is a
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert _components_cached(spark, str(tmp_path)) is not a
 
 
 def test_release_local_checkpoint_frees_blocks_and_keeps_consumers(spark):
