@@ -183,20 +183,17 @@ def q_tpch_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per group (matches DuckDB's
     quantile_cont), from the shared per-group price tie-class substrate
-    (``grouped_ranked_tie_classes`` — the same checkpointed class table
+    (``operators.ranks.tie_classes`` — the same checkpointed class table
     q_iqr_outliers' quartiles read). The built-in grouped ``percentile``
     collects one whole GROUP's values into a single aggregation buffer
     (2 M values per buffer at the 100× tier) — the tie-class lookup
     bounds single-task state by one (group, floor-bucket)'s classes
     instead, the property that decides survival at 100 TB."""
-    from .queries_scale import (
-        grouped_quantiles_from_ranked,
-        price_classes_grouped,
-    )
+    from .operators.ranks import quantiles
+    from .queries_scale import price_classes_grouped
 
-    ranked = price_classes_grouped(spark, sf_dir)
     ps = [0.25, 0.50, 0.75, 0.95]
-    qq = grouped_quantiles_from_ranked(ranked, "l_returnflag", ps)
+    qq = quantiles(price_classes_grouped(spark, sf_dir), ps, by=("l_returnflag",))
     return (
         qq.groupBy("l_returnflag")
         .pivot("frac", ps)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.ranks import class_cum
 from .registry import query
 from .sources.loaders import load_table
 
@@ -902,8 +903,6 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is touched only by the per-value hash aggregate. Doubled
     rank sums (2·cum + cnt + 1) keep every intermediate an exact int64;
     floats appear only in the final one-row z projection."""
-    from pyspark.sql import Window
-
     s = (
         load_table(spark, "events", sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -925,27 +924,7 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cb"),
         F.count(F.lit(1)).cast("long").alias("cnt"),
     )
-    b = pv.withColumn("bkt", F.floor("value").cast("long"))
-    bc = b.groupBy("bkt").agg(F.sum("cnt").cast("long").alias("bn"))
-    w_off = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = bc.select(
-        "bkt",
-        F.coalesce(F.sum("bn").over(w_off), F.lit(0)).cast("long").alias("off"),
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    r = b.join(F.broadcast(boff), "bkt").select(
-        "ca",
-        "cb",
-        "cnt",
-        (
-            F.col("off") + F.coalesce(F.sum("cnt").over(w_in), F.lit(0))
-        ).alias("cum"),
-    )
-    agg = r.agg(
+    agg = class_cum(pv, "value", bucket_width=1.0).agg(
         F.sum(F.col("ca") * (2 * F.col("cum") + F.col("cnt") + 1))
         .cast("long")
         .alias("r1x2"),

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.ranks import class_cum
 from .registry import query
 from .sources.loaders import load_table, substrate
 
@@ -1102,7 +1103,8 @@ def _score_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(score, pos_cnt, neg_cnt, bkt) over orders' does-price-predict-
     returns label: score = o_totalprice, pos = the order has a returned
     line, counts int64-exact, bkt = floor(score/10000) (the two-phase
-    prefix-sum bucket both AUC siblings window on). Eagerly
+    prefix-sum bucket q_pr_auc windows on; q_roc_auc's class_cum uses
+    the same width). Eagerly
     checkpointed once per (session, sf_dir); |distinct scores| rows."""
     o = load_table(spark, "orders", sf_dir)
     li = load_table(spark, "lineitem", sf_dir)
@@ -1174,33 +1176,16 @@ def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     no single-partition sort ever sees fact rows even when every score
     is distinct."""
     # the checkpointed class table is the shared session substrate
-    # (identical build across the three AUC siblings); the two-phase
-    # prefix sum of negatives strictly below each class windows on its
-    # bkt column — bucket offsets (|buckets| rows) + within-bucket
-    b = _score_classes(spark, sf_dir)
-    bc = b.groupBy("bkt").agg(F.sum("neg_cnt").cast("long").alias("bn"))
-    w_off = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = bc.select(
-        "bkt",
-        F.coalesce(F.sum("bn").over(w_off), F.lit(0)).cast("long").alias("off"),
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = b.join(boff, "bkt").select(
-        "pos_cnt",
-        "neg_cnt",
-        (
-            F.col("off") + F.coalesce(F.sum("neg_cnt").over(w_in), F.lit(0))
-        ).cast("long").alias("cum_neg"),
+    # (identical build across the three AUC siblings); cum counts the
+    # negatives strictly below each class, on the substrate's bkt width
+    ranked = class_cum(
+        _score_classes(spark, sf_dir), "score", cnt="neg_cnt", bucket_width=10000.0
     )
     tot = ranked.agg(
         F.sum("pos_cnt").cast("long").alias("n_pos"),
         F.sum("neg_cnt").cast("long").alias("n_neg"),
         F.sum(
-            F.col("pos_cnt") * (F.col("cum_neg") + 0.5 * F.col("neg_cnt"))
+            F.col("pos_cnt") * (F.col("cum") + 0.5 * F.col("neg_cnt"))
         ).alias("u"),
     )
     return tot.select(

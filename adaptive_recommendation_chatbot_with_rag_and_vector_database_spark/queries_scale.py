@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.ranks import class_cum, quantiles, tie_classes
 from .registry import query
 from .sources.loaders import load_table, substrate
 
@@ -808,309 +809,6 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- V15: equi-depth histogram (optimizer statistics) ------------------------
 
 
-def exact_quantiles_grouped(
-    df: DataFrame,
-    col: str,
-    fracs: list[float],
-    bucket_width: float = 1000.0,
-) -> DataFrame:
-    """Distributed EXACT interpolated quantiles (quantile_cont /
-    percentile semantics) without a single aggregation buffer: Spark's
-    built-in exact ``percentile`` collects every value of the column
-    into ONE aggregate buffer — the same single-task order-statistic
-    wall the bucketed-rank idiom (q_decile_lift) exists to avoid. Thin
-    composition of ``ranked_tie_classes`` (the checkpointed class
-    table) and ``quantiles_from_ranked`` (the broadcast order-statistic
-    lookup) — split so consumers that need MORE than the quantiles
-    (q_equi_depth_histogram's per-bucket stats) reuse the same class
-    table instead of re-scanning the raw column."""
-    return quantiles_from_ranked(
-        ranked_tie_classes(df, col, bucket_width), fracs
-    )
-
-
-def ranked_tie_classes(
-    df: DataFrame,
-    col: str,
-    bucket_width: float = 1000.0,
-) -> DataFrame:
-    """The shared substrate of the exact-quantile family: collapse the
-    column to (v, cnt, cum) tie classes where ``cum`` is the count of
-    rows strictly below ``v`` — i.e. class ``v`` owns order statistics
-    [cum+1, cum+cnt]. Built distributed (hash aggregate to classes,
-    floor-bucket two-phase prefix sum; the only single-partition window
-    runs over the ~|range/width| bucket counts) and eagerly
-    ``localCheckpoint``-ed because every consumer family (n, quantile
-    lookups, histogram stats) would otherwise re-execute the scan+rank
-    lineage — measured 3x the wall. Checkpoint blocks are released by
-    the ContextCleaner once the plan is garbage-collected."""
-    # quantile_cont/percentile IGNORE NULLs; without this filter the
-    # NULL class floor-buckets to NULL (sorts first in the prefix-sum
-    # window, inflating every real class's cum) yet drops out of the
-    # non-null-safe bkt equi-join — shifting every order statistic
-    vc = df.where(F.col(col).isNotNull()).groupBy(F.col(col).alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    return classes_from_counts(vc, bucket_width)
-
-
-def classes_from_counts(
-    vc: DataFrame,
-    bucket_width: float = 1000.0,
-) -> DataFrame:
-    """(v, cnt) value-count rollup → checkpointed (v, cnt, cum) tie
-    classes (the ``ranked_tie_classes`` rank machinery, entered after
-    the fact aggregate). Split out so consumers holding an ALREADY
-    aggregated value-count table — e.g. the ungrouped price classes
-    derived from the grouped session substrate by an exact int64
-    Σcnt — rank it without touching the fact again."""
-    from pyspark.sql import Window
-
-    b = vc.withColumn("bkt", F.floor(F.col("v") / bucket_width).cast("long"))
-    bc = b.groupBy("bkt").agg(F.sum("cnt").cast("long").alias("bn"))
-    w_off = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = bc.select(
-        "bkt",
-        F.coalesce(F.sum("bn").over(w_off), F.lit(0)).cast("long").alias("off"),
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        b.join(F.broadcast(boff), "bkt")
-        .select(
-            "v",
-            "cnt",
-            (
-                F.col("off") + F.coalesce(F.sum("cnt").over(w_in), F.lit(0))
-            ).alias("cum"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def quantiles_from_ranked(ranked: DataFrame, fracs: list[float]) -> DataFrame:
-    """Exact interpolated quantiles (quantile_cont / percentile
-    semantics) from a ``ranked_tie_classes`` table: each fraction q
-    resolves to ``pos = 1 + (n-1)*q``, the two covering classes are
-    found by ONE 2*|fracs|-row broadcast theta-join against the class
-    table, and combined as ``v_lo + (pos - floor(pos))*(v_hi - v_lo)``.
-    Returns one row per fraction: (frac, quantile)."""
-    # n derives from the checkpointed classes (max covered index) — no
-    # separate pass over the raw column
-    n = ranked.agg(F.max(F.col("cum") + F.col("cnt")).alias("n"))
-    pos = F.lit(1.0) + (F.col("n") - 1) * F.col("frac")
-    targets = (
-        n.select(
-            F.explode(
-                F.array(*[F.lit(float(q)) for q in fracs])
-            ).alias("frac"),
-            "n",
-        )
-        .select("frac", pos.alias("pos"))
-        .select(
-            "frac",
-            "pos",
-            # both covering order statistics in one lookup frame
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("lo").alias("side"),
-                        F.floor("pos").cast("long").alias("idx"),
-                    ),
-                    F.struct(
-                        F.lit("hi").alias("side"),
-                        F.least(
-                            F.ceil("pos").cast("long"),
-                            F.floor("pos").cast("long") + 1,
-                        ).alias("idx"),
-                    ),
-                )
-            ).alias("t"),
-        )
-        .select("frac", "pos", F.col("t.side").alias("side"), F.col("t.idx").alias("idx"))
-    )
-    # each order-statistic index lives in the unique class with
-    # cum < idx <= cum + cnt; the 2·|fracs|-row side broadcasts and the
-    # checkpointed class table is scanned exactly once
-    hits = F.broadcast(targets).join(
-        ranked,
-        (F.col("idx") > F.col("cum"))
-        & (F.col("idx") <= F.col("cum") + F.col("cnt")),
-    )
-    wide = hits.groupBy("frac", "pos").agg(
-        F.max(F.when(F.col("side") == "lo", F.col("v"))).alias("v_lo"),
-        F.max(F.when(F.col("side") == "hi", F.col("v"))).alias("v_hi"),
-    )
-    return wide.select(
-        "frac",
-        (
-            F.col("v_lo")
-            + (F.col("pos") - F.floor("pos")) * (F.col("v_hi") - F.col("v_lo"))
-        ).alias("quantile"),
-    )
-
-
-def grouped_exact_quantiles(
-    df: DataFrame,
-    col: str,
-    grp: str,
-    fracs: list[float],
-    bucket_width: float = 1000.0,
-) -> DataFrame:
-    """PER-GROUP distributed exact interpolated quantiles — the
-    unbounded-group-safe form of ``exact_quantiles_grouped`` (and the
-    scale answer to the built-in grouped ``percentile``, whose buffer
-    collects one whole GROUP's values into a single task — measured as
-    the q_iqr_outliers wall at the 100x tier: 3 groups x 2 M values
-    per buffer). Thin composition of ``grouped_ranked_tie_classes``
-    (the checkpointed per-group class table) and
-    ``grouped_quantiles_from_ranked`` — split like the global pair so
-    consumers needing MORE than the quantiles (q_iqr_outliers' fence
-    counting) reuse the class table instead of re-scanning the fact.
-    Returns (grp, frac, quantile), quantile_cont semantics."""
-    return grouped_quantiles_from_ranked(
-        grouped_ranked_tie_classes(df, col, grp, bucket_width), grp, fracs
-    )
-
-
-def grouped_ranked_tie_classes(
-    df: DataFrame,
-    col: str,
-    grp: str,
-    bucket_width: float = 1000.0,
-    extra_aggs: tuple = (),
-) -> DataFrame:
-    """Per-group tie-class substrate → (grp, v, cnt, cum) where ``cum``
-    counts the group's rows strictly below ``v``. Same machinery as
-    ``ranked_tie_classes`` with one extra key everywhere: the
-    floor-bucket prefix-sum windows are partitioned by group (no window
-    ever exceeds one group's ~|range/width| bucket counts). Eagerly
-    localCheckpoint-ed for the same multi-consumer reuse reason.
-
-    ``extra_aggs``: additional aliased aggregate expressions evaluated
-    in the SAME (grp, v) class rollup and carried through to the
-    output (r11: lets the session price-class substrate also hold the
-    quantity weight q_weighted_median needs, one scan for all
-    consumers). Rank/cum arithmetic ignores them entirely."""
-    from pyspark.sql import Window
-
-    # NULL values are ignored (quantile_cont semantics) — see the
-    # matching filter in ranked_tie_classes for why leaving them in
-    # silently shifts every order statistic
-    vc = (
-        df.where(F.col(col).isNotNull())
-        .groupBy(F.col(grp), F.col(col).alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"), *extra_aggs)
-    )
-    extra_cols = [c for c in vc.columns if c not in (grp, "v", "cnt")]
-    b = vc.withColumn("bkt", F.floor(F.col("v") / bucket_width).cast("long"))
-    bc = b.groupBy(grp, "bkt").agg(F.sum("cnt").cast("long").alias("bn"))
-    w_off = (
-        Window.partitionBy(grp)
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    boff = bc.select(
-        grp,
-        "bkt",
-        F.coalesce(F.sum("bn").over(w_off), F.lit(0)).cast("long").alias("off"),
-    )
-    w_in = (
-        Window.partitionBy(grp, "bkt")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        b.join(boff, [grp, "bkt"])
-        .select(
-            grp,
-            "v",
-            "cnt",
-            *extra_cols,
-            (
-                F.col("off") + F.coalesce(F.sum("cnt").over(w_in), F.lit(0))
-            ).alias("cum"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def grouped_quantiles_from_ranked(
-    ranked: DataFrame, grp: str, fracs: list[float]
-) -> DataFrame:
-    """Per-group exact interpolated quantiles from a
-    ``grouped_ranked_tie_classes`` table → (grp, frac, quantile).
-    Targets explode to 2*|fracs| rows PER GROUP and meet the class
-    table in a group-keyed equi-join with a range residual — never a
-    global broadcast theta over all groups' classes."""
-    n = ranked.groupBy(grp).agg(
-        F.max(F.col("cum") + F.col("cnt")).alias("n")
-    )
-    pos = F.lit(1.0) + (F.col("n") - 1) * F.col("frac")
-    targets = (
-        n.select(
-            grp,
-            F.explode(
-                F.array(*[F.lit(float(q)) for q in fracs])
-            ).alias("frac"),
-            "n",
-        )
-        .select(grp, "frac", pos.alias("pos"))
-        .select(
-            grp,
-            "frac",
-            "pos",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("lo").alias("side"),
-                        F.floor("pos").cast("long").alias("idx"),
-                    ),
-                    F.struct(
-                        F.lit("hi").alias("side"),
-                        F.least(
-                            F.ceil("pos").cast("long"),
-                            F.floor("pos").cast("long") + 1,
-                        ).alias("idx"),
-                    ),
-                )
-            ).alias("t"),
-        )
-        .select(
-            grp,
-            "frac",
-            "pos",
-            F.col("t.side").alias("side"),
-            F.col("t.idx").alias("idx"),
-        )
-    )
-    # no broadcast hint: targets is 2*|fracs| rows PER GROUP, so for
-    # bounded group counts AQE broadcasts it anyway, while an unbounded
-    # group domain falls back to a grp-keyed shuffle join with the range
-    # condition as a residual — never a global theta product
-    hits = targets.join(
-        ranked.withColumnRenamed(grp, "_g"),
-        (F.col(grp) == F.col("_g"))
-        & (F.col("idx") > F.col("cum"))
-        & (F.col("idx") <= F.col("cum") + F.col("cnt")),
-    )
-    wide = hits.groupBy(grp, "frac", "pos").agg(
-        F.max(F.when(F.col("side") == "lo", F.col("v"))).alias("v_lo"),
-        F.max(F.when(F.col("side") == "hi", F.col("v"))).alias("v_hi"),
-    )
-    return wide.select(
-        grp,
-        "frac",
-        (
-            F.col("v_lo")
-            + (F.col("pos") - F.floor("pos")) * (F.col("v_hi") - F.col("v_lo"))
-        ).alias("quantile"),
-    )
-
-
 #: session-cached lineitem price tie-class substrates, keyed by
 #: (applicationId, sf_dir) — the daily_orders pattern applied to the
 #: exact-rank family (VERDICT r10 floor paydown). FOUR queries
@@ -1124,7 +822,7 @@ def grouped_quantiles_from_ranked(
 @substrate("price_classes_grouped", warm=())
 def price_classes_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_returnflag, v, cnt, w, cum) tie classes of l_extendedprice
-    per return flag — ``grouped_ranked_tie_classes`` on the fact with
+    per return flag — ``tie_classes`` by flag on the fact with
     the quantity weight ``w = Σ l_quantity`` carried in the same class
     rollup (r11: q_weighted_median reads it instead of re-scanning the
     fact; w values are integral-valued doubles summed exactly, and
@@ -1134,13 +832,12 @@ def price_classes_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir).select(
         "l_returnflag", "l_extendedprice", "l_quantity"
     )
-    g = grouped_ranked_tie_classes(
+    return tie_classes(
         li,
         "l_extendedprice",
-        "l_returnflag",
+        by=("l_returnflag",),
         extra_aggs=(F.sum("l_quantity").alias("w"),),
     )
-    return g
 
 
 @substrate("price_classes")
@@ -1148,13 +845,13 @@ def price_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(v, cnt, cum) ungrouped l_extendedprice tie classes, derived
     from the grouped session substrate (Σcnt over the ≤|classes| rows,
     then the same floor-bucket re-rank) — value-identical to
-    ``ranked_tie_classes`` on the raw column, one fact scan fewer."""
+    ``tie_classes`` on the raw column, one fact scan fewer."""
     vc = (
         price_classes_grouped(spark, sf_dir)
         .groupBy("v")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    return classes_from_counts(vc)
+    return class_cum(vc, "v").localCheckpoint(eager=True)
 
 
 @query(
@@ -1191,7 +888,7 @@ def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost-based optimizer keeps per column — 8 quantile-bounded buckets
     with row count, NDV, and value bounds each (Spark's own ANALYZE
     TABLE ... FOR COLUMNS builds exactly this shape). The 7 cut points
-    come from ``exact_quantiles_grouped`` — the DISTRIBUTED exact
+    come from ``operators.ranks.quantiles`` — the DISTRIBUTED exact
     quantile (tie-class ranks + bucketed prefix sums + a 7-row
     broadcast order-statistic lookup), not the built-in ``percentile``
     whose single aggregation buffer collects the whole column into one
@@ -1213,7 +910,7 @@ def q_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # more raw rows (that second scan + regroup was the query's
     # dominant cost at sf0.1).
     ranked = price_classes(spark, sf_dir)
-    q7 = quantiles_from_ranked(ranked, ps)
+    q7 = quantiles(ranked, ps)
     bounds = q7.groupBy().pivot("frac", ps).agg(
         F.round(F.first("quantile"), 4)
     )
@@ -1254,7 +951,7 @@ _QUANTILE_FRACS = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
 )
 def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed exact interpolated quantiles (V16), driver-verified
-    against DuckDB's ``quantile_cont``: the ``exact_quantiles_grouped``
+    against DuckDB's ``quantile_cont``: the ``operators.ranks``
     machinery (tie-class ranks + floor-bucket two-phase prefix sums +
     a |fracs|-row broadcast order-statistic lookup) as a first-class
     operator. Spark's built-in exact ``percentile`` funnels the whole
@@ -1264,7 +961,7 @@ def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pos = 1 + (n−1)·q, linear between covering order statistics) is
     identical on both engines, so parity is exact after 1e-4 rounding."""
     return (
-        quantiles_from_ranked(price_classes(spark, sf_dir), _QUANTILE_FRACS)
+        quantiles(price_classes(spark, sf_dir), _QUANTILE_FRACS)
         .select("frac", F.round("quantile", 4).alias("quantile"))
         .orderBy("frac")
     )
@@ -1315,7 +1012,7 @@ def q_quantile_sketch_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     the classes."""
     li = _t(spark, sf_dir, "lineitem")
     ranked = price_classes(spark, sf_dir)
-    exact = quantiles_from_ranked(ranked, _QSK_FRACS)
+    exact = quantiles(ranked, _QSK_FRACS)
     n = ranked.agg(
         F.max(F.col("cum") + F.col("cnt")).cast("double").alias("n")
     )

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .operators.ranks import class_cum, quantiles, tie_classes
 from .registry import query
 from .sources.loaders import load_table, substrate
 
@@ -58,8 +59,8 @@ def order_value_classes_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: session-cached per-VALUE pivot of the value-class substrate —
-#: (v, cnt, cf, co, cp, bkt): total count per distinct o_totalprice
-#: plus the per-status subcounts as columns and the rank-bucket key.
+#: (v, cnt, cf, co, cp): total count per distinct o_totalprice plus
+#: the per-status subcounts as columns.
 #: q_kruskal_wallis re-built and re-checkpointed exactly this table on
 #: EVERY call (the r11 "not yet optimized" list / VERDICT r11 #2 — the
 #: per-call eager checkpoint was the query's dominant cost, 1.3-1.9 s).
@@ -94,7 +95,7 @@ def order_value_pivot_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(sum(CASE WHEN o_orderstatus = 'P' THEN cnt ELSE 0 END)"
             " AS LONG) AS cp"
         ),
-    ).withColumn("bkt", F.expr("CAST(floor(v / 50000.0) AS LONG)"))
+    )
 
 
 # --- ST1: one-way ANOVA F-test ----------------------------------------------
@@ -202,7 +203,7 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     The textbook form ranks each column with a GLOBAL sort window (one
     task holds the whole column — the order-statistic wall). Here each
     column's average-with-ties rank comes from the same tie-class
-    machinery as the exact quantiles (queries_scale.ranked_tie_classes:
+    machinery as the exact quantiles (operators.ranks.tie_classes:
     hash-aggregate to (v, cnt, cum) classes, floor-bucket prefix sums):
     avg_rank(v) = cum + (cnt+1)/2, exact int64-derived arithmetic with
     no engine sort order anywhere. Rows join their two rank columns
@@ -211,12 +212,12 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson corr over the rank pairs. DuckDB's oracle uses the
     classic rank windows; average ranks agree exactly because
     rank() = cum + 1."""
-    from .queries_scale import price_classes, ranked_tie_classes
+    from .queries_scale import price_classes
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_quantity", "l_extendedprice"
     )
-    ra = ranked_tie_classes(li.select("l_quantity"), "l_quantity").select(
+    ra = tie_classes(li, "l_quantity").select(
         F.col("v").alias("l_quantity"),
         (F.col("cum") + (F.col("cnt") + 1) / 2.0).alias("ra"),
     )
@@ -420,7 +421,7 @@ def q_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines — a 4-decimal round would sit on a .00005 midpoint
     half the time and split engines by one ulp (observed at sf0.001).
     Scale note: the quartiles come from the per-group tie-class
-    machinery (``grouped_ranked_tie_classes``) — the built-in grouped
+    machinery (``operators.ranks``) — the built-in grouped
     ``percentile`` collects one whole GROUP's values into a single
     aggregation buffer (2 M values per buffer at the 100× tier); the
     largest single-task state here is one (group, floor-bucket)'s tie
@@ -431,17 +432,12 @@ def q_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table is scanned exactly once per run, the move that took
     q_equi_depth_histogram 3.2→1.9 s (r7) and this query 10.2→~4 s at
     the 100× tier."""
-    from .queries_scale import (
-        grouped_quantiles_from_ranked,
-        price_classes_grouped,
-    )
+    from .queries_scale import price_classes_grouped
 
     # the per-group class table is the shared price-class session
-    # substrate (same grouped_ranked_tie_classes call, built once)
+    # substrate (one tie_classes call per session)
     ranked = price_classes_grouped(spark, sf_dir)
-    qq = grouped_quantiles_from_ranked(
-        ranked, "l_returnflag", [0.25, 0.75]
-    )
+    qq = quantiles(ranked, [0.25, 0.75], by=("l_returnflag",))
     q = (
         qq.groupBy("l_returnflag")
         .pivot("frac", [0.25, 0.75])
@@ -1076,8 +1072,6 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-bucket prefix sum (w_plus = Σ rk·pos per class — exact, ranks
     are half-integers), so nothing ever joins back to the pair rows.
     One fact scan, one wide shuffle, class-sized state after."""
-    from pyspark.sql import Window
-
     li = _t(spark, sf_dir, "lineitem")
     y1 = int(
         li.agg(F.year(F.min("l_shipdate")).alias("y1")).collect()[0].y1
@@ -1101,10 +1095,10 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pa").isNotNull() & F.col("pb").isNotNull()
     ).select(F.round(F.col("pb") - F.col("pa"), 4).alias("d"))
     # signed rows collapse straight to |d| tie classes carrying their
-    # positive count — the ranked_tie_classes machinery with pos along.
-    # Eagerly checkpointed (class-sized): both the bucket-offset branch
-    # and the final prefix sum consume it, and without the checkpoint
-    # the offset branch re-runs the whole fact scan + pivot aggregate
+    # positive count — the class_cum rank with pos along. Eagerly
+    # checkpointed (class-sized): both the bucket-offset branch and the
+    # final prefix sum consume it, and without the checkpoint the
+    # offset branch re-runs the whole fact scan + pivot aggregate
     adc = (
         pairs.filter(F.col("d") != 0)
         .groupBy(F.abs("d").alias("ad"))
@@ -1114,26 +1108,7 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    b = adc.withColumn("bkt", F.floor(F.col("ad") / 1000.0).cast("long"))
-    bc = b.groupBy("bkt").agg(F.sum("cnt").cast("long").alias("bn"))
-    w_off = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = bc.select(
-        "bkt",
-        F.coalesce(F.sum("bn").over(w_off), F.lit(0)).cast("long").alias("off"),
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("ad")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cls = b.join(F.broadcast(boff), "bkt").select(
-        "cnt",
-        "pos",
-        (
-            F.col("off") + F.coalesce(F.sum("cnt").over(w_in), F.lit(0))
-        ).alias("cum"),
-    )
-    stat = cls.agg(
+    stat = class_cum(adc, "ad").agg(
         F.sum("cnt").cast("long").alias("n"),
         F.sum(
             (F.col("cum") + (F.col("cnt") + 1) / 2.0) * F.col("pos")
@@ -1276,7 +1251,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism was |groups| and ONE task sorted a priority's whole
     distinct-value grid; the driver measured it 0.82× vs the form it
     replaced): the grouped tie-class bucket idiom (ST11 /
-    classes_from_counts machinery, guide §2.2). The (group, value)
+    operators.ranks.class_cum, guide §2.2). The (group, value)
     class grid lazy-localCheckpoints once (shared by all three phases
     inside the same set of jobs — no re-aggregation, no eager barrier),
     and each cumulative attaches via the bucketed TWO-PHASE prefix sum:
@@ -1542,44 +1517,21 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doubled products stay < 2^63 through the 1000x tier). Floats
     appear only in the final one-row H projection, association written
     identically in the oracle. Tie correction 1 − Σ(t³−t)/(N³−N)."""
-    from pyspark.sql import Window
-
     # per-status subcounts pivot out of the session (status, v, cnt)
     # substrate via the SESSION-CACHED pivot (r12, VERDICT r11 #2: the
     # pivot was re-built and re-eager-checkpointed on every call — the
     # query's dominant cost; it is a static exact-int64 derivation of
     # the same-session substrate, so it now materializes once per
     # (session, sf_dir) and the per-call plan reads ExistingRDD)
-    b = _order_value_pivot(spark, sf_dir)
-    bc = b.groupBy("bkt").agg(F.sum("cnt").cast("long").alias("bn"))
-    w_off = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    boff = bc.select(
-        "bkt",
-        F.coalesce(F.sum("bn").over(w_off), F.lit(0)).cast("long").alias("off"),
-    )
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    r = b.join(F.broadcast(boff), "bkt").select(
-        "cnt",
-        "cf",
-        "co",
-        "cp",
-        (
-            2 * (F.col("off") + F.coalesce(F.sum("cnt").over(w_in), F.lit(0)))
-            + F.col("cnt")
-            + 1
-        ).alias("r2"),
-    )
+    r = class_cum(_order_value_pivot(spark, sf_dir), "v", bucket_width=50000.0)
+    r2 = 2 * F.col("cum") + F.col("cnt") + 1
     agg = r.agg(
         F.sum("cf").cast("long").alias("nf"),
         F.sum("co").cast("long").alias("no"),
         F.sum("cp").cast("long").alias("np"),
-        F.sum(F.col("cf") * F.col("r2")).cast("long").alias("sf"),
-        F.sum(F.col("co") * F.col("r2")).cast("long").alias("so"),
-        F.sum(F.col("cp") * F.col("r2")).cast("long").alias("sp"),
+        F.sum(F.col("cf") * r2).cast("long").alias("sf"),
+        F.sum(F.col("co") * r2).cast("long").alias("so"),
+        F.sum(F.col("cp") * r2).cast("long").alias("sp"),
         F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
         .cast("long")
         .alias("tie3"),

@@ -778,7 +778,7 @@ def q_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines.
 
     Scale shape: the global per-doc rank uses the bucketed two-phase
-    prefix sum (the q_decile_lift / classes_from_counts idiom) — docs
+    prefix sum (the q_decile_lift / operators.ranks.class_cum idiom) — docs
     hash-bucket by n_tok div 64, the only single-partition window runs
     over the ~|range/64| bucket counts, and the within-bucket
     row_number is partitioned by bucket. No global sort, no whole-corpus

@@ -156,7 +156,7 @@ def test_skyline_matches_bruteforce_on_random_points(spark):
     assert got == want
 
 
-def test_exact_quantiles_grouped_matches_builtin_percentile(spark):
+def test_quantiles_match_builtin_percentile(spark):
     """The distributed order-statistic quantile must agree with Spark's
     single-buffer exact percentile (same interpolation definition) on
     adversarial data: heavy ties, negatives straddling bucket
@@ -166,8 +166,9 @@ def test_exact_quantiles_grouped_matches_builtin_percentile(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_scale import (
-        exact_quantiles_grouped,
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.ranks import (
+        quantiles,
+        tie_classes,
     )
 
     rng = random.Random(5)
@@ -179,7 +180,7 @@ def test_exact_quantiles_grouped_matches_builtin_percentile(spark):
     fracs = [0.01, 0.125, 0.5, 0.875, 0.99]
     got = {
         r.frac: r.quantile
-        for r in exact_quantiles_grouped(df, "x", fracs, bucket_width=7.0).collect()
+        for r in quantiles(tie_classes(df, "x", bucket_width=7.0), fracs).collect()
     }
     want = df.agg(
         F.percentile("x", F.array(*[F.lit(p) for p in fracs])).alias("p")
@@ -216,14 +217,15 @@ def test_ivf_pruned_probe_cells_is_single_probe_only(spark, tmp_path):
     assert all(r.score is not None for r in got)
 
 
-def test_grouped_exact_quantiles_matches_numpy_per_group(spark):
+def test_grouped_quantiles_match_numpy_per_group(spark):
     """quantile_cont semantics per group, from the grouped tie-class
     machinery — cross-checked against numpy's linear interpolation on
     each group's sorted values."""
     import numpy as np
     from collections import defaultdict
-    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_scale import (
-        grouped_exact_quantiles,
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.ranks import (
+        quantiles,
+        tie_classes,
     )
 
     li = load_table(spark, "lineitem", SF)
@@ -233,11 +235,10 @@ def test_grouped_exact_quantiles_matches_numpy_per_group(spark):
     fracs = [0.1, 0.25, 0.5, 0.75, 0.9]
     got = {
         (r.l_returnflag, r.frac): r.quantile
-        for r in grouped_exact_quantiles(
-            li.select("l_returnflag", "l_extendedprice"),
-            "l_extendedprice",
-            "l_returnflag",
+        for r in quantiles(
+            tie_classes(li, "l_extendedprice", by=("l_returnflag",)),
             fracs,
+            by=("l_returnflag",),
         ).collect()
     }
     assert len(got) == len(by_flag) * len(fracs)
@@ -250,12 +251,12 @@ def test_quantile_machinery_ignores_nulls(spark):
     percentile semantics). Before the r7-ADVICE fix the NULL class
     inflated every real class's cum via the prefix-sum window but
     dropped out of the bkt equi-join, shifting all order statistics
-    (ADVICE r7, queries_scale.py ranked_tie_classes)."""
+    (ADVICE r7, operators/ranks.py tie_classes)."""
     import numpy as np
     import pytest
-    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_scale import (
-        exact_quantiles_grouped,
-        grouped_exact_quantiles,
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.ranks import (
+        quantiles,
+        tie_classes,
     )
 
     vals = [float(v) for v in range(1, 42)]
@@ -266,7 +267,7 @@ def test_quantile_machinery_ignores_nulls(spark):
 
     got = {
         r.frac: r.quantile
-        for r in exact_quantiles_grouped(df, "x", fracs, bucket_width=7.0).collect()
+        for r in quantiles(tie_classes(df, "x", bucket_width=7.0), fracs).collect()
     }
     for q in fracs:
         assert got[q] == pytest.approx(float(np.quantile(vals, q)), abs=1e-9), q
@@ -274,9 +275,62 @@ def test_quantile_machinery_ignores_nulls(spark):
     by_g = {"a": [v for v in vals if v % 2], "b": [v for v in vals if not v % 2]}
     gq = {
         (r.g, r.frac): r.quantile
-        for r in grouped_exact_quantiles(df, "x", "g", fracs, bucket_width=7.0).collect()
+        for r in quantiles(
+            tie_classes(df, "x", by=("g",), bucket_width=7.0), fracs, by=("g",)
+        ).collect()
     }
     assert len(gq) == len(by_g) * len(fracs)  # no NULL group rows leak out
     for g, gvals in by_g.items():
         for q in fracs:
             assert gq[(g, q)] == pytest.approx(float(np.quantile(gvals, q)), abs=1e-9), (g, q)
+
+
+def test_class_cum_matches_python_prefix_count(spark):
+    """``cum`` is the sum of ``cnt`` over the group's classes with a
+    smaller value, whatever the bucket layout: heavy ties, negative
+    values crossing bucket edges, and a width that leaves most buckets
+    empty. Columns other than the rank pass through unchanged."""
+    import random
+    from collections import defaultdict
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.ranks import (
+        class_cum,
+    )
+
+    rng = random.Random(11)
+    raw = [
+        (
+            rng.choice("ab"),
+            # heavy ties around zero, then a sparse spread over ±5000
+            float(rng.randint(-4, 4))
+            if rng.random() < 0.5
+            else round(rng.uniform(-5000.0, 5000.0), 1),
+            rng.randint(1, 5),
+            rng.randint(-9, 9),
+        )
+        for _ in range(600)
+    ]
+    for by in ((), ("g",)):
+        # one class row per (g, v); the global form sees one group "*"
+        agg = defaultdict(lambda: [0, 0])
+        for g, v, c, e in raw:
+            a = agg[(g if by else "*", v)]
+            a[0] += c
+            a[1] += e
+        rows = [(g, v, c, e) for (g, v), (c, e) in agg.items()]
+        vc = spark.createDataFrame(
+            rows, "g string, v double, cnt long, extra long"
+        ).repartition(5)
+        want = {
+            (g, v): sum(c2 for g2, v2, c2, _ in rows if g2 == g and v2 < v)
+            for g, v, _, _ in rows
+        }
+        extra = {(g, v): e for g, v, _, e in rows}
+        for width in (7.0, 1000.0, 1e6):
+            out = class_cum(vc, "v", by=by, bucket_width=width)
+            assert out.columns == ["g", "v", "cnt", "extra", "cum"]
+            got = out.collect()
+            assert len(got) == len(rows)
+            for r in got:
+                assert r.cum == want[(r.g, r.v)], (by, width, r)
+                assert r.extra == extra[(r.g, r.v)], (by, width, r)
