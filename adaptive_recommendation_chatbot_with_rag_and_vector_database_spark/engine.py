@@ -13,14 +13,21 @@ verbs on Spark:
 - ``retrieve`` / ``ask`` — embed question → top-k cosine
   (TakeOrderedAndProject) → order-preserving context stuffing →
   pluggable answerer → refusal/first-line post-processing
-  (AI.py:176-185). The query *rewrite hook* (AI.py:137-139) is
-  pluggable and defaults to pass-through, which is also the reference's
-  effective behavior (its history is never written — SURVEY §3.2).
+  (AI.py:176-185). Below the ANN threshold an ``ask`` is ONE Spark
+  job, the top-k scan: the answer is cleaned in driver Python
+  (``postprocess_answer``), and the index schema is read once per
+  instance so no retrieval re-runs parquet schema inference (the file
+  listing stays fresh per call). The query *rewrite hook*
+  (AI.py:137-139) is pluggable and defaults to pass-through, which is
+  also the reference's effective behavior (its history is never
+  written — SURVEY §3.2).
 - ``history`` / ``clear_session`` — append-only per-session message
   log with get-or-create and clear semantics (AI.py:155-161,29-30).
   The log lives driver-side like the reference's in-process ``store``
-  dict; the scale path for massive event logs is the streaming surface
-  (streaming/session_state.py), not this convenience store.
+  dict, behind one lock so concurrent asks on a session keep their
+  user/assistant pairs adjacent; the scale path for massive event logs
+  is the streaming surface (streaming/session_state.py), not this
+  convenience store.
 
 The LLM call itself stays outside the deterministic engine (SURVEY
 §3.2 non-goal): ``answerer`` is any ``(question, context) -> str``
@@ -30,18 +37,22 @@ whole pipeline is deterministic and testable.
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .functions.chunker import DEFAULT_CHUNK_SIZE
 from .functions.embedder import EMBED_DIM, embed_text
 from .operators.retrieval import (
     DEFAULT_K,
     REFUSAL_PREFIX,
-    postprocess_answers,
+    postprocess_answer,
+    # unused here; perfbench's traced run wraps this module attribute
+    postprocess_answers,  # noqa: F401
     topk_cosine,
     write_index_incremental,
 )
@@ -133,7 +144,15 @@ class RagEngine:
     # recall high while scanning <1% of a 2M-row index's partitions
     ann_nprobe: int = 8
     _sessions: dict[str, list[dict]] = field(default_factory=dict)
+    # guards _sessions: get-or-create plus the two-message append of one
+    # ask, and every read of a log
+    _sessions_lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False, compare=False
+    )
     _index_rows: int | None = field(default=None, repr=False)
+    # the index schema from this instance's first read; later reads pass
+    # it so no retrieval re-runs parquet schema inference (a Spark job)
+    _index_schema: StructType | None = field(default=None, repr=False)
     # True once THIS instance has verified (or written) an IVF layout
     # matching the current corpus — the per-question short-circuit; an
     # in-session corpus change resets it
@@ -153,6 +172,7 @@ class RagEngine:
         AI.py:89-96) — deferred to the first retrieval after a change,
         so a sub-threshold build never pays even the routing count."""
         self._index_rows = None  # size changed: re-count lazily
+        self._index_schema = None  # and re-read the schema once
         n_new = write_index_incremental(
             docs, self.index_path, chunk_size=self.chunk_size, dim=self.dim
         )
@@ -425,7 +445,16 @@ class RagEngine:
         return self.index_documents(docs)
 
     def index(self) -> DataFrame:
-        return self.spark.read.parquet(self.index_path)
+        """The index as written, with a fresh file listing per call (so
+        rows another writer appended are seen). Only the schema is
+        cached: caching the DataFrame would freeze the listing. The
+        schema is read from the data, not declared, because ``doc_id``
+        takes the type of the caller's documents."""
+        if self._index_schema is None:
+            df = self.spark.read.parquet(self.index_path)
+            self._index_schema = df.schema
+            return df
+        return self.spark.read.schema(self._index_schema).parquet(self.index_path)
 
     # -- query path (J1, O1, A1, P1, P2) ------------------------------------
 
@@ -694,22 +723,16 @@ class RagEngine:
         """Full reference query path; returns the reference's result
         shape {input, context, answer} (AI.py:173-185) plus the
         retrieved rows."""
-        history = self._sessions.get(session_id, []) if session_id else []
+        history = self.history(session_id) if session_id else []
         effective = self.rewrite(question, history)
         retrieved = self.retrieve(effective).collect()  # k rows, k≈4
         context = "\n\n".join(r.text for r in retrieved)
-        raw = self.answerer(effective, context)
-        answer = (
-            postprocess_answers(
-                self.spark.createDataFrame([(raw,)], "answer string")
-            )
-            .collect()[0]
-            .answer
-        )
+        answer = postprocess_answer(self.answerer(effective, context))
         if session_id is not None:
-            log = self._sessions.setdefault(session_id, [])  # get-or-create
-            log.append({"role": "user", "content": question})
-            log.append({"role": "assistant", "content": answer})
+            with self._sessions_lock:
+                log = self._sessions.setdefault(session_id, [])  # get-or-create
+                log.append({"role": "user", "content": question})
+                log.append({"role": "assistant", "content": answer})
         return {
             "input": question,
             "context": context,
@@ -728,19 +751,20 @@ class RagEngine:
         as the conversation does. An empty/unknown session degrades to
         the empty-profile embedding (deterministic, still k rows) —
         the cold-start behavior a recommender needs defined."""
-        history = self._sessions.get(session_id, [])
+        history = self.history(session_id)
         profile = " ".join(m["content"] for m in history if m["role"] == "user")
         return self.retrieve(profile, k)
 
     # -- session lifecycle (T1 batch view; AI.py:155-161,232-235) -----------
 
     def history(self, session_id: str) -> list[dict]:
-        return list(self._sessions.get(session_id, []))
+        with self._sessions_lock:
+            return list(self._sessions.get(session_id, []))
 
     def history_df(self, session_id: str) -> DataFrame:
         rows = [
             (session_id, i, m["role"], m["content"])
-            for i, m in enumerate(self._sessions.get(session_id, []))
+            for i, m in enumerate(self.history(session_id))
         ]
         return self.spark.createDataFrame(
             rows, "session_id string, turn int, role string, content string"
@@ -749,4 +773,5 @@ class RagEngine:
         )
 
     def clear_session(self, session_id: str) -> None:
-        self._sessions.pop(session_id, None)
+        with self._sessions_lock:
+            self._sessions.pop(session_id, None)

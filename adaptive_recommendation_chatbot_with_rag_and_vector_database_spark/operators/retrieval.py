@@ -367,9 +367,21 @@ def postprocess_answers(
 ) -> DataFrame:
     """Refusal predicate + first-line projection (P1+P2; reference
     /root/reference/AI.py:176-185): an answer starting with the refusal
-    prefix becomes the canned message; otherwise keep its first line."""
+    prefix becomes the canned message; otherwise keep its first line.
+    The Column form of ``postprocess_answer``, for answer columns."""
     col = F.col(answer_col)
     cleaned = F.when(
         col.startswith(refusal_prefix), F.lit(refusal_message)
     ).otherwise(F.split(col, "\n").getItem(0))
     return answers.withColumn(answer_col, cleaned)
+
+
+def postprocess_answer(answer: str | None) -> str | None:
+    """The same rule as ``postprocess_answers`` for ONE answer string,
+    in driver Python — a single answer needs no Spark job. ``None``
+    stays ``None``; tests/test_flagship.py checks the two forms agree."""
+    if answer is None:
+        return None
+    if answer.startswith(REFUSAL_PREFIX):
+        return REFUSAL_MESSAGE
+    return answer.split("\n", 1)[0]

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from .registry import query
 from .sources.loaders import load_table
-from .operators.retrieval import REFUSAL_MESSAGE, REFUSAL_PREFIX
+from .operators.retrieval import REFUSAL_MESSAGE, REFUSAL_PREFIX, postprocess_answers
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -103,10 +103,7 @@ def q_relevance_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("answer"),
     )
-    cleaned = F.when(
-        F.col("answer").startswith(REFUSAL_PREFIX), F.lit(REFUSAL_MESSAGE)
-    ).otherwise(F.split_part(F.col("answer"), F.lit("\n"), F.lit(1)))
-    return answers.select("doc_id", cleaned.alias("answer"))
+    return postprocess_answers(answers)
 
 
 @query(

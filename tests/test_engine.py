@@ -505,3 +505,96 @@ def test_bounded_corpus_growth_appends_into_ivf_layout(
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     fresh.retrieve("delayed clerk errors").collect()
     assert fresh._ann_built
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-engine-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ask_and_recommend_run_one_job_each(engine):
+    """Below the ANN threshold an ask is the top-k scan and nothing
+    else: the answer is cleaned in driver Python and the index schema
+    is not re-inferred per retrieval."""
+    engine.ask("warm-up: reads the index schema once", session_id="jobs")
+    assert _count_jobs(engine.spark, lambda: engine.ask("order priorities?")) == 1
+    assert (
+        _count_jobs(engine.spark, lambda: engine.ask("orchard?", session_id="jobs"))
+        == 1
+    )
+    assert _count_jobs(engine.spark, lambda: engine.recommend("jobs").collect()) == 1
+
+
+def test_index_sees_rows_another_engine_appended(engine, spark):
+    """The schema cache must not freeze the file listing: a second
+    engine appending to the same index path is visible to the first
+    engine's next ask."""
+    engine.ask("warm-up: caches the index schema")
+    assert engine._index_schema is not None
+    other = RagEngine(spark, index_path=engine.index_path)
+    text = "Zebras graze on savanna grasslands near the watering hole."
+    docs = spark.createDataFrame([(99, text)], "doc_id long, text string")
+    assert other.index_documents(docs) > 0
+    out = engine.ask(text)
+    assert [r.doc_id for r in out["retrieved"]][0] == 99
+    assert out["answer"] == text
+
+
+def test_index_documents_resets_cached_schema(engine, tmp_path):
+    engine.ask("warm-up: caches the index schema")
+    assert engine._index_schema is not None
+    (tmp_path / "files" / "tea.txt").write_text("Green tea leaves are steamed.")
+    assert engine.index_files(str(tmp_path / "files"), glob="*.txt") > 0
+    assert engine._index_schema is None
+
+
+def test_concurrent_asks_keep_session_pairs_adjacent(engine):
+    """Concurrent asks on one session must not interleave their
+    user/assistant appends. The slow list widens the window between
+    the two appends of one ask, and its first append waits (at most
+    2 s) for a second writer to reach the list, so an unguarded log
+    interleaves for certain while a locked one just pays the wait."""
+    import threading
+    import time
+
+    claimed, second_writer = threading.Lock(), threading.Event()
+
+    class SlowList(list):
+        def append(self, item):
+            if claimed.acquire(blocking=False):
+                second_writer.wait(timeout=2)
+            else:
+                second_writer.set()
+            time.sleep(0.001)
+            super().append(item)
+
+        def extend(self, items):
+            time.sleep(0.001)
+            super().extend(items)
+
+    sid = "threads"
+    engine._sessions[sid] = SlowList()
+
+    def worker(t):
+        for i in range(3):
+            engine.ask(f"question {t}-{i} about freight", session_id=sid)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    log = engine.history(sid)
+    assert len(log) == 48
+    assert [m["role"] for m in log] == ["user", "assistant"] * 24

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.functions.chunker import (
@@ -7,7 +9,9 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.function
     split_text_recursive,
 )
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
+    REFUSAL_PREFIX,
     build_chunk_index,
+    postprocess_answer,
     postprocess_answers,
 )
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.plans.flagship import (
@@ -79,3 +83,26 @@ def test_postprocess_answers(spark):
         "First line.",
         "Single line answer",
     ]
+
+
+_TEXT = st.text(st.characters(blacklist_categories=("Cs",)), max_size=40)
+_ANSWERS = st.one_of(
+    st.none(),
+    st.just(""),
+    _TEXT,
+    _TEXT.map(lambda t: REFUSAL_PREFIX + t),
+    st.lists(_TEXT, min_size=1, max_size=4).map("\n".join),
+    st.lists(_TEXT, min_size=1, max_size=4).map("\r\n".join),
+    # a refusal prefix that is NOT at the start stays an ordinary answer
+    _TEXT.map(lambda t: t + "\n" + REFUSAL_PREFIX),
+)
+
+
+@given(st.lists(_ANSWERS, min_size=1, max_size=12))
+@settings(max_examples=25, deadline=None)
+def test_postprocess_answer_agrees_with_column_form(spark, answers):
+    df = spark.createDataFrame(
+        [(i, a) for i, a in enumerate(answers)], "i int, answer string"
+    )
+    got = [r.answer for r in postprocess_answers(df).orderBy("i").collect()]
+    assert [postprocess_answer(a) for a in answers] == got
