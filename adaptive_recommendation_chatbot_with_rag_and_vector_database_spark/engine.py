@@ -16,8 +16,9 @@ verbs on Spark:
   (AI.py:176-185). Below the ANN threshold an ``ask`` is ONE Spark
   job, the top-k scan: the answer is cleaned in driver Python
   (``postprocess_answer``), and the index schema is read once per
-  instance so no retrieval re-runs parquet schema inference (the file
-  listing stays fresh per call). The query *rewrite hook*
+  instance, and kept across appends that do not change it, so no
+  retrieval re-runs parquet schema inference (the file listing stays
+  fresh per call). The query *rewrite hook*
   (AI.py:137-139) is pluggable and defaults to pass-through, which is
   also the reference's effective behavior (its history is never
   written — SURVEY §3.2).
@@ -50,6 +51,7 @@ from .functions.embedder import EMBED_DIM, embed_text
 from .operators.retrieval import (
     DEFAULT_K,
     REFUSAL_PREFIX,
+    _path_exists,
     postprocess_answer,
     # unused here; perfbench's traced run wraps this module attribute
     postprocess_answers,  # noqa: F401
@@ -172,7 +174,7 @@ class RagEngine:
         AI.py:89-96) — deferred to the first retrieval after a change,
         so a sub-threshold build never pays even the routing count."""
         self._index_rows = None  # size changed: re-count lazily
-        self._index_schema = None  # and re-read the schema once
+        created = not _path_exists(self.spark, self.index_path)
         n_new = write_index_incremental(
             docs, self.index_path, chunk_size=self.chunk_size, dim=self.dim
         )
@@ -185,6 +187,17 @@ class RagEngine:
             self._ann_built = False
             self._lex_built = False
             self._codebook = None
+            # re-read the schema once only if this write created the
+            # index or changed a column type: doc_id is the one index
+            # column whose type the caller picks (simpleString ignores
+            # nullability)
+            cached = self._index_schema
+            if cached is not None and (
+                created
+                or cached["doc_id"].dataType.simpleString()
+                != docs.schema["doc_id"].dataType.simpleString()
+            ):
+                self._index_schema = None
         return n_new
 
     @staticmethod

@@ -20,8 +20,9 @@ Invariants (property-tested in tests/test_chunker.py):
 - deterministic: pure function of (text, chunk_size).
 
 The Spark surface is ``chunk_documents`` — an Arrow-vectorized pandas
-UDF returning ``ARRAY<STRING>`` followed by ``posexplode`` (one text row
-in, n ordered chunk rows out; SURVEY §2.10 D2). The Python loop runs
+UDF returning ``ARRAY<STRING>`` followed by ``posexplode_outer`` and a
+null filter (one text row in, n ordered chunk rows out, none for a
+document with no chunks; SURVEY §2.10 D2). The Python loop runs
 only inside the UDF batch; everything around it stays in Catalyst.
 """
 
@@ -147,8 +148,10 @@ def chunk_documents(
     chunk = _chunker_udf(chunk_size)
     return (
         docs.select(F.col(id_col), chunk(F.col(text_col)).alias("chunks"))
+        # _outer: no inferred size(chunks) > 0 filter re-runs the UDF below an exchange
         .select(
             F.col(id_col),
-            F.posexplode("chunks").alias("chunk_id", "text"),
+            F.posexplode_outer("chunks").alias("chunk_id", "text"),
         )
+        .filter(F.col("text").isNotNull())
     )

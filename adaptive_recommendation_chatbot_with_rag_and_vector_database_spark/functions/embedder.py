@@ -19,7 +19,9 @@ table — FIXTURES.md notes the engine must not assume the reference's
 1536; pass ``dim=1536`` for reference-shaped vectors).
 
 The Spark surface is an Arrow-vectorized pandas UDF (SURVEY §2.10 D1);
-numpy does the accumulation per batch.
+numpy does the accumulation per batch. ``embed_or_reuse_udf`` is its
+memoized form for index appends: it passes a stored vector through and
+embeds only the rows that have none.
 """
 
 from __future__ import annotations
@@ -89,3 +91,23 @@ def embedding_udf(dim: int = EMBED_DIM):
         )
 
     return embed
+
+
+@lru_cache(maxsize=8)
+def embed_or_reuse_udf(dim: int = EMBED_DIM):
+    """Arrow-vectorized (STRING, ARRAY<FLOAT>) → ARRAY<FLOAT>: the stored
+    vector unchanged when one is given, ``embed_text`` only when it is
+    null — an index append's reuse and embedding in one Python stage."""
+
+    @F.pandas_udf(T.ArrayType(T.FloatType(), containsNull=False))
+    def embed_or_reuse(texts: pd.Series, known: pd.Series) -> pd.Series:
+        cache: dict = {}
+        return pd.Series(
+            [
+                k if k is not None else embed_text(t if isinstance(t, str) else "", dim, cache)
+                for t, k in zip(texts, known)
+            ],
+            dtype=object,
+        )
+
+    return embed_or_reuse

@@ -8,10 +8,15 @@ the engine's deterministic surface) → refusal predicate + first-line cut
 
 Spark shapes, chosen for the 100 TB posture:
 
-- ``build_chunk_index``: chunker UDF + posexplode + embedding UDF, plus a
+- ``build_chunk_index``: chunker UDF + explode + embedding UDF, plus a
   ``sha2`` content hash per chunk — the storage-backed equivalent of the
-  reference's LRU memoization (AI.py:89-96): an idempotent writer can
-  anti-join on ``content_hash`` and skip re-embedding identical content.
+  reference's LRU memoization (AI.py:89-96).
+- ``write_index_incremental``: the idempotent append. One branch chunks
+  each document once, anti-joins the index's ``(doc_id, content_hash)``
+  keys, left-joins the stored embedding per ``content_hash``, and one
+  Python stage passes a stored vector through or embeds the text — so
+  identical content is never re-embedded, and an append is two Python
+  stages over two index scans.
 - ``topk_cosine``: the query vector rides along as a broadcast-sized
   literal; scoring is JVM-side (functions.vector) and the top-k is
   ``orderBy(desc).limit(k)``, which Catalyst executes as
@@ -31,7 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.chunker import DEFAULT_CHUNK_SIZE, chunk_documents
-from ..functions.embedder import EMBED_DIM, embedding_udf
+from ..functions.embedder import EMBED_DIM, embed_or_reuse_udf, embedding_udf
 from ..functions.vector import cosine_sim, cosine_sim_to_const  # noqa: F401
 from .similarity import cosine_sim_arrow
 
@@ -86,6 +91,43 @@ def _path_exists(spark, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def _append_rows(
+    docs: DataFrame,
+    path: str,
+    chunk_size: int = DEFAULT_CHUNK_SIZE,
+    dim: int = EMBED_DIM,
+) -> DataFrame:
+    """The rows ``write_index_incremental`` appends, as one branch:
+    ``chunks`` anti-joined with the index's ``(doc_id, content_hash)``
+    keys, left-joined to its ``content_hash → embedding`` map as
+    ``known``, then one Python stage that passes ``known`` through and
+    embeds only where it is null."""
+    from ..sources.loaders import scatter
+
+    spark = docs.sparkSession
+    chunks = chunk_documents(scatter(docs), chunk_size=chunk_size).withColumn(
+        "content_hash", F.sha2(F.col("text"), 256)
+    )
+    if _path_exists(spark, path):
+        existing = spark.read.parquet(path)
+        seen_keys = existing.select("doc_id", "content_hash").distinct()
+        known = existing.select(
+            "content_hash", F.col("embedding").alias("known")
+        ).dropDuplicates(["content_hash"])
+        chunks = chunks.join(seen_keys, ["doc_id", "content_hash"], "left_anti").join(
+            known, "content_hash", "left"
+        )
+    else:
+        chunks = chunks.withColumn("known", F.lit(None).cast("array<float>"))
+    return chunks.select(
+        "doc_id",
+        "chunk_id",
+        "text",
+        embed_or_reuse_udf(dim)(F.col("text"), F.col("known")).alias("embedding"),
+        "content_hash",
+    )
+
+
 def write_index_incremental(
     docs: DataFrame,
     path: str,
@@ -107,48 +149,17 @@ def write_index_incremental(
       embedding instead of re-running the embedder — exactly the
       reference's LRU semantics, storage-backed.
 
-    At scale this shape works because embedding is the expensive stage
-    (a model call per chunk) and both joins are hash-keyed shuffles over
-    column-pruned parquet reads. Appends new rows; returns how many
-    chunk rows were newly appended."""
-    from ..sources.loaders import scatter
-
-    spark = docs.sparkSession
-    chunks = chunk_documents(scatter(docs), chunk_size=chunk_size).withColumn(
-        "content_hash", F.sha2(F.col("text"), 256)
-    )
-    embed = embedding_udf(dim)
-    if _path_exists(spark, path):
-        existing = spark.read.parquet(path)
-        seen_keys = existing.select("doc_id", "content_hash").distinct()
-        chunks = chunks.join(seen_keys, ["doc_id", "content_hash"], "left_anti")
-        known = existing.select("content_hash", "embedding").dropDuplicates(
-            ["content_hash"]
-        )
-        reused = chunks.join(known, "content_hash", "inner").select(
-            "doc_id", "chunk_id", "text", "embedding", "content_hash"
-        )
-        fresh = chunks.join(
-            known.select("content_hash"), "content_hash", "left_anti"
-        ).select(
-            "doc_id",
-            "chunk_id",
-            "text",
-            embed(F.col("text")).alias("embedding"),
-            "content_hash",
-        )
-        new_rows = fresh.unionByName(reused)
-    else:
-        new_rows = chunks.select(
-            "doc_id",
-            "chunk_id",
-            "text",
-            embed(F.col("text")).alias("embedding"),
-            "content_hash",
-        )
+    The plan (``_append_rows``) is one branch: each document is chunked
+    once, and reuse and embedding share one Python stage, so an append
+    runs two Python stages (chunker, embedder) and scans the index twice
+    (keys, stored embeddings). At small appends the cost is Python
+    tasks, not rows; at scale embedding dominates (a model call per
+    chunk) and both joins are hash-keyed over column-pruned parquet
+    reads. Appends new rows; returns how many chunk rows were newly
+    appended."""
     # localCheckpoint would also work; count-then-append keeps it simple
     # and the count is the caller's idempotency signal.
-    new_rows = new_rows.persist()
+    new_rows = _append_rows(docs, path, chunk_size, dim).persist()
     try:
         n = new_rows.count()
         if n:

@@ -551,12 +551,38 @@ def test_index_sees_rows_another_engine_appended(engine, spark):
     assert out["answer"] == text
 
 
-def test_index_documents_resets_cached_schema(engine, tmp_path):
+def test_index_documents_resets_cached_schema(engine, spark, tmp_path):
+    """The cached schema survives an append of the same column types,
+    and is dropped when an append changes doc_id's type or creates the
+    index afresh."""
+    import shutil
+
     engine.ask("warm-up: caches the index schema")
     assert engine._index_schema is not None
     (tmp_path / "files" / "tea.txt").write_text("Green tea leaves are steamed.")
     assert engine.index_files(str(tmp_path / "files"), glob="*.txt") > 0
+    assert engine._index_schema is not None
+
+    ints = spark.createDataFrame([(7, "Black tea is oxidized.")], "doc_id int, text string")
+    assert engine.index_documents(ints) > 0
     assert engine._index_schema is None
+
+    engine.ask("re-reads the schema")
+    assert engine._index_schema is not None
+    shutil.rmtree(engine.index_path)
+    assert engine.index_files(str(tmp_path / "files"), glob="*.txt") > 0
+    assert engine._index_schema is None
+
+
+def test_ask_after_append_runs_one_job(engine, spark):
+    """An append that keeps the index's column types keeps the cached
+    schema, so the next ask is the top-k scan alone."""
+    engine.ask("warm-up: caches the index schema")
+    docs = spark.createDataFrame(
+        [(42, "Kettles whistle when the water boils.")], "doc_id long, text string"
+    )
+    assert engine.index_documents(docs) > 0
+    assert _count_jobs(spark, lambda: engine.ask("when does the kettle whistle?")) == 1
 
 
 def test_concurrent_asks_keep_session_pairs_adjacent(engine):

@@ -18,7 +18,7 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.plans.fl
     flagship,
 )
 
-from conftest import SF_DIR
+from conftest import SF_DIR, count_nodes
 
 
 def test_chunk_documents_matches_pure_function(spark):
@@ -33,6 +33,36 @@ def test_chunk_documents_matches_pure_function(spark):
     for doc_id, pairs in by_doc.items():
         assert [t for _, t in sorted(pairs)] == expected[doc_id]
         assert [i for i, _ in sorted(pairs)] == list(range(len(pairs)))
+
+
+def test_chunk_documents_edge_rows_match_pure_function(spark):
+    """Documents with no chunks (null, empty, whitespace-only text)
+    yield no rows; the others yield exactly the pure splitter's chunks
+    in order, several for a long document."""
+    long_text = "\n\n".join(
+        " ".join(f"para {p} word {w}" for w in range(12)) for p in range(4)
+    )
+    texts = {1: None, 2: "", 3: "  \n\t  \n ", 4: long_text, 5: "one short line"}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = sorted(
+        (r.doc_id, r.chunk_id, r.text)
+        for r in chunk_documents(docs, chunk_size=60).collect()
+    )
+    want = sorted(
+        (doc_id, i, chunk)
+        for doc_id, text in texts.items()
+        for i, chunk in enumerate(split_text_recursive(text or "", 60))
+    )
+    assert got == want
+    assert len(split_text_recursive(long_text, 60)) > 4
+    assert {d for d, _, _ in got} == {4, 5}
+
+
+def test_build_chunk_index_runs_two_python_stages(spark):
+    """The chunker and the embedder, once each: the chunker is not
+    copied below the scatter exchange by an inferred generator filter."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(10)
+    assert count_nodes(build_chunk_index(docs), "EvalPython") == 2
 
 
 def test_build_chunk_index_schema_and_norm(spark):

@@ -4,7 +4,12 @@ from __future__ import annotations
 
 import pytest
 
+from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.functions.embedder import (
+    EMBED_DIM,
+    embed_text,
+)
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
+    _append_rows,
     write_index_incremental,
 )
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.binary_docs import (
@@ -13,6 +18,8 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.
     pdf_extractor,
     utf8_extractor,
 )
+
+from conftest import count_nodes, file_scans
 
 
 @pytest.fixture()
@@ -195,6 +202,46 @@ def test_incremental_index_attributes_identical_content_to_new_doc(spark, tmp_pa
     )
     # replay of the full corpus appends nothing
     assert write_index_incremental(both, idx, chunk_size=200) == 0
+
+
+def test_incremental_index_reuses_stored_embedding(spark, tmp_path):
+    """A chunk whose text is already indexed takes the STORED vector,
+    not a fresh embedding: the hand-written index row carries a
+    sentinel that ``embed_text`` never produces."""
+    import hashlib
+
+    idx = str(tmp_path / "chunk_index")
+    known, fresh = "a sentence the index already holds", "a sentence nobody indexed"
+    sentinel = [0.5] * EMBED_DIM
+    spark.createDataFrame(
+        [(1, 0, known, sentinel, hashlib.sha256(known.encode()).hexdigest())],
+        "doc_id long, chunk_id int, text string, embedding array<float>, "
+        "content_hash string",
+    ).write.parquet(idx)
+    docs = spark.createDataFrame([(2, known), (3, fresh)], "doc_id long, text string")
+    assert write_index_incremental(docs, idx, chunk_size=200) == 2
+
+    got = {
+        r.doc_id: r.embedding
+        for r in spark.read.parquet(idx).filter("doc_id > 1").collect()
+    }
+    assert got[2] == sentinel
+    assert got[2] != pytest.approx(list(embed_text(known)))
+    assert got[3] == pytest.approx(list(embed_text(fresh)))
+
+
+def test_incremental_append_plan_chunks_and_embeds_once(spark, tmp_path):
+    """One branch: the chunker and the embed-or-reuse stage are the only
+    Python stages, and the index is scanned twice (keys, embeddings)."""
+    idx = str(tmp_path / "chunk_index")
+    docs = spark.createDataFrame(
+        [(i, f"document {i} about cargo and orchards") for i in range(4)],
+        "doc_id long, text string",
+    )
+    write_index_incremental(docs.filter("doc_id < 2"), idx, chunk_size=200)
+    plan = _append_rows(docs, idx, chunk_size=200)
+    assert count_nodes(plan, "EvalPython") == 2
+    assert file_scans(plan, idx) == 2
 
 
 def test_incremental_index_propagates_corrupt_index_read(spark, tmp_path):
