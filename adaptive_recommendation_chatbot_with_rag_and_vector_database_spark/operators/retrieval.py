@@ -17,6 +17,11 @@ Spark shapes, chosen for the 100 TB posture:
   Python stage passes a stored vector through or embeds the text — so
   identical content is never re-embedded, and an append is two Python
   stages over two index scans.
+- Both size their Python stages from plan statistics
+  (``_python_width``): each Python task costs a fixed ~0.3 s of worker
+  CPU, so an input runs as one task per ~200 KB of parquet, up to
+  ``defaultParallelism`` — a small append is one task, not one per
+  core, and writes one index file.
 - ``topk_cosine``: the query vector rides along as a broadcast-sized
   literal; scoring is JVM-side (functions.vector) and the top-k is
   ``orderBy(desc).limit(k)``, which Catalyst executes as
@@ -31,6 +36,8 @@ Spark shapes, chosen for the 100 TB posture:
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -47,6 +54,31 @@ REFUSAL_MESSAGE = (
     "I'm sorry, I can only answer questions related to the provided context."
 )
 
+PY_TASK_CPU_S = 0.3
+"""Worker CPU one Python-UDF task costs whatever its row count, on a
+4-core host: a 40-row identity pandas UDF over 1, 4 and 16 partitions
+took 0.84, 1.53 and 5.44 s of process-tree CPU (README, "Engine index
+path")."""
+
+PY_CPU_S_PER_BYTE = 1.5e-6
+"""Chunk + embed CPU per byte of the input's parquet size: 0.5-0.7 µs
+per raw text byte, and parquet stores that text at 0.41-0.51× its raw
+size. Only the ratio to ``PY_TASK_CPU_S`` sets a width: one task pays
+off per ~200 KB of parquet input."""
+
+
+def _python_width(docs: DataFrame) -> int:
+    """Tasks for the chunk + embed stages over ``docs``: the CPU its
+    plan-statistics size predicts, in units of one Python task's fixed
+    cost, clamped to [1, defaultParallelism]. The size comes from the
+    optimized plan and runs no job. A file scan or local relation
+    reports its real size; an input with no statistics reports
+    ``spark.sql.defaultSizeInBytes`` and a join an inflated product,
+    and both keep the full ``defaultParallelism``."""
+    size = docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    cap = docs.sparkSession.sparkContext.defaultParallelism
+    return max(1, min(cap, math.ceil(size * PY_CPU_S_PER_BYTE / PY_TASK_CPU_S)))
+
 
 def build_chunk_index(
     docs: DataFrame,
@@ -56,12 +88,13 @@ def build_chunk_index(
     """documents → chunk_embeddings(doc_id, chunk_id, text, embedding,
     content_hash); the engine's vector-index build (S4 + F6 + F8).
 
-    The input is scattered to engine parallelism first: the chunker and
-    embedder are the pipeline's two Python stages, and a small
-    single-file scan would otherwise feed them ONE task."""
+    The input is scattered to ``_python_width(docs)`` tasks first: the
+    chunker and embedder are the pipeline's two Python stages, each
+    task pays a fixed Python cost, so a small input runs as ONE task
+    and a large single-file scan is spread up to engine parallelism."""
     from ..sources.loaders import scatter
 
-    chunks = chunk_documents(scatter(docs), chunk_size=chunk_size)
+    chunks = chunk_documents(scatter(docs, _python_width(docs)), chunk_size=chunk_size)
     embed = embedding_udf(dim)
     return chunks.select(
         "doc_id",
@@ -70,13 +103,6 @@ def build_chunk_index(
         embed(F.col("text")).alias("embedding"),
         F.sha2(F.col("text"), 256).alias("content_hash"),
     )
-
-
-def write_index_if_absent(index: DataFrame, spark, table: str = "chunk_embeddings") -> None:
-    """Create-if-absent index sink (S4/S5; reference existence check at
-    /root/reference/AI.py:48). Catalog check + saveAsTable."""
-    if not spark.catalog.tableExists(table):
-        index.write.saveAsTable(table)
 
 
 def _path_exists(spark, path: str) -> bool:
@@ -105,9 +131,9 @@ def _append_rows(
     from ..sources.loaders import scatter
 
     spark = docs.sparkSession
-    chunks = chunk_documents(scatter(docs), chunk_size=chunk_size).withColumn(
-        "content_hash", F.sha2(F.col("text"), 256)
-    )
+    chunks = chunk_documents(
+        scatter(docs, _python_width(docs)), chunk_size=chunk_size
+    ).withColumn("content_hash", F.sha2(F.col("text"), 256))
     if _path_exists(spark, path):
         existing = spark.read.parquet(path)
         seen_keys = existing.select("doc_id", "content_hash").distinct()

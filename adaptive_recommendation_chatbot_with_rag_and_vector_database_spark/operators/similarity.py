@@ -846,70 +846,6 @@ def brute_topk_partials(
     )
 
 
-def pair_topk_partials(
-    pairs: DataFrame,
-    k: int,
-    key_col: str,
-    id_col: str,
-    a_col: str,
-    b_col: str,
-) -> DataFrame:
-    """Score already-joined candidate pairs and reduce to per-key top-k
-    partials INSIDE the UDF: returns ``(key, id, score)`` with at most
-    k rows per key per Arrow batch (round-6 cosine, (score desc, id
-    asc) order — bit-identical to ``F.round(cosine_sim(a, b), 6)``).
-    A global per-key window over the partials then yields the exact
-    top-k.
-
-    This is the post-join twin of ``brute_topk_partials``: scoring a
-    pair column-pair is ~20× faster vectorized than the interpreted
-    Catalyst fold, and because the reduction happens before any
-    exchange, the pair space itself is never shuffled — the windows
-    downstream only ever see k-row partials. (A plain Arrow projection
-    would lose the join's output partitioning and re-shuffle the whole
-    pair space for the window — worse than the fold it replaced.)"""
-
-    def part(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.stack(pdf[a_col].to_numpy()).astype(np.float64)
-            B = np.stack(pdf[b_col].to_numpy()).astype(np.float64)
-            keys = pdf[key_col].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            n, d = A.shape
-            acc = np.zeros(n)
-            an2 = np.zeros(n)
-            bn2 = np.zeros(n)
-            for i in range(d):
-                acc += A[:, i] * B[:, i]
-                an2 = an2 + A[:, i] * A[:, i]
-                bn2 = bn2 + B[:, i] * B[:, i]
-            denom = np.sqrt(an2) * np.sqrt(bn2)
-            s = _round6_duck(
-                np.where(denom > 0.0, acc / np.where(denom > 0.0, denom, 1.0), 0.0)
-            )
-            out_k, out_i, out_s = [], [], []
-            for key in np.unique(keys):
-                m = keys == key
-                cand_i, cand_s = ids[m], s[m]
-                order = np.lexsort((cand_i, -cand_s))[:k]
-                out_k.extend([key] * len(order))
-                out_i.extend(cand_i[order])
-                out_s.extend(cand_s[order])
-            yield pd.DataFrame(
-                {
-                    key_col: np.array(out_k, dtype=np.int64),
-                    id_col: np.array(out_i, dtype=np.int64),
-                    "score": np.array(out_s, dtype=np.float64),
-                }
-            )
-
-    return pairs.select(key_col, id_col, a_col, b_col).mapInPandas(
-        part, f"{key_col} long, {id_col} long, score double"
-    )
-
-
 def brute_knn_block(
     index: DataFrame,
     panel: list,

@@ -49,3 +49,30 @@ def file_scans(df, location: str) -> int:
             roots = node.relation().location().rootPaths()
             n += any(location in roots.apply(i).toString() for i in range(roots.size()))
     return n
+
+
+def job_stats(spark, fn) -> tuple[int, list[int]]:
+    """The Spark jobs ``fn()`` runs, counted through a job group: how
+    many, and the ``numTasks`` of each stage they ran (skipped stages,
+    whose output an earlier job already wrote, are left out)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job and stage events reach the status store through the async
+    # listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = []
+    for job in sorted(jobs):
+        for stage_id in tracker.getJobInfo(job).stageIds:
+            stage = tracker.getStageInfo(stage_id)
+            if stage is not None and stage.numCompletedTasks:
+                tasks.append(stage.numTasks)
+    return len(jobs), tasks

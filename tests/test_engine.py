@@ -13,6 +13,8 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operator
     REFUSAL_PREFIX,
 )
 
+from conftest import job_stats
+
 
 @pytest.fixture()
 def engine(spark, tmp_path):
@@ -507,33 +509,17 @@ def test_bounded_corpus_growth_appends_into_ivf_layout(
     assert fresh._ann_built
 
 
-def _count_jobs(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"test-engine-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job events reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_ask_and_recommend_run_one_job_each(engine):
     """Below the ANN threshold an ask is the top-k scan and nothing
     else: the answer is cleaned in driver Python and the index schema
     is not re-inferred per retrieval."""
     engine.ask("warm-up: reads the index schema once", session_id="jobs")
-    assert _count_jobs(engine.spark, lambda: engine.ask("order priorities?")) == 1
+    assert job_stats(engine.spark, lambda: engine.ask("order priorities?"))[0] == 1
     assert (
-        _count_jobs(engine.spark, lambda: engine.ask("orchard?", session_id="jobs"))
+        job_stats(engine.spark, lambda: engine.ask("orchard?", session_id="jobs"))[0]
         == 1
     )
-    assert _count_jobs(engine.spark, lambda: engine.recommend("jobs").collect()) == 1
+    assert job_stats(engine.spark, lambda: engine.recommend("jobs").collect())[0] == 1
 
 
 def test_index_sees_rows_another_engine_appended(engine, spark):
@@ -582,7 +568,33 @@ def test_ask_after_append_runs_one_job(engine, spark):
         [(42, "Kettles whistle when the water boils.")], "doc_id long, text string"
     )
     assert engine.index_documents(docs) > 0
-    assert _count_jobs(spark, lambda: engine.ask("when does the kettle whistle?")) == 1
+    assert job_stats(spark, lambda: engine.ask("when does the kettle whistle?"))[0] == 1
+
+
+def test_small_append_runs_one_python_task_and_writes_one_file(spark, tmp_path):
+    """A 16-document append is sized from its plan statistics and not
+    widened to ``defaultParallelism``: every stage, the chunk + embed
+    stage included, runs one task, and one index file is added. (The
+    index was built from one small file, so its scans are one task.)"""
+    import glob
+
+    def batch(name: str, first: int) -> str:
+        path = str(tmp_path / name)
+        text = "Lighthouses guide ships past the reef at night. " * 20
+        spark.createDataFrame(
+            [(first + i, f"Note {first + i}. {text}") for i in range(16)],
+            "doc_id long, text string",
+        ).coalesce(1).write.parquet(path)
+        return path
+
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"))
+    assert eng.index_documents(spark.read.parquet(batch("first", 0))) > 0
+    before = set(glob.glob(f"{eng.index_path}/*.parquet"))
+    path = batch("second", 100)
+    jobs, tasks = job_stats(spark, lambda: eng.index_documents(spark.read.parquet(path)))
+    added = set(glob.glob(f"{eng.index_path}/*.parquet")) - before
+    assert len(added) == 1
+    assert jobs > 0 and set(tasks) == {1}
 
 
 def test_concurrent_asks_keep_session_pairs_adjacent(engine):

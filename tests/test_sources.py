@@ -9,7 +9,10 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.function
     embed_text,
 )
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
+    PY_CPU_S_PER_BYTE,
+    PY_TASK_CPU_S,
     _append_rows,
+    _python_width,
     write_index_incremental,
 )
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.binary_docs import (
@@ -19,7 +22,7 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.
     utf8_extractor,
 )
 
-from conftest import count_nodes, file_scans
+from conftest import count_nodes, file_scans, plan_nodes
 
 
 @pytest.fixture()
@@ -242,6 +245,66 @@ def test_incremental_append_plan_chunks_and_embeds_once(spark, tmp_path):
     plan = _append_rows(docs, idx, chunk_size=200)
     assert count_nodes(plan, "EvalPython") == 2
     assert file_scans(plan, idx) == 2
+
+
+def _chat_batch(spark, path: str, n: int = 16) -> None:
+    """``n`` documents of 300 words from a 32-word vocabulary, written
+    as one parquet file (about 15 KB for 16): the shape of an engine
+    append."""
+    import random
+
+    rng = random.Random(7)
+    words = (
+        "cargo orchard vessel harvest freight autumn priority yield harbor ledger "
+        "invoice pallet barrel crate winter spring summer market broker tariff "
+        "ship route port dock crane truck rail depot grain fruit apple pear"
+    ).split()
+    rows = [(i, " ".join(rng.choice(words) for _ in range(300))) for i in range(n)]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+
+
+def test_python_width_follows_plan_size(spark, tmp_path):
+    """One Python task for a small append, ``defaultParallelism`` for an
+    input past the break-even and for one whose size statistics are
+    unusable (a join's estimate is the product of its sides)."""
+    import glob
+    import os
+    import random
+
+    cap = spark.sparkContext.defaultParallelism
+    small = str(tmp_path / "small")
+    _chat_batch(spark, small)
+    assert _python_width(spark.read.parquet(small)) == 1
+
+    joined = spark.read.parquet(small).crossJoin(spark.range(1000))
+    assert _python_width(joined) == cap
+
+    big = str(tmp_path / "big")
+    rng = random.Random(11)
+    rows = [(i, rng.randbytes(2048).hex()) for i in range(256)]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(big)
+    size = sum(os.path.getsize(f) for f in glob.glob(f"{big}/*.parquet"))
+    assert size * PY_CPU_S_PER_BYTE / PY_TASK_CPU_S > cap  # past the break-even
+    assert _python_width(spark.read.parquet(big)) == cap
+
+
+def test_small_append_plan_does_not_widen(spark, tmp_path):
+    """A 16-document append scan keeps its one partition: no
+    round-robin exchange feeds the chunker, and the chunker and the
+    embed-or-reuse stage are still the only Python stages."""
+    idx, batch = str(tmp_path / "chunk_index"), str(tmp_path / "batch")
+    _chat_batch(spark, batch)
+    docs = spark.read.parquet(batch)
+    write_index_incremental(docs.filter("doc_id < 8"), idx, chunk_size=200)
+    plan = _append_rows(docs, idx, chunk_size=200)
+    round_robin = [
+        n
+        for n in plan_nodes(plan)
+        if n.nodeName() == "Exchange"
+        and n.outputPartitioning().getClass().getSimpleName() == "RoundRobinPartitioning"
+    ]
+    assert round_robin == []
+    assert count_nodes(plan, "EvalPython") == 2
 
 
 def test_incremental_index_propagates_corrupt_index_read(spark, tmp_path):
