@@ -44,7 +44,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegralType, LongType, StructType
 
 from .functions.chunker import DEFAULT_CHUNK_SIZE
 from .functions.embedder import EMBED_DIM, embed_text
@@ -175,8 +175,9 @@ class RagEngine:
         so a sub-threshold build never pays even the routing count."""
         self._index_rows = None  # size changed: re-count lazily
         created = not _path_exists(self.spark, self.index_path)
+        schema = None if created else self._index_schema  # no index to read yet
         n_new = write_index_incremental(
-            docs, self.index_path, chunk_size=self.chunk_size, dim=self.dim
+            docs, self.index_path, self.chunk_size, self.dim, schema=schema
         )
         # defer the ANN build to the first retrieval: deciding the route
         # needs a row count, and paying that job here would tax every
@@ -462,11 +463,14 @@ class RagEngine:
         rows another writer appended are seen). Only the schema is
         cached: caching the DataFrame would freeze the listing. The
         schema is read from the data, not declared, because ``doc_id``
-        takes the type of the caller's documents."""
+        takes the type of the caller's documents. Inference reads ONE
+        file, so an integral ``doc_id`` is read as long: appends of two
+        widths leave files that only the wider type reads."""
         if self._index_schema is None:
-            df = self.spark.read.parquet(self.index_path)
-            self._index_schema = df.schema
-            return df
+            schema = self.spark.read.parquet(self.index_path).schema
+            if isinstance(schema["doc_id"].dataType, IntegralType):
+                schema["doc_id"].dataType = LongType()
+            self._index_schema = schema
         return self.spark.read.schema(self._index_schema).parquet(self.index_path)
 
     # -- query path (J1, O1, A1, P1, P2) ------------------------------------

@@ -3,9 +3,9 @@
 The reference's similarity metric is cosine (Pinecone index
 ``metric="cosine"``, /root/reference/AI.py:52). Here dot product, norm,
 and cosine are built from Spark's higher-order array functions
-(``zip_with`` + ``aggregate``), so scoring stays JVM-side inside
-whole-stage codegen — no Python in the hot path, which is what lets a
-top-k scan over a 100 TB embeddings table run at scan speed.
+(``zip_with`` + ``aggregate``), so scoring stays in the JVM with no
+Python in the hot path. Both are ``CodegenFallback``: the executed plan
+shows the scoring ``Project`` outside whole-stage codegen (no ``*(n)``).
 
 All arithmetic is DOUBLE regardless of the stored FLOAT vectors, to
 match the DuckDB oracle's double-precision list arithmetic.
@@ -13,12 +13,15 @@ match the DuckDB oracle's double-precision list arithmetic.
 
 from __future__ import annotations
 
+import functools
+import math
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -27,7 +30,6 @@ def dot(a: Column | str, b: Column | str) -> Column:
 
 
 def l2_norm(a: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
     return F.sqrt(
         F.aggregate(
             a,
@@ -39,33 +41,33 @@ def l2_norm(a: Column | str) -> Column:
 
 def cosine_sim(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; 0.0 when either side has zero norm."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0.0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def cosine_sim_to_const(a: Column | str, vec) -> Column:
-    """:func:`cosine_sim` against a plan-time CONSTANT vector (a Python
-    list — the one-query retrieval shape, J1/O1).
+QUERY_VEC, QUERY_NORM = "__query_vec", "__query_norm"
 
-    Catalyst does not constant-fold the ``aggregate`` HOF, so the
-    generic form re-folds the constant's norm for EVERY row. Here the
-    constant norm is folded once at plan-build time — in the same float
-    order as :func:`l2_norm`'s runtime fold (linear ``acc + x*x`` then
-    sqrt), and kept as the same right-hand multiplicand — so scores are
-    bit-identical to the generic form (0 mismatches over 5 k probes)
-    while each row saves one dim-length fold: measured 20 % off a pure
-    2 M-row scoring scan; invisible in index-build-dominated queries."""
-    import math
 
-    a = F.col(a) if isinstance(a, str) else a
-    acc = 0.0
-    for x in vec:
-        acc += float(x) * float(x)
+@functools.lru_cache(maxsize=16)
+def cosine_to_query(vec_col: str, app_id: str) -> Column:
+    """:func:`cosine_sim` of ``vec_col`` against ONE query vector (J1/O1),
+    built once per ``(vec_col, application)`` (a Column from a stopped
+    JVM is never reused). The question is the columns ``QUERY_VEC`` and
+    ``QUERY_NORM`` (``query_literals``), which ``CollapseProject``
+    inlines as literals. Catalyst does not constant-fold the
+    ``aggregate`` HOF, so the norm is folded on the driver, in the same
+    float order as :func:`l2_norm` (linear ``acc + x*x`` then sqrt) and
+    as the same right-hand multiplicand: scores are bit-identical to the
+    generic form."""
+    denom = l2_norm(vec_col) * F.col(QUERY_NORM)
+    return F.when(denom > 0.0, dot(vec_col, QUERY_VEC) / denom).otherwise(F.lit(0.0))
+
+
+def query_literals(vec) -> tuple[Column, Column]:
+    """``vec`` as ONE array literal and its driver-folded norm, aliased
+    ``QUERY_VEC`` and ``QUERY_NORM``."""
+    q = np.asarray(vec, dtype=np.float64)
+    acc = functools.reduce(lambda s, x: s + x * x, q.tolist(), 0.0)
     # math.sqrt is IEEE correctly-rounded, same as the JVM's Math.sqrt
-    # behind F.sqrt — NOT acc**0.5, whose pow() rounding is unspecified
-    qn = math.sqrt(acc)
-    qcol = F.array(*[F.lit(float(x)) for x in vec])
-    denom = l2_norm(a) * F.lit(qn)
-    return F.when(denom > 0.0, dot(a, qcol) / denom).otherwise(F.lit(0.0))
+    # behind F.sqrt, NOT acc**0.5, whose pow() rounding is unspecified
+    return F.lit(q).alias(QUERY_VEC), F.lit(math.sqrt(acc)).alias(QUERY_NORM)

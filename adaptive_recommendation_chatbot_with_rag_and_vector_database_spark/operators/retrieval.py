@@ -22,8 +22,8 @@ Spark shapes, chosen for the 100 TB posture:
   CPU, so an input runs as one task per ~200 KB of parquet, up to
   ``defaultParallelism`` — a small append is one task, not one per
   core, and writes one index file.
-- ``topk_cosine``: the query vector rides along as a broadcast-sized
-  literal; scoring is JVM-side (functions.vector) and the top-k is
+- ``topk_cosine``: a question binds two literals (vector, norm) under a
+  session-cached score expression (functions.vector); the top-k is
   ``orderBy(desc).limit(k)``, which Catalyst executes as
   ``TakeOrderedAndProject`` — per-partition heaps + driver merge, never a
   global sort. That is exactly the distributed form of a vector-index
@@ -41,11 +41,11 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.chunker import DEFAULT_CHUNK_SIZE, chunk_documents
 from ..functions.embedder import EMBED_DIM, embed_or_reuse_udf, embedding_udf
-from ..functions.vector import cosine_sim, cosine_sim_to_const  # noqa: F401
-from .similarity import cosine_sim_arrow
+from ..functions.vector import cosine_to_query, query_literals
 
 # Reference constants (BASELINE.md): retrieval k=4, refusal prefix.
 DEFAULT_K = 4
@@ -122,6 +122,7 @@ def _append_rows(
     path: str,
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     dim: int = EMBED_DIM,
+    schema: StructType | None = None,
 ) -> DataFrame:
     """The rows ``write_index_incremental`` appends, as one branch:
     ``chunks`` anti-joined with the index's ``(doc_id, content_hash)``
@@ -135,7 +136,7 @@ def _append_rows(
         scatter(docs, _python_width(docs)), chunk_size=chunk_size
     ).withColumn("content_hash", F.sha2(F.col("text"), 256))
     if _path_exists(spark, path):
-        existing = spark.read.parquet(path)
+        existing = (spark.read.schema(schema) if schema else spark.read).parquet(path)
         seen_keys = existing.select("doc_id", "content_hash").distinct()
         known = existing.select(
             "content_hash", F.col("embedding").alias("known")
@@ -159,6 +160,7 @@ def write_index_incremental(
     path: str,
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     dim: int = EMBED_DIM,
+    schema: StructType | None = None,
 ) -> int:
     """Content-hash-incremental index build — the storage-backed form of
     the reference's LRU memoization (/root/reference/AI.py:89-96, keyed
@@ -181,11 +183,11 @@ def write_index_incremental(
     (keys, stored embeddings). At small appends the cost is Python
     tasks, not rows; at scale embedding dominates (a model call per
     chunk) and both joins are hash-keyed over column-pruned parquet
-    reads. Appends new rows; returns how many chunk rows were newly
-    appended."""
+    reads; a known index ``schema`` skips inferring it (one job). Appends
+    new rows; returns how many chunk rows were newly appended."""
     # localCheckpoint would also work; count-then-append keeps it simple
     # and the count is the caller's idempotency signal.
-    new_rows = _append_rows(docs, path, chunk_size, dim).persist()
+    new_rows = _append_rows(docs, path, chunk_size, dim, schema).persist()
     try:
         n = new_rows.count()
         if n:
@@ -205,14 +207,15 @@ def topk_cosine(
 ) -> DataFrame:
     """Top-k cosine similarity search for ONE query vector (J1/O1).
 
-    ``query_vec`` is a Python list/np array; it becomes an array literal
-    in the plan (broadcast to every task for free). Deterministic
+    ``query_vec`` (a list or np array) is bound as two literals, which
+    Catalyst collapses into the score projection. Deterministic
     tie-break on the first id column.
     """
-    scored = index.select(
-        *id_cols,
-        *payload_cols,
-        cosine_sim_to_const(F.col(vec_col), query_vec).alias("score"),
+    # vec_col may also be a payload column (MMR reads the embeddings)
+    keep = dict.fromkeys((*id_cols, *payload_cols, vec_col))
+    score = cosine_to_query(vec_col, index.sparkSession.sparkContext.applicationId)
+    scored = index.select(*keep, *query_literals(query_vec)).select(
+        *id_cols, *payload_cols, score.alias("score")
     )
     # orderBy+limit → TakeOrderedAndProject (no global sort at scale)
     return scored.orderBy(F.desc("score"), *[F.asc(c) for c in id_cols]).limit(k)

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.vector import cosine_sim
 from ..sources.loaders import substrate
 
 SEED = 42

@@ -511,7 +511,6 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc counts; V is one scalar. Bigrams build inside the array
     domain (zip_with over the token array and its shift — codegen, no
     Python), so the fact-side cost is one exchange keyed on doc_id."""
-    from .functions.tokenize import toks_col
 
     t = load_table(spark, "documents", sf_dir).select(
         "doc_id", toks_col().alias("toks")

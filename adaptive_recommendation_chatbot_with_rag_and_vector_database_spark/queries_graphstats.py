@@ -238,7 +238,6 @@ def q_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition top-k below the exchange. The streaming twin is the
     same aggregation under `window(ts, '1 day')` with a watermark;
     this batch form is the replayable oracle-checked semantics."""
-    from pyspark.sql import Window
 
     c = (
         load_table(spark, "events", sf_dir)

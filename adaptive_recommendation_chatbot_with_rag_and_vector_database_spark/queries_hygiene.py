@@ -321,7 +321,6 @@ def q_embedding_norm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     contracts make this a constant-1 assertion). The norm is a
     row-local array fold (codegen, no UDF); the rest is one
     label-keyed aggregate with an exact interpolated p95."""
-    from pyspark.sql import functions as F
 
     nrm = F.sqrt(
         F.aggregate(

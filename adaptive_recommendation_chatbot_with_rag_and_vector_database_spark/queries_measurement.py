@@ -1132,7 +1132,6 @@ def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     never by the data. The normal-CDF rational approximation is shared
     with the oracle term-for-term, so parity holds bit-for-bit after
     1e-6 rounding."""
-    from pyspark.sql import Window
 
     s = load_table(spark, "events", sf_dir).select(
         "event_type",

@@ -1607,7 +1607,6 @@ def q_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out), broadcast back onto one fact pass that accumulates (n, Σz,
     Σz²) map-side; the F statistic is closed-form over k rows. The
     5%% critical value for (2, large) df is 2.9957."""
-    from pyspark.sql import Window
 
     # ONE fact pass: the (status, value) tie classes carry everything —
     # the grouped disc medians come from per-group running cuts over the

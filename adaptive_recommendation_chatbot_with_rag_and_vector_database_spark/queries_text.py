@@ -34,9 +34,7 @@ from .functions.text import (
     quality_score,
     simhash,
     stopword_ratio,
-    token_count_bpe,
     token_count_ws,
-    token_hashes,
     tokens,
     word_bigrams,
 )
@@ -695,7 +693,6 @@ def q_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit: each map task keeps only its per-key newest row
     BEFORE the exchange, so the shuffle carries ~|keys| rows, not
     |events|."""
-    from pyspark.sql import Window
 
     ev = load_table(spark, "events", sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
@@ -1068,7 +1065,6 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = dt.groupBy("source", "term").agg(F.sum("c").alias("tf"))
     df = dt.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    from .sources.loaders import doc_tokens
 
     n_docs = doc_tokens(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -1695,7 +1691,6 @@ def q_stopword_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed 29-word engine stopword list, so every table after the
     one token-filtering aggregate is (sources × 29)-sized, and the pair
     join is word-keyed over that table — never a document pair space."""
-    from .functions.text import STOPWORDS
 
     stops = sorted({w for ws in STOPWORDS.values() for w in ws})
     docs = _docs(spark, sf_dir)

@@ -36,7 +36,6 @@ from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 DOC_SCHEMA = T.StructType(

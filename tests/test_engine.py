@@ -13,7 +13,7 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operator
     REFUSAL_PREFIX,
 )
 
-from conftest import job_stats
+from conftest import count_nodes, file_scans, job_stats, plan_nodes
 
 
 @pytest.fixture()
@@ -636,3 +636,94 @@ def test_concurrent_asks_keep_session_pairs_adjacent(engine):
     log = engine.history(sid)
     assert len(log) == 48
     assert [m["role"] for m in log] == ["user", "assistant"] * 24
+
+
+def test_append_by_engine_that_read_its_index_runs_one_job_fewer(engine, spark):
+    """An engine that has read its index passes the cached schema to
+    the append, which skips the index read's schema-inference job; a
+    fresh engine on the same index still infers it."""
+    engine.ask("warm-up: caches the index schema")
+    fresh = RagEngine(spark, index_path=engine.index_path)
+
+    def append(eng, doc_id):
+        docs = spark.createDataFrame(
+            [(doc_id, f"Heron {doc_id} waded through the shallow estuary.")],
+            "doc_id long, text string",
+        )
+        return job_stats(spark, lambda: eng.index_documents(docs))[0]
+
+    assert append(engine, 60) == append(fresh, 61) - 1
+
+
+def test_topk_cosine_bit_identical_to_generic_cosine(engine, spark):
+    """The session-cached score expression with the question bound as
+    two literals returns the same rows and the same scores (``==``) as
+    the generic ``cosine_sim`` against a cross-joined query column: 50
+    seeded vectors plus the zero and a one-hot vector, k = every row,
+    in the plain and the MMR-shaped (``embedding`` as payload) call."""
+    import numpy as np
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.functions.vector import (
+        cosine_sim,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
+        topk_cosine,
+    )
+
+    index = engine.index()
+    emb = {(r.doc_id, r.chunk_id): r.embedding for r in index.collect()}
+    n, dim = len(emb), engine.dim
+    rng = np.random.default_rng(7)
+    qs = [rng.standard_normal(dim) for _ in range(50)] + [np.zeros(dim), np.eye(dim)[3]]
+    probes = spark.createDataFrame(
+        [(i, q.tolist()) for i, q in enumerate(qs)], "qid int, q array<double>"
+    )
+    generic: dict[int, list] = {}
+    for r in index.crossJoin(probes).select(
+        "qid", "doc_id", "chunk_id", cosine_sim("embedding", "q").alias("score")
+    ).collect():
+        generic.setdefault(r.qid, []).append((r.doc_id, r.chunk_id, r.score))
+    ids = ("doc_id", "chunk_id")
+    for i, q in enumerate(qs):
+        want = sorted(generic[i])
+        plain = topk_cosine(index, q, k=n, id_cols=ids).collect()
+        assert sorted(tuple(r) for r in plain) == want
+        mmr = topk_cosine(index, q, k=n, id_cols=ids, payload_cols=("text", "embedding"))
+        assert mmr.columns == ["doc_id", "chunk_id", "text", "embedding", "score"]
+        rows = mmr.collect()
+        assert sorted((r.doc_id, r.chunk_id, r.score) for r in rows) == want
+        assert all(r.embedding == emb[(r.doc_id, r.chunk_id)] for r in rows)
+
+
+def test_retrieve_builds_score_expression_at_most_once(engine, monkeypatch):
+    """Distinct questions bind new literals into one session-cached
+    score expression instead of rebuilding it: ``dot`` is called at
+    most once over five retrievals."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.functions import (
+        vector,
+    )
+
+    calls = []
+    real = vector.dot
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(vector, "dot", counting)
+    for q in ("cargo", "orchard yield", "autumn", "urgent freight", "season"):
+        assert engine.retrieve(q, k=2).collect()
+    assert len(calls) <= 1
+
+
+def test_ask_plan_is_one_projection_over_the_scan(engine):
+    """The two bound literals collapse into the scoring projection: the
+    ask's plan is one scan, one ``Project`` and the top-k, with no
+    exchange and no Python."""
+    df = engine.retrieve("order priorities?")
+    df.collect()
+    assert count_nodes(df, "TakeOrderedAndProject") == 1
+    assert [n.nodeName() for n in plan_nodes(df)].count("Project") == 1
+    assert file_scans(df, engine.index_path) == 1
+    assert count_nodes(df, "Exchange") == 0
+    assert count_nodes(df, "EvalPython") == 0
