@@ -18,8 +18,8 @@ Spark shapes, chosen for the 100 TB posture:
   identical content is never re-embedded, and an append is two Python
   stages over two index scans.
 - Both size their Python stages from plan statistics
-  (``_python_width``): each Python task costs a fixed ~0.3 s of worker
-  CPU, so an input runs as one task per ~200 KB of parquet, up to
+  (``_python_width``): each Python task has a fixed CPU cost, so an
+  input runs as one task per ~200 KB of parquet, up to
   ``defaultParallelism`` — a small append is one task, not one per
   core, and writes one index file.
 - ``topk_cosine``: a question binds two literals (vector, norm) under a
@@ -55,10 +55,11 @@ REFUSAL_MESSAGE = (
 )
 
 PY_TASK_CPU_S = 0.3
-"""Worker CPU one Python-UDF task costs whatever its row count, on a
-4-core host: a 40-row identity pandas UDF over 1, 4 and 16 partitions
-took 0.84, 1.53 and 5.44 s of process-tree CPU (README, "Engine index
-path")."""
+"""Fixed CPU of one Python-UDF task whatever its row count: ~0.2 s while
+reused workers re-read ``pyspark.zip`` per task, ~0.05 s since ``session``
+stamps that re-read (README, "Engine index path"). Kept at 0.3 on purpose:
+a lower value gives the ``chat`` set-up build's 61.5 KB input width 2, not
+1, and every ask scans the extra index files; a refit is its own A/B."""
 
 PY_CPU_S_PER_BYTE = 1.5e-6
 """Chunk + embed CPU per byte of the input's parquet size: 0.5-0.7 µs

@@ -3,6 +3,7 @@ index → ask → history) on Spark, deterministic."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.engine import (
@@ -727,3 +728,47 @@ def test_ask_plan_is_one_projection_over_the_scan(engine):
     assert file_scans(df, engine.index_path) == 1
     assert count_nodes(df, "Exchange") == 0
     assert count_nodes(df, "EvalPython") == 0
+
+
+def test_reused_python_worker_does_not_reread_pyspark_zip(spark):
+    """A reused Python worker's per-task ``importlib.invalidate_caches()``
+    re-reads no zip directory once the package is imported: 1-partition
+    jobs report their worker's PID and the directory reads it has
+    counted, and a PID seen again has counted none since. Each task's
+    output is fully consumed, so its worker goes back to the pool."""
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("pid long, reads long")
+    def reads(ids: pd.Series) -> pd.DataFrame:
+        import importlib
+        import os
+        import zipimport
+
+        import adaptive_recommendation_chatbot_with_rag_and_vector_database_spark  # noqa: F401
+
+        if not hasattr(zipimport, "reads_seen"):
+            # the wrapper re-reads each archive once in a process, at its
+            # first call, to record the stamp; count from after that call
+            importlib.invalidate_caches()
+            zipimport.reads_seen = 0
+            inner = zipimport._read_directory
+
+            def counted(path):
+                zipimport.reads_seen += 1
+                return inner(path)
+
+            zipimport._read_directory = counted
+        return pd.DataFrame({"pid": [os.getpid()] * len(ids),
+                             "reads": [zipimport.reads_seen] * len(ids)})
+
+    df = spark.range(1, numPartitions=1).select(reads("id").alias("r")).select("r.*")
+    seen: dict[int, list[int]] = {}
+    for _ in range(24):
+        [(pid, count)] = df.collect()
+        seen.setdefault(pid, []).append(count)
+        if len(seen[pid]) == 3:
+            break
+    again = {pid: counts for pid, counts in seen.items() if len(counts) > 1}
+    assert again, seen
+    for counts in again.values():
+        assert counts == [counts[0]] * len(counts), seen
