@@ -127,6 +127,17 @@ def extractive_answerer(question: str, context: str) -> str:
     return context.split("\n")[0]
 
 
+def _codebook_array(cb_rows):
+    """Persisted codebook rows (``cell``, ``centroid``) → the
+    (cells × dim) float64 array, row ``i`` being cell ``i``."""
+    import numpy as np
+
+    return np.array(
+        [r.centroid for r in sorted(cb_rows, key=lambda r: r.cell)],
+        dtype=np.float64,
+    )
+
+
 @dataclass
 class RagEngine:
     spark: SparkSession
@@ -155,11 +166,17 @@ class RagEngine:
     # the index schema from this instance's first read; later reads pass
     # it so no retrieval re-runs parquet schema inference (a Spark job)
     _index_schema: StructType | None = field(default=None, repr=False)
-    # True once THIS instance has verified (or written) an IVF layout
-    # matching the current corpus — the per-question short-circuit; an
-    # in-session corpus change resets it
-    _ann_built: bool = field(default=False, repr=False)
+    # guards the verify-or-build of the derived layouts (IVF, postings)
+    # and index_documents' reset of their state: without it, the first
+    # asks of two threads above the threshold both build, and both
+    # overwrite the same paths under each other's readers
+    _layout_lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False, compare=False
+    )
     _lex_built: bool = field(default=False, repr=False)
+    # the IVF codebook, set once THIS instance has verified (or written)
+    # a layout matching the current corpus — the per-question
+    # short-circuit; an in-session corpus change resets it
     _codebook: object = field(default=None, repr=False)
 
     # -- index build (S2-S5, F5, F6, F8) -----------------------------------
@@ -182,12 +199,12 @@ class RagEngine:
         # defer the ANN build to the first retrieval: deciding the route
         # needs a row count, and paying that job here would tax every
         # sub-threshold (reference-scale) index build; clearing the
-        # built flag makes the first post-change retrieval re-verify
+        # layout state makes the first post-change retrieval re-verify
         # (fingerprint probe) or rebuild instead
         if n_new > 0:
-            self._ann_built = False
-            self._lex_built = False
-            self._codebook = None
+            with self._layout_lock:
+                self._lex_built = False
+                self._codebook = None
             # re-read the schema once only if this write created the
             # index or changed a column type: doc_id is the one index
             # column whose type the caller picks (simpleString ignores
@@ -214,31 +231,35 @@ class RagEngine:
     def _lex_paths(self) -> tuple[str, str]:
         return f"{self.index_path}_lex", f"{self.index_path}_lex_stats"
 
-    def _corpus_signature(self, rows: int) -> str:
-        """Reuse fingerprint for derived layouts (IVF codebook, postings
-        stats). Row count alone would let any corpus change that
-        preserves row count (an external rewrite of ``index_path``, an
-        in-place re-chunk by another process) silently serve a stale
-        layout, so the signature also folds in the index parquet's
-        total byte length and the newest modification time among its
-        direct children (covers in-place file rewrites, which leave the
-        directory's own mtime untouched on local FS). Driver-side FS
-        metadata only — no Spark job. Degrades to rows-only on FS
-        quirks: the safe direction, since a later successful probe then
-        mismatches and rebuilds."""
-        sig = f"rows={rows}"
+    def _index_fs_stat(self) -> tuple[int, int] | None:
+        """The index parquet's total byte length and the newest
+        modification time among the directory and its direct children
+        (covers in-place file rewrites, which leave the directory's own
+        mtime untouched on local FS). One Hadoop-FS open, driver-side
+        metadata only — no Spark job. None on FS quirks."""
         try:
             jpath = self.spark._jvm.org.apache.hadoop.fs.Path(self.index_path)
             fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
             length = fs.getContentSummary(jpath).getLength()
             mtime = fs.getFileStatus(jpath).getModificationTime()
             for st in fs.listStatus(jpath):
-                if st.getModificationTime() > mtime:
-                    mtime = st.getModificationTime()
-            sig += f";bytes={length};mtime={mtime}"
+                mtime = max(mtime, st.getModificationTime())
+            return length, mtime
         except Exception:
-            pass
-        return sig
+            return None
+
+    def _corpus_signature(self, rows: int) -> str:
+        """Reuse fingerprint for derived layouts (IVF codebook, postings
+        stats). Row count alone would let any corpus change that
+        preserves row count (an external rewrite of ``index_path``, an
+        in-place re-chunk by another process) silently serve a stale
+        layout, so the signature also folds in ``_index_fs_stat``.
+        Degrades to rows-only on FS quirks: the safe direction, since a
+        later successful probe then mismatches and rebuilds."""
+        st = self._index_fs_stat()
+        if st is None:
+            return f"rows={rows}"
+        return f"rows={rows};bytes={st[0]};mtime={st[1]}"
 
     def _ensure_lex_index(self) -> None:
         """Lexical twin of ``_ensure_ann_index``: above the routing
@@ -246,7 +267,7 @@ class RagEngine:
         posting-list layout instead of tokenizing every chunk per
         question (the scan leg dominated hybrid latency at the
         2 M-chunk tier). Same per-corpus reuse contract: the stats
-        parquet carries the corpus row count, a fresh engine verifies
+        parquet carries the corpus signature, a fresh engine verifies
         it before rebuilding, and ``_lex_built`` short-circuits every
         later question. Built lazily on the first hybrid retrieval —
         vector-only users never pay it."""
@@ -254,102 +275,102 @@ class RagEngine:
 
         if self._lex_built:
             return
-        rows = self._count_index_rows()
-        if rows <= self.ann_threshold_rows:
-            return
-        lex_path, stats_path = self._lex_paths()
-        sig = self._corpus_signature(rows)
-        try:
-            st = self.spark.read.parquet(stats_path).collect()
-        except Exception:
-            st = []
-        if st and all(getattr(r, "corpus_sig", None) == sig for r in st):
+        with self._layout_lock:
+            if self._lex_built:  # another thread verified or built it
+                return
+            rows = self._count_index_rows()
+            lex_path, stats_path = self._lex_paths()
+            sig = self._corpus_signature(rows)
+            try:
+                st = self.spark.read.parquet(stats_path).collect()
+            except Exception:
+                st = []
+            if not (st and all(getattr(r, "corpus_sig", None) == sig for r in st)):
+                write_postings_index(
+                    self.index().select(
+                        F.concat_ws("#", F.col("doc_id"), F.col("chunk_id")).alias(
+                            "cid"
+                        ),
+                        "text",
+                    ),
+                    lex_path,
+                    stats_path,
+                    id_col="cid",
+                    fingerprint=rows,
+                    signature=sig,
+                )
             self._lex_built = True
-            return
-        write_postings_index(
-            self.index().select(
-                F.concat_ws("#", F.col("doc_id"), F.col("chunk_id")).alias(
-                    "cid"
-                ),
-                "text",
-            ),
-            lex_path,
-            stats_path,
-            id_col="cid",
-            fingerprint=rows,
-            signature=sig,
-        )
-        self._lex_built = True
 
-    def _ensure_ann_index(self) -> None:
+    def _ensure_ann_index(self):
+        """The IVF codebook of a layout that serves the current corpus:
+        verified, appended to or built on this instance's first
+        above-threshold retrieval (and after each in-session corpus
+        change), then returned from ``_codebook`` with zero jobs."""
         from .operators.similarity import train_centroids_sample, write_ivf_index
 
-        if self._ann_built:  # verified in-session: zero jobs per question
-            return
-        rows = self._count_index_rows()
-        if rows <= self.ann_threshold_rows:
-            return
-        ivf_path, cb_path = self._ann_paths()
-        # The IVF layout is a PER-CORPUS artifact, not per-instance: a
-        # fresh engine pointed at an already-built index must reuse the
-        # on-disk codebook+layout, not retrain KMeans and rewrite 2 M
-        # rows. The codebook parquet carries the corpus fingerprint
-        # (row count + index bytes + newest child mtime at build time,
-        # _corpus_signature) beside the centroids; a match proves the
-        # layout serves the current corpus, and the read doubles as the
-        # codebook load. One probe per instance (or per in-session
-        # corpus change) — _ann_built short-circuits after.
-        sig = self._corpus_signature(rows)
-        try:
-            cb_rows = self.spark.read.parquet(cb_path).collect()
-        except Exception:
-            cb_rows = []  # absent codebook: build below
-        if cb_rows and all(
-            getattr(r, "corpus_sig", None) == sig for r in cb_rows
-        ):
-            import numpy as np
+        codebook = self._codebook
+        if codebook is not None:  # verified in-session: zero jobs per question
+            return codebook
+        with self._layout_lock:
+            if self._codebook is not None:  # another thread verified or built it
+                return self._codebook
+            rows = self._count_index_rows()
+            # The IVF layout is a PER-CORPUS artifact, not per-instance:
+            # a fresh engine pointed at an already-built index must reuse
+            # the on-disk codebook+layout, not retrain KMeans and rewrite
+            # 2 M rows. The codebook parquet carries the corpus
+            # fingerprint (_corpus_signature at build time) beside the
+            # centroids; a match proves the layout serves the current
+            # corpus, and the read doubles as the codebook load.
+            sig = self._corpus_signature(rows)
+            try:
+                cb_rows = self.spark.read.parquet(self._ann_paths()[1]).collect()
+            except Exception:
+                cb_rows = []  # absent codebook: build below
+            if cb_rows and all(
+                getattr(r, "corpus_sig", None) == sig for r in cb_rows
+            ):
+                self._codebook = _codebook_array(cb_rows)
+                return self._codebook
+            if cb_rows and self._try_ivf_append(cb_rows, rows, sig):
+                return self._codebook
+            import math
 
-            self._codebook = np.array(
-                [r.centroid for r in sorted(cb_rows, key=lambda r: r.cell)],
-                dtype=np.float64,
+            n_cells = int(
+                min(4096, max(16, 2 ** round(math.log2(max(math.sqrt(rows), 16.0)))))
             )
-            self._ann_built = True
-            return
-        if cb_rows and self._try_ivf_append(cb_rows, rows, sig):
-            return
-        import math
+            centroids = train_centroids_sample(
+                self.index(),
+                n_cells,
+                "embedding",
+                sample_rows=max(4096, 8 * n_cells),
+                # corpus-versioned key: a stale-rebuild after index growth
+                # must RETRAIN, not replay the previous corpus's centroids
+                # memoized under the bare path
+                cache_key=f"{self.index_path}@rows={rows}",
+            )
+            write_ivf_index(
+                self.index().select(
+                    self._cid(), "embedding", "doc_id", "chunk_id", "text"
+                ),
+                self._ann_paths()[0],
+                centroids,
+                index_id="cid",
+                payload_cols=("doc_id", "chunk_id", "text"),
+            )
+            self._write_codebook(centroids, rows, sig)
+            self._codebook = centroids
+            return centroids
 
-        n_cells = int(
-            min(4096, max(16, 2 ** round(math.log2(max(math.sqrt(rows), 16.0)))))
-        )
-        centroids = train_centroids_sample(
-            self.index(),
-            n_cells,
-            "embedding",
-            sample_rows=max(4096, 8 * n_cells),
-            # corpus-versioned key: a stale-rebuild after index growth
-            # must RETRAIN, not replay the previous corpus's centroids
-            # memoized under the bare path
-            cache_key=f"{self.index_path}@rows={rows}",
-        )
-        write_ivf_index(
-            self.index().select(
-                self._cid(), "embedding", "doc_id", "chunk_id", "text"
-            ),
-            ivf_path,
-            centroids,
-            index_id="cid",
-            payload_cols=("doc_id", "chunk_id", "text"),
-        )
+    def _write_codebook(self, centroids, rows: int, sig: str) -> None:
+        # one row per cell, with the corpus fingerprint the layout serves
         self.spark.createDataFrame(
             [
                 (i, [float(x) for x in c], rows, sig)
                 for i, c in enumerate(centroids)
             ],
             "cell int, centroid array<double>, corpus_rows long, corpus_sig string",
-        ).coalesce(1).write.mode("overwrite").parquet(cb_path)
-        self._codebook = centroids
-        self._ann_built = True
+        ).coalesce(1).write.mode("overwrite").parquet(self._ann_paths()[1])
 
     #: a corpus that grew by more than this fraction since the codebook
     #: trained gets a RETRAIN, not an append — per-row cell assignment
@@ -373,7 +394,7 @@ class RagEngine:
         to the retrain path) and growth must stay within
         ``IVF_APPEND_MAX_GROWTH``. Returns True when the append served;
         False falls through to the rebuild."""
-        ivf_path, cb_path = self._ann_paths()
+        ivf_path = self._ann_paths()[0]
         old_rows = {getattr(r, "corpus_rows", -1) for r in cb_rows}
         if len(old_rows) != 1:
             return False
@@ -401,14 +422,9 @@ class RagEngine:
         )
         if anomalies.filter(F.col("in_f").isNull()).limit(1).count():
             return False  # orphans: the old layout is not a subset
-        import numpy as np
-
         from .operators.similarity import append_ivf_index
 
-        codebook = np.array(
-            [r.centroid for r in sorted(cb_rows, key=lambda r: r.cell)],
-            dtype=np.float64,
-        )
+        codebook = _codebook_array(cb_rows)
         # payload rides a cid equi-join against the CHECKPOINTED delta
         # id set (AQE broadcasts it at runtime) — the index is scanned
         # once more for the payload columns, never shuffled
@@ -422,30 +438,9 @@ class RagEngine:
             index_id="cid",
             payload_cols=("doc_id", "chunk_id", "text"),
         )
-        self.spark.createDataFrame(
-            [
-                (int(r.cell), [float(x) for x in r.centroid], rows, sig)
-                for r in cb_rows
-            ],
-            "cell int, centroid array<double>, corpus_rows long, corpus_sig string",
-        ).coalesce(1).write.mode("overwrite").parquet(cb_path)
+        self._write_codebook(codebook, rows, sig)
         self._codebook = codebook
-        self._ann_built = True
         return True
-
-    def _load_codebook(self):
-        # cached in-engine: the codebook is a static index artifact and
-        # re-reading its parquet per question was one of the fixed jobs
-        # dominating IVF latency at the 5 M-chunk tier
-        if self._codebook is None:
-            import numpy as np
-
-            rows = self.spark.read.parquet(self._ann_paths()[1]).collect()
-            self._codebook = np.array(
-                [r.centroid for r in sorted(rows, key=lambda r: r.cell)],
-                dtype=np.float64,
-            )
-        return self._codebook
 
     def index_files(
         self,
@@ -530,78 +525,51 @@ class RagEngine:
         tiny thresholds tests use. Only past the bytes bound does the
         exact count job run (cached)."""
         if self._index_rows is None and self.ann_threshold_rows >= 100_000:
-            try:
-                jpath = self.spark._jvm.org.apache.hadoop.fs.Path(
-                    self.index_path
-                )
-                fs = jpath.getFileSystem(
-                    self.spark._jsc.hadoopConfiguration()
-                )
-                min_row_bytes = max(32, self.dim)
-                bound = self.ann_threshold_rows * min_row_bytes
-                if fs.getContentSummary(jpath).getLength() < bound:
-                    return True
-            except Exception:
-                pass  # non-local FS quirks: fall through to the count
+            st = self._index_fs_stat()  # None on FS quirks: count below
+            if st is not None and st[0] < self.ann_threshold_rows * max(32, self.dim):
+                return True
         return self._count_index_rows() <= self.ann_threshold_rows
 
     def _topk_chunks(
         self, qvec, k: int, payload_cols: tuple[str, ...]
     ) -> DataFrame:
-        """Single-question top-k against the chunk index, routed on
-        index size: the exact TakeOrderedAndProject scan below
-        ``ann_threshold_rows`` (reference behavior, bit-stable for
-        every correctness-tier caller); above it, an IVF probe over the
-        cell-partitioned layout ``index_documents`` persisted — the
-        probe's ``nprobe`` cells resolve driver-side into a PARTITION
-        FILTER, so the scan opens ~nprobe/n_cells of the index's files
-        instead of all of them. That layout is the part a per-question
-        ANN route actually needs at scale: any scheme that re-hashes or
-        re-scans the full index per question (inline LSH banding
-        included — measured 17.9 s vs the exact scan's 3.4 s at the
-        2 M-chunk tier) just races the exact scan and loses; only
-        index-time structure beats it. The probe id −1 cannot collide
-        with any packed chunk id. Output schema matches the exact
-        path: (doc_id, chunk_id, *payload, score)."""
+        """Single-question top-k against the chunk index: ``topk_cosine``
+        on both sides of ``ann_threshold_rows``, with the same raw score
+        and the same (score desc, doc_id, chunk_id) order; only the rows
+        it scans differ. Below the threshold (reference behavior) it
+        scans the whole index. Above it, it scans the cell-partitioned
+        IVF layout that ``_ensure_ann_index`` verified or built: the
+        question's ``ann_nprobe`` nearest cells resolve driver-side (a
+        numpy product against the codebook, no job) and only those cell
+        directories are read, so the scan opens ~nprobe/n_cells of the
+        index's files. The layout co-locates the payload, so hits need
+        no lookup join against the full index (measured at the 2 M-chunk
+        tier: that join cost more than the exact scan). Only
+        index-time structure beats the exact scan at scale: inline LSH
+        banding per question measured 17.9 s against the scan's 3.4 s.
+        Output schema: (doc_id, chunk_id, *payload, score)."""
         if self._below_ann_threshold():
-            return topk_cosine(
-                self.index(),
-                qvec,
-                k=k,
-                id_cols=("doc_id", "chunk_id"),
-                payload_cols=payload_cols,
-            )
-        from .operators.similarity import ivf_knn_pruned, nearest_cells
+            index = self.index()
+        else:
+            from .operators.similarity import nearest_cells
+            from .sources.loaders import read_partitions
 
-        self._ensure_ann_index()
-        probes = self.spark.createDataFrame(
-            [(-1, [float(x) for x in qvec])], "query_id long, qvec array<double>"
-        )
-        codebook = self._load_codebook()
-        hits = ivf_knn_pruned(
-            self.spark,
-            self._ann_paths()[0],
-            probes,
-            codebook,
+            ivf_path = self._ann_paths()[0]
+            cells = sorted(
+                nearest_cells(qvec, self._ensure_ann_index(), self.ann_nprobe)
+            )
+            index = read_partitions(self.spark, ivf_path, "cell", cells)
+            if index is None:  # every probed cell empty: prune the root
+                index = self.spark.read.parquet(ivf_path).filter(
+                    F.col("cell").isin(cells)
+                )
+        return topk_cosine(
+            index,
+            qvec,
             k=k,
-            nprobe=self.ann_nprobe,
-            # the question vector is already driver-side: its cells come
-            # from a numpy matmul, not an Arrow UDF + collect round-trip
-            probe_cells=nearest_cells(qvec, codebook, self.ann_nprobe),
-            # the probe frame is built 4 lines up with exactly one row;
-            # declaring it skips probe_cells' verification count job
-            n_probes=1,
-            index_id="cid",
-            # payload is co-located in the layout, so hits come back
-            # fully materialized from the probed partitions — a lookup
-            # join against the full chunk index would re-scan 2 M rows
-            # to serve 4 of them (measured: that join alone cost more
-            # than the brute-force scan it was meant to avoid)
-            payload_cols=("doc_id", "chunk_id", *payload_cols),
+            id_cols=("doc_id", "chunk_id"),
+            payload_cols=payload_cols,
         )
-        return hits.select(
-            "doc_id", "chunk_id", *payload_cols, "score"
-        ).orderBy(F.desc("score"), F.asc("doc_id"), F.asc("chunk_id"))
 
     def _retrieve_mmr(self, question: str, k: int, fetch_k: int) -> DataFrame:
         # Delegates the λ-scoring to the SAME greedy core the
@@ -785,9 +753,7 @@ class RagEngine:
         ]
         return self.spark.createDataFrame(
             rows, "session_id string, turn int, role string, content string"
-        ).orderBy("turn") if rows else self.spark.createDataFrame(
-            [], "session_id string, turn int, role string, content string"
-        )
+        ).orderBy("turn")
 
     def clear_session(self, session_id: str) -> None:
         with self._sessions_lock:

@@ -390,24 +390,18 @@ def bm25_postings_scores(
     they contain a query term — at retrieval depth this only matters
     for queries matching fewer than ``depth`` documents. The probed
     buckets resolve driver-side (``term_bucket``) into a basePath read
-    of <=|terms| partition directories, like ``ivf_knn_pruned``."""
+    of <=|terms| partition directories (``read_partitions``), like the
+    engine's IVF cell read."""
+    from ..sources.loaders import read_partitions
+
     uterms = list(dict.fromkeys(terms))  # order-preserving unique
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    subdirs = []
-    for b in sorted({term_bucket(t) for t in uterms}):
-        p = f"{path}/bucket={b}"
-        jp = jvm.org.apache.hadoop.fs.Path(p)
-        if jp.getFileSystem(conf).exists(jp):
-            subdirs.append(p)
-    stats = spark.read.parquet(stats_path).select("n", "avgdl")
-    if not subdirs:  # no term has a populated bucket: empty frame
-        return spark.createDataFrame([], f"{id_col} string, bm25 double")
-    post = (
-        spark.read.option("basePath", path)
-        .parquet(*subdirs)
-        .filter(F.col("term").isin(uterms))
+    post = read_partitions(
+        spark, path, "bucket", sorted({term_bucket(t) for t in uterms})
     )
+    stats = spark.read.parquet(stats_path).select("n", "avgdl")
+    if post is None:  # no term has a populated bucket: empty frame
+        return spark.createDataFrame([], f"{id_col} string, bm25 double")
+    post = post.filter(F.col("term").isin(uterms))
     wide = post.groupBy(id_col, "dl").agg(
         *[
             F.max(F.when(F.col("term") == t, F.col("tf"))).alias(f"tf{i}")

@@ -341,8 +341,8 @@ def write_ivf_index(
 ) -> None:
     """Persist the index PARTITIONED BY its IVF cell — the 100 TB
     layout: a probe touching ``nprobe`` of ``n_cells`` cells then reads
-    only those partition directories (PartitionFilters at the scan; see
-    ``ivf_knn_pruned``), so query cost scales with nprobe/n_cells of
+    only those partition directories (``read_partitions``; the engine's
+    IVF route), so query cost scales with nprobe/n_cells of
     the index instead of a full scan. ``payload_cols`` co-locates
     result payload (text, metadata) WITH the vectors, the way every
     vector store does: without it, serving a hit's payload means a
@@ -399,111 +399,6 @@ def append_ivf_index(
         .mode("append")
         .parquet(path)
     )
-
-
-def ivf_knn_pruned(
-    spark,
-    path: str,
-    probes: DataFrame,
-    centroids: np.ndarray,
-    k: int = 4,
-    nprobe: int = 4,
-    query_id: str = "query_id",
-    query_vec: str = "qvec",
-    index_id: str = "vec_id",
-    index_vec: str = "embedding",
-    payload_cols: tuple[str, ...] = (),
-    probe_cells: list[int] | None = None,
-    n_probes: int | None = None,
-) -> DataFrame:
-    """IVF probe over a cell-partitioned index with STATIC partition
-    pruning: the probe set is small by definition, so its ``nprobe``
-    cells are resolved driver-side and pushed as a partition filter —
-    the scan never opens a non-probed cell's files. Same candidate
-    semantics as ``ivf_knn``. ``payload_cols`` (columns co-located in
-    the layout by ``write_ivf_index``) ride the candidate rows through
-    scoring, so a hit's payload comes out of the SAME pruned partitions
-    — no post-hoc full-index lookup join.
-
-    ``probe_cells`` (e.g. from ``nearest_cells`` when the caller holds
-    the probe vectors driver-side) skips the Arrow assignment UDF AND
-    the distinct+collect sizing job — for a single interactive question
-    that removes two of the route's Spark jobs outright. Because the
-    listed cells would apply to EVERY probe row, ``probe_cells`` is
-    ENFORCED single-probe: a multi-probe caller would silently probe
-    the wrong cells for every other probe (recall loss with no error),
-    so the call raises unless the probe set has exactly one row. A
-    caller that already knows its probe count passes ``n_probes`` to
-    skip the verification job (the interactive engine passes 1); pass
-    ``probe_cells=None`` to keep per-probe nprobe semantics."""
-    if probe_cells is not None:
-        if n_probes is None:
-            n_probes = probes.limit(2).count()
-        if n_probes != 1:
-            raise ValueError(
-                "ivf_knn_pruned(probe_cells=...) is single-probe only: the "
-                f"cell list applies to every probe row, but probes has "
-                f"{'>1' if n_probes > 1 else n_probes} row(s) — pass "
-                "probe_cells=None for per-probe nprobe assignment"
-            )
-        probed_cells = sorted(set(probe_cells))
-        prb_c = probes.select(
-            F.col(query_id),
-            F.col(query_vec),
-            F.explode(
-                F.array(*[F.lit(int(c)) for c in probed_cells])
-            ).alias("cell"),
-        )
-    else:
-        assignp = _nearest_cells_udf(centroids, nprobe)
-        prb_c = probes.select(
-            F.col(query_id),
-            F.col(query_vec),
-            F.explode(assignp(F.col(query_vec))).alias("cell"),
-        )
-        probed_cells = sorted(
-            {r.cell for r in prb_c.select("cell").distinct().collect()}
-        )
-    # read ONLY the probed cell directories (basePath keeps the `cell`
-    # partition column): a plain read of the layout root makes the
-    # driver list EVERY cell directory before pruning — measured as the
-    # dominant per-question cost at 2048 cells — while this lists
-    # nprobe of them. Empty cells have no directory; skip them.
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    subdirs = []
-    for c in probed_cells:
-        p = f"{path}/cell={c}"
-        jp = jvm.org.apache.hadoop.fs.Path(p)
-        if jp.getFileSystem(conf).exists(jp):
-            subdirs.append(p)
-    if subdirs:
-        idx = spark.read.option("basePath", path).parquet(*subdirs)
-    else:  # degenerate: every probed cell empty — scan-and-prune root
-        idx = spark.read.parquet(path).filter(
-            F.col("cell").isin(probed_cells)
-        )
-    cand = (
-        idx.join(F.broadcast(prb_c), "cell")
-        .filter(F.col(index_id) != F.col(query_id))
-        .select(
-            query_id,
-            index_id,
-            query_vec,
-            index_vec,
-            # the index vector itself is a legal payload (rerankers need
-            # it); it is already in the select, so don't duplicate it
-            *[c for c in payload_cols if c != index_vec],
-        )
-    )
-    scored = cand.select(
-        query_id,
-        index_id,
-        *payload_cols,
-        F.round(cosine_sim_arrow(F.col(index_vec), F.col(query_vec)), 6).alias("score"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(index_id))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
 def ivf_knn_batch(

@@ -388,6 +388,29 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table)
 
 
+def read_partitions(
+    spark: SparkSession, path: str, col: str, values
+) -> DataFrame | None:
+    """Read only the ``col=value`` directories of a partitioned parquet
+    layout that exist (``basePath`` keeps ``col`` as a column), or None
+    when none does. A plain read of the root makes the driver list EVERY
+    partition directory before pruning — measured as the dominant
+    per-question cost at 2048 IVF cells — while this lists only the
+    probed ones."""
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+    subdirs = [
+        p
+        for p in (f"{path}/{col}={v}" for v in values)
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(p))
+    ]
+    if not subdirs:
+        return None
+    return spark.read.option("basePath", path).parquet(*subdirs)
+
+
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {name: load_table(spark, name, sf_dir) for name in TABLES}
 

@@ -292,7 +292,7 @@ def test_fresh_engine_reuses_on_disk_ann_layout(spark, tmp_path, monkeypatch):
     assert eng.index_documents(docs) > 0
     q = "priority freight shipments delayed by clerk errors"
     built = eng.retrieve(q).collect()
-    assert eng._ann_built and len(built) == eng.k
+    assert eng._codebook is not None and len(built) == eng.k
 
     def boom(*a, **k):
         raise AssertionError("fresh engine rebuilt an already-built layout")
@@ -301,7 +301,7 @@ def test_fresh_engine_reuses_on_disk_ann_layout(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sim, "write_ivf_index", boom)
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     got = fresh.retrieve(q).collect()
-    assert fresh._ann_built
+    assert fresh._codebook is not None
     assert [(r.doc_id, r.chunk_id) for r in got] == [
         (r.doc_id, r.chunk_id) for r in built
     ]
@@ -335,7 +335,7 @@ def test_ann_rebuild_after_corpus_growth_retrains(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sim, "train_centroids_sample", spy)
     eng.retrieve(q).collect()  # first build
     assert eng.index_documents(docs.filter("doc_id % 2 = 1")) > 0
-    assert not eng._ann_built  # corpus change invalidates in-session
+    assert eng._codebook is None  # corpus change invalidates in-session
     eng.retrieve(q).collect()  # fingerprint mismatch => rebuild
     assert len(seen_keys) == 2  # retrained, not replayed from memo/disk
     assert seen_keys[0] != seen_keys[1]  # corpus-versioned cache keys
@@ -455,7 +455,7 @@ def test_fresh_engine_detects_equal_rowcount_corpus_rewrite(
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     got = fresh.retrieve(q).collect()
     assert calls, "fresh engine trusted a stale fingerprint after an equal-rowcount rewrite"
-    assert fresh._ann_built and len(got) == fresh.k
+    assert fresh._codebook is not None and len(got) == fresh.k
 
 
 def test_bounded_corpus_growth_appends_into_ivf_layout(
@@ -496,7 +496,7 @@ def test_bounded_corpus_growth_appends_into_ivf_layout(
         .first()
     )
     got = eng.retrieve(new_chunk.text).collect()
-    assert eng._ann_built
+    assert eng._codebook is not None
     assert got[0].doc_id == new_chunk.doc_id and got[0].chunk_id == 0
 
     # the layout now covers the whole corpus, no duplicates
@@ -507,7 +507,147 @@ def test_bounded_corpus_growth_appends_into_ivf_layout(
     # and a FRESH engine reuses the appended layout (fingerprint matches)
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     fresh.retrieve("delayed clerk errors").collect()
-    assert fresh._ann_built
+    assert fresh._codebook is not None
+
+
+def test_ivf_route_is_topk_over_probed_cells(spark, tmp_path):
+    """Above the threshold, retrieval is ``topk_cosine`` over the IVF
+    layout's probed cells: the same rows and raw scores (``==``) as the
+    operator over the layout filtered to the question's nearest cells,
+    no Python stage, file scans only under probed cell directories,
+    and at most two jobs (the cell read's schema and the top-k scan)."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.functions.embedder import (
+        embed_text,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
+        topk_cosine,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.similarity import (
+        nearest_cells,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"), ann_threshold_rows=10)
+    assert eng.index_documents(load_table(spark, "documents", "/root/testdata/sf0.001")) > 0
+    questions = [
+        "priority freight shipments delayed by clerk errors",
+        "urgent maritime cargo",
+        "customer complaints about late delivery",
+        "supplier part pricing",
+        "orchard harvest yield",
+        "query window merge",
+        "warehouse inventory levels",
+        "returned items and refunds",
+    ]
+    eng.retrieve(questions[0]).collect()  # verifies or builds the layout
+    ivf_path = eng._ann_paths()[0]
+    layout = spark.read.parquet(ivf_path)
+    for q in questions:
+        qvec = embed_text(q, eng.dim)
+        cells = nearest_cells(qvec, eng._codebook, eng.ann_nprobe)
+        want = topk_cosine(
+            layout.filter(F.col("cell").isin(cells)),
+            qvec,
+            k=eng.k,
+            id_cols=("doc_id", "chunk_id"),
+        ).collect()
+        df = eng.retrieve(q)
+        got = df.collect()
+        assert len(got) == eng.k, q
+        assert [(r.doc_id, r.chunk_id, r.score) for r in got] == [
+            (r.doc_id, r.chunk_id, r.score) for r in want
+        ], q
+        assert count_nodes(df, "EvalPython") == 0, q
+        roots = [
+            node.relation().location().rootPaths()
+            for node in plan_nodes(df)
+            if node.getClass().getSimpleName() == "FileSourceScanExec"
+        ]
+        paths = [r.apply(i).toString() for r in roots for i in range(r.size())]
+        assert paths, q
+        for path in paths:
+            m = re.search(r"_ivf/cell=(\d+)$", path)
+            assert m and int(m.group(1)) in cells, (q, path)
+        assert job_stats(spark, lambda: eng.retrieve(q).collect())[0] <= 2, q
+
+
+def _first_retrievals_race(eng, search_type: str, threads: int = 8) -> list:
+    """``threads`` first retrievals on one engine, released together by
+    a barrier; returns the exceptions they raised."""
+    import threading
+
+    barrier, errors = threading.Barrier(threads, timeout=120), []
+
+    def worker():
+        try:
+            barrier.wait()
+            eng.retrieve("priority freight shipments", search_type=search_type).collect()
+        except Exception as e:  # collected, asserted empty by the caller
+            errors.append(e)
+
+    pool = [threading.Thread(target=worker) for _ in range(threads)]
+    for th in pool:
+        th.start()
+    for th in pool:
+        th.join(timeout=600)
+    assert not any(th.is_alive() for th in pool)
+    return errors
+
+
+def _counting(monkeypatch, owner, name: str) -> list:
+    calls, real = [], getattr(owner, name)
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(owner, name, spy)
+    return calls
+
+
+def test_concurrent_first_asks_build_the_ivf_layout_once(spark, tmp_path, monkeypatch):
+    """Eight threads making the first above-threshold retrieval on one
+    engine run one KMeans fit and one layout write, and all succeed:
+    the verify-or-build runs under the engine's layout lock, so no
+    thread overwrites the layout another is reading."""
+    from pyspark.ml.clustering import KMeans
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators import (
+        similarity as sim,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"), ann_threshold_rows=10)
+    assert eng.index_documents(load_table(spark, "documents", "/root/testdata/sf0.001")) > 0
+    fits = _counting(monkeypatch, KMeans, "fit")
+    writes = _counting(monkeypatch, sim, "write_ivf_index")
+    assert _first_retrievals_race(eng, "similarity") == []
+    assert (len(fits), len(writes)) == (1, 1)
+
+
+def test_concurrent_first_hybrid_asks_build_the_postings_once(spark, tmp_path, monkeypatch):
+    """The hybrid twin: eight first hybrid retrievals above the
+    threshold write the posting-list layout once, and all succeed."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators import (
+        ranking as rk,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"), ann_threshold_rows=10)
+    assert eng.index_documents(load_table(spark, "documents", "/root/testdata/sf0.001")) > 0
+    writes = _counting(monkeypatch, rk, "write_postings_index")
+    assert _first_retrievals_race(eng, "hybrid") == []
+    assert len(writes) == 1
 
 
 def test_ask_and_recommend_run_one_job_each(engine):

@@ -6,8 +6,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.similarity import (
-    ivf_knn,
-    ivf_knn_pruned,
     train_centroids_sample,
     write_ivf_index,
 )
@@ -19,28 +17,6 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.
 )
 
 SF = "/root/testdata/sf0.001"
-
-
-def _probes(emb):
-    return emb.filter(F.expr("vec_id % 50 = 0")).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-
-
-def test_partitioned_ivf_prunes_and_matches_inmemory_ivf(spark, tmp_path):
-    emb = load_table(spark, "embeddings", SF)
-    cents = train_centroids_sample(emb, n_cells=8)
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(emb, path, cents)
-
-    pruned = ivf_knn_pruned(spark, path, _probes(emb), cents, k=4, nprobe=2)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # the probe's cells reach the scan as partition filters
-    assert "PartitionFilters: [cell" in plan.replace("PartitionFilters: [isnotnull(cell", "PartitionFilters: [cell")
-
-    # same results as the in-memory operator at the same nprobe
-    mem = ivf_knn(_probes(emb), emb, k=4, nprobe=2, centroids=cents)
-    assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, mem.collect()))
 
 
 def test_partition_pruning_reads_fewer_files(spark, tmp_path):
@@ -188,33 +164,6 @@ def test_quantiles_match_builtin_percentile(spark):
     assert len(got) == len(fracs)
     for q, w in zip(fracs, want):
         assert got[q] == pytest.approx(w, abs=1e-9), q
-
-
-def test_ivf_pruned_probe_cells_is_single_probe_only(spark, tmp_path):
-    """probe_cells applies the SAME cell list to every probe row, so a
-    multi-probe caller would silently probe wrong cells for all but one
-    probe — the call must raise instead (ADVICE r6)."""
-    import pytest
-
-    emb = load_table(spark, "embeddings", SF)
-    cents = train_centroids_sample(emb, n_cells=8)
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(emb, path, cents)
-
-    multi = _probes(emb)  # > 1 probe rows
-    with pytest.raises(ValueError, match="single-probe"):
-        ivf_knn_pruned(spark, path, multi, cents, k=4, probe_cells=[0, 1])
-    # declared count is trusted and also enforced
-    with pytest.raises(ValueError, match="single-probe"):
-        ivf_knn_pruned(
-            spark, path, multi, cents, k=4, probe_cells=[0, 1], n_probes=2
-        )
-    # a genuine single probe with its own cells still works
-    one = multi.limit(1)
-    got = ivf_knn_pruned(
-        spark, path, one, cents, k=4, probe_cells=[0, 1, 2], n_probes=1
-    ).collect()
-    assert all(r.score is not None for r in got)
 
 
 def test_grouped_quantiles_match_numpy_per_group(spark):
