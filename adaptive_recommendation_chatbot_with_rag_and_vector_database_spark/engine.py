@@ -13,12 +13,16 @@ verbs on Spark:
 - ``retrieve`` / ``ask`` — embed question → top-k cosine
   (TakeOrderedAndProject) → order-preserving context stuffing →
   pluggable answerer → refusal/first-line post-processing
-  (AI.py:176-185). Below the ANN threshold an ``ask`` is ONE Spark
-  job, the top-k scan: the answer is cleaned in driver Python
+  (AI.py:176-185). Below the ANN threshold, and up to
+  ``SNAPSHOT_MAX_BYTES`` of index, a warm ``ask`` runs NO Spark job: it
+  scores a driver-held snapshot of the index, bit-identical to the
+  top-k scan, keyed on the index's file listing, which every question
+  re-reads (one Hadoop-FS call), so an append by any writer, an
+  overwrite or a re-creation reloads it (one job). Otherwise an ask is
+  ONE job, the top-k scan. The answer is cleaned in driver Python
   (``postprocess_answer``), and the index schema is read once per
   instance, and kept across appends that do not change it, so no
-  retrieval re-runs parquet schema inference (the file listing stays
-  fresh per call). The query *rewrite hook*
+  retrieval re-runs parquet schema inference. The query *rewrite hook*
   (AI.py:137-139) is pluggable and defaults to pass-through, which is
   also the reference's effective behavior (its history is never
   written — SURVEY §3.2).
@@ -38,16 +42,19 @@ whole pipeline is deterministic and testable.
 
 from __future__ import annotations
 
+import hashlib
 import threading
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, LongType, StructType
 
 from .functions.chunker import DEFAULT_CHUNK_SIZE
 from .functions.embedder import EMBED_DIM, embed_text
+from .functions.vector import cosine_scores, folded_norms
 from .operators.retrieval import (
     DEFAULT_K,
     REFUSAL_PREFIX,
@@ -127,15 +134,59 @@ def extractive_answerer(question: str, context: str) -> str:
     return context.split("\n")[0]
 
 
+def _listing_bytes(listing: tuple) -> int:
+    return sum(length for _, length, _ in listing)
+
+
 def _codebook_array(cb_rows):
     """Persisted codebook rows (``cell``, ``centroid``) → the
     (cells × dim) float64 array, row ``i`` being cell ``i``."""
-    import numpy as np
-
     return np.array(
         [r.centroid for r in sorted(cb_rows, key=lambda r: r.cell)],
         dtype=np.float64,
     )
+
+
+SNAPSHOT_MAX_BYTES = 16 << 20
+"""Index parquet bytes past which ``ask`` keeps the Spark top-k scan
+instead of a driver-held snapshot. The driver holds about 3× the
+parquet bytes (texts as Python strings, vectors widened to float64).
+Measured on a 4-core container at 16.6 MB (51,000 chunk rows of ~300
+characters, the engine's embedder): loading took 1.0 s and raised the
+driver's RSS by 49 MiB held and 89 MiB at peak, against 138 MiB
+before; a warm ask then cost 16 ms of driver CPU (21 ms wall) where
+the scan took 558 ms wall. The cap keeps the snapshot under the size of
+the driver process it lives in; larger indexes stay on the executors."""
+
+
+class _IndexSnapshot(NamedTuple):
+    """The index as of one file listing (``key``), held on the driver:
+    what ``ask`` scores below the ANN threshold instead of running the
+    top-k scan. ``emb`` is None when the index holds a null or
+    wrong-length embedding, which only the Spark route scores."""
+
+    key: tuple
+    doc_id: np.ndarray | None = None
+    chunk_id: np.ndarray | None = None
+    text: list | None = None
+    emb: np.ndarray | None = None  # rows × dim, float64, column-major
+    norms: np.ndarray | None = None
+
+    def topk(self, qvec, k: int) -> list[Row]:
+        """``topk_cosine(index, qvec, k, id_cols=("doc_id", "chunk_id"),
+        payload_cols=("text",)).collect()``: the same rows and scores
+        (``==``), in the same (score desc, doc_id, chunk_id) order."""
+        scores = cosine_scores(self.emb, self.norms, qvec)
+        top = np.lexsort((self.chunk_id, self.doc_id, -scores))[:k]
+        return [
+            Row(doc_id=d, chunk_id=c, text=self.text[i], score=s)
+            for i, d, c, s in zip(
+                top.tolist(),
+                self.doc_id[top].tolist(),
+                self.chunk_id[top].tolist(),
+                scores[top].tolist(),
+            )
+        ]
 
 
 @dataclass
@@ -178,6 +229,10 @@ class RagEngine:
     # a layout matching the current corpus — the per-question
     # short-circuit; an in-session corpus change resets it
     _codebook: object = field(default=None, repr=False)
+    # the index held on the driver for ask below the ANN threshold,
+    # keyed on the file listing it was read at; replaced whole, under
+    # _layout_lock, when a question's listing differs from its key
+    _snapshot: _IndexSnapshot | None = field(default=None, repr=False, compare=False)
 
     # -- index build (S2-S5, F5, F6, F8) -----------------------------------
 
@@ -205,6 +260,7 @@ class RagEngine:
             with self._layout_lock:
                 self._lex_built = False
                 self._codebook = None
+                self._snapshot = None
             # re-read the schema once only if this write created the
             # index or changed a column type: doc_id is the one index
             # column whose type the caller picks (simpleString ignores
@@ -231,20 +287,21 @@ class RagEngine:
     def _lex_paths(self) -> tuple[str, str]:
         return f"{self.index_path}_lex", f"{self.index_path}_lex_stats"
 
-    def _index_fs_stat(self) -> tuple[int, int] | None:
-        """The index parquet's total byte length and the newest
-        modification time among the directory and its direct children
-        (covers in-place file rewrites, which leave the directory's own
-        mtime untouched on local FS). One Hadoop-FS open, driver-side
-        metadata only — no Spark job. None on FS quirks."""
+    def _index_listing(self) -> tuple | None:
+        """The sorted ``(name, length, modificationTime)`` of every child
+        of the index directory: the files a fresh ``spark.read`` would
+        list, from one Hadoop-FS ``listStatus`` on the driver (no Spark
+        job). Any append, overwrite or re-creation changes it. None on
+        FS errors, a missing index included."""
         try:
             jpath = self.spark._jvm.org.apache.hadoop.fs.Path(self.index_path)
             fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            length = fs.getContentSummary(jpath).getLength()
-            mtime = fs.getFileStatus(jpath).getModificationTime()
-            for st in fs.listStatus(jpath):
-                mtime = max(mtime, st.getModificationTime())
-            return length, mtime
+            return tuple(
+                sorted(
+                    (st.getPath().getName(), st.getLen(), st.getModificationTime())
+                    for st in fs.listStatus(jpath)
+                )
+            )
         except Exception:
             return None
 
@@ -253,13 +310,15 @@ class RagEngine:
         stats). Row count alone would let any corpus change that
         preserves row count (an external rewrite of ``index_path``, an
         in-place re-chunk by another process) silently serve a stale
-        layout, so the signature also folds in ``_index_fs_stat``.
-        Degrades to rows-only on FS quirks: the safe direction, since a
-        later successful probe then mismatches and rebuilds."""
-        st = self._index_fs_stat()
-        if st is None:
+        layout, so the signature also folds in a digest of
+        ``_index_listing``. Degrades to rows-only on FS quirks: the safe
+        direction, since a later successful probe then mismatches and
+        rebuilds."""
+        listing = self._index_listing()
+        if listing is None:
             return f"rows={rows}"
-        return f"rows={rows};bytes={st[0]};mtime={st[1]}"
+        digest = hashlib.sha256(repr(listing).encode()).hexdigest()[:32]
+        return f"rows={rows};listing={digest}"
 
     def _ensure_lex_index(self) -> None:
         """Lexical twin of ``_ensure_ann_index``: above the routing
@@ -461,12 +520,15 @@ class RagEngine:
         takes the type of the caller's documents. Inference reads ONE
         file, so an integral ``doc_id`` is read as long: appends of two
         widths leave files that only the wider type reads."""
+        return self.spark.read.schema(self._schema()).parquet(self.index_path)
+
+    def _schema(self) -> StructType:
         if self._index_schema is None:
             schema = self.spark.read.parquet(self.index_path).schema
             if isinstance(schema["doc_id"].dataType, IntegralType):
                 schema["doc_id"].dataType = LongType()
             self._index_schema = schema
-        return self.spark.read.schema(self._index_schema).parquet(self.index_path)
+        return self._index_schema
 
     # -- query path (J1, O1, A1, P1, P2) ------------------------------------
 
@@ -509,7 +571,7 @@ class RagEngine:
             self._index_rows = self.index().count()
         return self._index_rows
 
-    def _below_ann_threshold(self) -> bool:
+    def _below_ann_threshold(self, listing: tuple | None = None) -> bool:
         """Route decision with a free fast path: a driver-side FS size
         listing (no Spark job) proves a reference-scale index is below
         the ANN threshold. The bytes bound SCALES with the configured
@@ -523,15 +585,77 @@ class RagEngine:
         can only ever pick the EXACT route (a misestimate costs a
         scan, never recall), and it is bypassed for the artificially
         tiny thresholds tests use. Only past the bytes bound does the
-        exact count job run (cached)."""
+        exact count job run (cached). ``listing`` is the question's
+        ``_index_listing()`` when the caller has taken it."""
         if self._index_rows is None and self.ann_threshold_rows >= 100_000:
-            st = self._index_fs_stat()  # None on FS quirks: count below
-            if st is not None and st[0] < self.ann_threshold_rows * max(32, self.dim):
+            if listing is None:
+                listing = self._index_listing()  # None on FS quirks: count below
+            if listing is not None and _listing_bytes(listing) < self._ann_bytes_bound():
                 return True
         return self._count_index_rows() <= self.ann_threshold_rows
 
+    def _ann_bytes_bound(self) -> int:
+        return self.ann_threshold_rows * max(32, self.dim)
+
+    def _serving_snapshot(self, listing: tuple | None) -> _IndexSnapshot | None:
+        """The driver-held index for the files ``listing`` names, (re)read
+        when its key differs, or None when the Spark route must serve:
+        no listing, an index whose bytes are not under both the ANN
+        bytes bound (so the snapshot only ever serves the exact route)
+        and ``SNAPSHOT_MAX_BYTES``, or a null or wrong-length embedding.
+        The key is checked again under ``_layout_lock``, so concurrent
+        first asks read the index once."""
+        if listing is None or _listing_bytes(listing) >= min(
+            self._ann_bytes_bound(), SNAPSHOT_MAX_BYTES
+        ):
+            self._snapshot = None  # free what another writer outgrew
+            return None
+        snap = self._snapshot
+        if snap is None or snap.key != listing:
+            with self._layout_lock:
+                snap = self._snapshot
+                if snap is None or snap.key != listing:
+                    snap = self._snapshot = self._load_snapshot(listing)
+        return snap if snap.emb is not None else None
+
+    def _load_snapshot(self, key: tuple) -> _IndexSnapshot:
+        """One read of ``index()`` (one Spark job) into an
+        ``_IndexSnapshot`` keyed ``key``. The listing is taken before the
+        read, so a write landing in between leaves a key that the next
+        question's listing no longer matches: it reloads, never serves
+        stale rows."""
+        import pyarrow.compute as pc
+
+        table = (
+            self.index().select("doc_id", "chunk_id", "text", "embedding").toArrow()
+        )
+        emb = table.column("embedding").combine_chunks()
+        if (
+            emb.null_count
+            or table.column("doc_id").null_count
+            or table.column("chunk_id").null_count
+            or (pc.list_value_length(emb).to_numpy() != self.dim).any()
+        ):
+            return _IndexSnapshot(key)
+        flat = emb.flatten().to_numpy(zero_copy_only=False)
+        mat = np.asfortranarray(flat.reshape(len(emb), self.dim), dtype=np.float64)
+        if not np.isfinite(mat).all():  # a null or non-finite component
+            return _IndexSnapshot(key)
+        return _IndexSnapshot(
+            key,
+            table.column("doc_id").to_numpy(),
+            table.column("chunk_id").to_numpy(),
+            table.column("text").to_pylist(),
+            mat,
+            folded_norms(mat),
+        )
+
     def _topk_chunks(
-        self, qvec, k: int, payload_cols: tuple[str, ...]
+        self,
+        qvec,
+        k: int,
+        payload_cols: tuple[str, ...],
+        below: bool | None = None,
     ) -> DataFrame:
         """Single-question top-k against the chunk index: ``topk_cosine``
         on both sides of ``ann_threshold_rows``, with the same raw score
@@ -547,10 +671,16 @@ class RagEngine:
         tier: that join cost more than the exact scan). Only
         index-time structure beats the exact scan at scale: inline LSH
         banding per question measured 17.9 s against the scan's 3.4 s.
-        Output schema: (doc_id, chunk_id, *payload, score)."""
-        if self._below_ann_threshold():
+        ``below`` is the caller's route decision for this question, taken
+        here when not given. Output schema: (doc_id, chunk_id, *payload,
+        score)."""
+        if below is None:
+            below = self._below_ann_threshold()
+        if below:
             index = self.index()
         else:
+            from pyspark.sql.types import IntegerType, StructField
+
             from .operators.similarity import nearest_cells
             from .sources.loaders import read_partitions
 
@@ -558,10 +688,21 @@ class RagEngine:
             cells = sorted(
                 nearest_cells(qvec, self._ensure_ann_index(), self.ann_nprobe)
             )
-            index = read_partitions(self.spark, ivf_path, "cell", cells)
+            # the layout's columns, declared so the read infers nothing
+            schema = self._schema()
+            layout = StructType(
+                [
+                    StructField("cid", LongType()),
+                    *(schema[c] for c in ("embedding", "doc_id", "chunk_id", "text")),
+                    StructField("cell", IntegerType()),
+                ]
+            )
+            index = read_partitions(self.spark, ivf_path, "cell", cells, layout)
             if index is None:  # every probed cell empty: prune the root
-                index = self.spark.read.parquet(ivf_path).filter(
-                    F.col("cell").isin(cells)
+                index = (
+                    self.spark.read.schema(layout)
+                    .parquet(ivf_path)
+                    .filter(F.col("cell").isin(cells))
                 )
         return topk_cosine(
             index,
@@ -623,7 +764,8 @@ class RagEngine:
         idx = self.index().withColumn(
             "cid", F.concat_ws("#", F.col("doc_id"), F.col("chunk_id"))
         )
-        if self._below_ann_threshold():
+        below = self._below_ann_threshold()  # one route for all three legs
+        if below:
             # reference-scale: tokenize-and-score scan, bit-stable with
             # the historical path and the oracle-checked operator
             bm = bm25_scores(
@@ -644,7 +786,7 @@ class RagEngine:
             )
         qvec = embed_text(question, self.dim)
         # the vector leg routes on index size like every retrieval
-        vs = self._topk_chunks(qvec, depth, payload_cols=()).select(
+        vs = self._topk_chunks(qvec, depth, payload_cols=(), below=below).select(
             F.concat_ws("#", F.col("doc_id"), F.col("chunk_id")).alias("cid"),
             "score",
         )
@@ -657,8 +799,8 @@ class RagEngine:
         # scan; the broadcast-join-against-the-full-scan form read all
         # 2 M rows to serve k of them. Below the threshold the scan is
         # the cheap part and the historical lazy plan stays untouched.
-        if not self._below_ann_threshold():
-            from pyspark.sql.types import DoubleType, StructField, StructType
+        if not below:
+            from pyspark.sql.types import DoubleType, StructField
 
             picked = top.collect()  # k rows by construction
             # doc_id values come back via the cid string; cast the
@@ -707,10 +849,25 @@ class RagEngine:
     def ask(self, question: str, session_id: str | None = None) -> dict:
         """Full reference query path; returns the reference's result
         shape {input, context, answer} (AI.py:173-185) plus the
-        retrieved rows."""
+        retrieved rows, equal to ``retrieve(...).collect()``.
+
+        One ``_index_listing`` decides the route. Below the ANN
+        threshold, and under ``SNAPSHOT_MAX_BYTES``, the question is
+        scored against the driver-held ``_IndexSnapshot`` of the files
+        that listing names, bit-identical to ``topk_cosine``: a warm
+        ask runs no Spark job, and the first ask after the listing
+        changes pays one, the reload. Otherwise it is the top-k scan,
+        one job."""
         history = self.history(session_id) if session_id else []
         effective = self.rewrite(question, history)
-        retrieved = self.retrieve(effective).collect()  # k rows, k≈4
+        listing = self._index_listing()
+        qvec = embed_text(effective, self.dim)
+        snap = self._serving_snapshot(listing)
+        if snap is not None:
+            retrieved = snap.topk(qvec, self.k)
+        else:  # k rows, k≈4
+            below = self._below_ann_threshold(listing)
+            retrieved = self._topk_chunks(qvec, self.k, ("text",), below).collect()
         context = "\n\n".join(r.text for r in retrieved)
         answer = postprocess_answer(self.answerer(effective, context))
         if session_id is not None:
@@ -747,13 +904,23 @@ class RagEngine:
             return list(self._sessions.get(session_id, []))
 
     def history_df(self, session_id: str) -> DataFrame:
-        rows = [
-            (session_id, i, m["role"], m["content"])
-            for i, m in enumerate(self.history(session_id))
-        ]
+        """The session's log in turn order as an Arrow-backed local
+        frame: building it runs no Spark job (a list input or an
+        ``orderBy`` each cost jobs)."""
+        import pandas as pd
+
+        log = self.history(session_id)
+        pdf = pd.DataFrame(
+            {
+                "session_id": [session_id] * len(log),
+                "turn": pd.Series(range(len(log)), dtype="int32"),
+                "role": [m["role"] for m in log],
+                "content": [m["content"] for m in log],
+            }
+        )
         return self.spark.createDataFrame(
-            rows, "session_id string, turn int, role string, content string"
-        ).orderBy("turn")
+            pdf, "session_id string, turn int, role string, content string"
+        )
 
     def clear_session(self, session_id: str) -> None:
         with self._sessions_lock:

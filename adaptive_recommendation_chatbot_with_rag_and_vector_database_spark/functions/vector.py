@@ -14,7 +14,6 @@ match the DuckDB oracle's double-precision list arithmetic.
 from __future__ import annotations
 
 import functools
-import math
 
 import numpy as np
 from pyspark.sql import Column
@@ -67,7 +66,40 @@ def query_literals(vec) -> tuple[Column, Column]:
     """``vec`` as ONE array literal and its driver-folded norm, aliased
     ``QUERY_VEC`` and ``QUERY_NORM``."""
     q = np.asarray(vec, dtype=np.float64)
-    acc = functools.reduce(lambda s, x: s + x * x, q.tolist(), 0.0)
-    # math.sqrt is IEEE correctly-rounded, same as the JVM's Math.sqrt
-    # behind F.sqrt, NOT acc**0.5, whose pow() rounding is unspecified
-    return F.lit(q).alias(QUERY_VEC), F.lit(math.sqrt(acc)).alias(QUERY_NORM)
+    return F.lit(q).alias(QUERY_VEC), F.lit(query_norm(q)).alias(QUERY_NORM)
+
+
+# The driver-side twins below reproduce the Column forms' float order
+# exactly: a left fold over the dimensions starting at 0.0, as
+# ``aggregate(zip_with)`` runs it. BLAS (``mat @ q``) and
+# ``np.linalg.norm`` pick their own summation order (on a row-major
+# matrix they reorder it, and the last bits differ); the explicit fold
+# fixes the order whatever the memory layout or BLAS build.
+
+
+def folded_norms(mat: np.ndarray) -> np.ndarray:
+    """Row norms of a float64 ``(rows × dim)`` array in :func:`l2_norm`'s
+    order: ``acc + x*x`` per dimension, then sqrt (IEEE correctly
+    rounded in numpy, as the JVM's Math.sqrt behind ``F.sqrt``)."""
+    acc = np.zeros(len(mat))
+    for j in range(mat.shape[1]):
+        acc = acc + mat[:, j] * mat[:, j]
+    return np.sqrt(acc)
+
+
+def query_norm(vec) -> float:
+    """The norm :func:`query_literals` binds as ``QUERY_NORM``."""
+    return float(folded_norms(np.asarray(vec, dtype=np.float64)[None, :])[0])
+
+
+def cosine_scores(mat: np.ndarray, norms: np.ndarray, vec) -> np.ndarray:
+    """:func:`cosine_to_query` over the rows of ``mat`` on the driver,
+    bit-identical to the Column form: ``norms`` is ``folded_norms(mat)``,
+    the dot is :func:`dot`'s fold, and a row whose ``norm × query norm``
+    is not positive scores 0.0."""
+    q = np.asarray(vec, dtype=np.float64)
+    dots = np.zeros(len(mat))
+    for j in range(mat.shape[1]):
+        dots = dots + mat[:, j] * q[j]
+    denom = norms * query_norm(q)
+    return np.divide(dots, denom, out=np.zeros_like(dots), where=denom > 0.0)

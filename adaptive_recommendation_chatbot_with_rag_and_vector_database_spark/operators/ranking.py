@@ -363,8 +363,9 @@ def write_postings_index(
         "corpus_rows",
         F.lit(-1 if fingerprint is None else int(fingerprint)).cast("long"),
     ).withColumn(
-        # full corpus signature (rows+bytes+mtime, engine._corpus_signature)
-        # for reuse checks robust to equal-row-count corpus rewrites
+        # full corpus signature (rows + a file-listing digest,
+        # engine._corpus_signature) for reuse checks robust to
+        # equal-row-count corpus rewrites
         "corpus_sig",
         F.lit(signature).cast("string"),
     )

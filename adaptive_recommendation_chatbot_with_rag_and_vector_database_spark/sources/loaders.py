@@ -14,6 +14,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -389,14 +390,15 @@ def write_bucketed(
 
 
 def read_partitions(
-    spark: SparkSession, path: str, col: str, values
+    spark: SparkSession, path: str, col: str, values, schema: StructType | None = None
 ) -> DataFrame | None:
     """Read only the ``col=value`` directories of a partitioned parquet
     layout that exist (``basePath`` keeps ``col`` as a column), or None
     when none does. A plain read of the root makes the driver list EVERY
     partition directory before pruning — measured as the dominant
     per-question cost at 2048 IVF cells — while this lists only the
-    probed ones."""
+    probed ones. A ``schema`` (``col`` included) spares the read its
+    footer-inference job."""
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
         spark._jsc.hadoopConfiguration()
@@ -408,7 +410,10 @@ def read_partitions(
     ]
     if not subdirs:
         return None
-    return spark.read.option("basePath", path).parquet(*subdirs)
+    reader = spark.read.option("basePath", path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*subdirs)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

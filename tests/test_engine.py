@@ -14,7 +14,7 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operator
     REFUSAL_PREFIX,
 )
 
-from conftest import count_nodes, file_scans, job_stats, plan_nodes
+from conftest import SF_DIR, count_nodes, file_scans, job_stats, plan_nodes
 
 
 @pytest.fixture()
@@ -418,8 +418,8 @@ def test_fresh_engine_detects_equal_rowcount_corpus_rewrite(
 ):
     """An external rewrite of index_path that PRESERVES the row count
     must still fail the reuse fingerprint: the corpus signature folds
-    the index parquet's byte length and newest child mtime in beside
-    the row count (ADVICE r7), so a fresh engine retrains instead of
+    a digest of the index's file listing in beside the row count
+    (ADVICE r7), so a fresh engine retrains instead of
     silently serving a stale IVF layout."""
     import shutil
 
@@ -515,7 +515,8 @@ def test_ivf_route_is_topk_over_probed_cells(spark, tmp_path):
     layout's probed cells: the same rows and raw scores (``==``) as the
     operator over the layout filtered to the question's nearest cells,
     no Python stage, file scans only under probed cell directories,
-    and at most two jobs (the cell read's schema and the top-k scan)."""
+    and one job: the cell read is given the layout's schema, so only
+    the top-k scan runs."""
     import re
 
     from pyspark.sql import functions as F
@@ -574,7 +575,7 @@ def test_ivf_route_is_topk_over_probed_cells(spark, tmp_path):
         for path in paths:
             m = re.search(r"_ivf/cell=(\d+)$", path)
             assert m and int(m.group(1)) in cells, (q, path)
-        assert job_stats(spark, lambda: eng.retrieve(q).collect())[0] <= 2, q
+        assert job_stats(spark, lambda: eng.retrieve(q).collect())[0] == 1, q
 
 
 def _first_retrievals_race(eng, search_type: str, threads: int = 8) -> list:
@@ -650,15 +651,16 @@ def test_concurrent_first_hybrid_asks_build_the_postings_once(spark, tmp_path, m
     assert len(writes) == 1
 
 
-def test_ask_and_recommend_run_one_job_each(engine):
-    """Below the ANN threshold an ask is the top-k scan and nothing
-    else: the answer is cleaned in driver Python and the index schema
-    is not re-inferred per retrieval."""
-    engine.ask("warm-up: reads the index schema once", session_id="jobs")
-    assert job_stats(engine.spark, lambda: engine.ask("order priorities?"))[0] == 1
+def test_warm_ask_runs_no_job_and_recommend_one(engine):
+    """Below the ANN threshold a warm ask scores the driver-held
+    snapshot and runs no Spark job: the answer is cleaned in driver
+    Python. ``recommend`` returns a lazy plan, so it stays the top-k
+    scan, with the index schema not re-inferred."""
+    engine.ask("warm-up: reads the schema and the snapshot", session_id="jobs")
+    assert job_stats(engine.spark, lambda: engine.ask("order priorities?"))[0] == 0
     assert (
         job_stats(engine.spark, lambda: engine.ask("orchard?", session_id="jobs"))[0]
-        == 1
+        == 0
     )
     assert job_stats(engine.spark, lambda: engine.recommend("jobs").collect())[0] == 1
 
@@ -703,13 +705,176 @@ def test_index_documents_resets_cached_schema(engine, spark, tmp_path):
 
 def test_ask_after_append_runs_one_job(engine, spark):
     """An append that keeps the index's column types keeps the cached
-    schema, so the next ask is the top-k scan alone."""
+    schema, so the next ask's one job is the snapshot reload, with no
+    schema inference."""
     engine.ask("warm-up: caches the index schema")
     docs = spark.createDataFrame(
         [(42, "Kettles whistle when the water boils.")], "doc_id long, text string"
     )
     assert engine.index_documents(docs) > 0
     assert job_stats(spark, lambda: engine.ask("when does the kettle whistle?"))[0] == 1
+
+
+def _topk(eng, q):
+    """The Spark route's answer to ``eng.ask(q)["retrieved"]``."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.functions.embedder import (
+        embed_text,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
+        topk_cosine,
+    )
+
+    return topk_cosine(
+        eng.index(),
+        embed_text(q, eng.dim),
+        k=eng.k,
+        id_cols=("doc_id", "chunk_id"),
+        payload_cols=("text",),
+    ).collect()
+
+
+def test_snapshot_ask_equals_topk_cosine(spark, tmp_path):
+    """A snapshot ask returns the rows and scores (``==``) of
+    ``topk_cosine`` over the index: 500 seeded documents plus
+    hand-written rows that copy one embedding (score ties broken by
+    doc_id, then chunk_id) and a zero vector, over 60 questions with
+    ``""`` among them, then every row's score for three of them. Scores
+    are a left fold per dimension, so a BLAS ``emb @ q`` fails this."""
+    import random
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"), k=6)
+    assert eng.index_documents(load_table(spark, "documents", SF_DIR)) > 0
+    src = eng.index().orderBy("doc_id", "chunk_id").first()
+    extra = [
+        (9002, 1, "copy b", src.embedding, "h1"),
+        (9002, 0, "copy a", src.embedding, "h2"),
+        (9001, 3, "copy c", src.embedding, "h3"),
+        (-1, 0, "zero", [0.0] * eng.dim, "h4"),
+    ]
+    spark.createDataFrame(extra, eng.index().schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(eng.index_path)
+    rng = random.Random(11)
+    words = " ".join(r.text for r in eng.index().limit(40).collect()).split()
+    questions = ["", src.text, "copy a", "zero"] + [
+        " ".join(rng.sample(words, rng.randint(1, 6))) for _ in range(56)
+    ]
+    for q in questions:
+        got = eng.ask(q)["retrieved"]
+        assert got == _topk(eng, q), q
+    assert eng._snapshot is not None and eng._snapshot.emb is not None
+    top = [(r.doc_id, r.chunk_id) for r in eng.ask(src.text)["retrieved"]]
+    assert [key for key in top if key[0] > 9000] == [(9001, 3), (9002, 0), (9002, 1)]
+    eng.k = eng.index().count()
+    for q in ("", src.text, "zero"):
+        got = eng.ask(q)["retrieved"]
+        assert len(got) == eng.k and got == _topk(eng, q), q
+
+
+def test_snapshot_sees_overwrite_and_recreation(engine, spark, tmp_path):
+    """The snapshot is keyed on the index's file listing: an in-place
+    overwrite by another writer, and an index deleted and built again,
+    are both seen by the next ask."""
+    import shutil
+
+    def other_index(name: str, doc_id: int, text: str) -> str:
+        path = str(tmp_path / name)
+        docs = spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
+        assert RagEngine(spark, index_path=path).index_documents(docs) > 0
+        return path
+
+    engine.ask("warm-up: loads the snapshot")
+    text = "Glaciers carve valleys over thousands of years."
+    staged = other_index("staged", 71, text)
+    spark.read.parquet(staged).write.mode("overwrite").parquet(engine.index_path)
+    out = engine.ask(text)["retrieved"]
+    assert [r.doc_id for r in out] == [71]
+    assert out == _topk(engine, text)
+
+    shutil.rmtree(engine.index_path)
+    text = "Volcanic ash enriches the surrounding soil."
+    other = RagEngine(spark, index_path=engine.index_path)
+    docs = spark.createDataFrame([(72, text)], "doc_id long, text string")
+    assert other.index_documents(docs) > 0
+    out = engine.ask(text)["retrieved"]
+    assert [r.doc_id for r in out] == [72]
+    assert out == _topk(engine, text)
+
+
+@pytest.mark.parametrize("embedding", [None, [0.5, 0.5, 0.5]])
+def test_bad_embedding_keeps_the_spark_route(engine, spark, embedding):
+    """An index holding a null or wrong-length embedding is not served
+    from the driver: asks stay the top-k scan, one job each."""
+    engine.ask("warm-up: loads the snapshot")
+    spark.createDataFrame(
+        [(80, 0, "odd row", embedding, "h")], engine.index().schema
+    ).write.mode("append").parquet(engine.index_path)
+    q = "priority freight"
+    assert engine.ask(q)["retrieved"] == engine.retrieve(q).collect()
+    assert engine._snapshot.emb is None
+    assert job_stats(spark, lambda: engine.ask("orchard?"))[0] == 1
+
+
+def test_concurrent_first_asks_load_the_snapshot_once(engine, monkeypatch):
+    """Eight threads making the first ask on one engine, released
+    together, read the index into the snapshot once, and each gets the
+    answer a serial ask gets."""
+    import threading
+
+    loads = _counting(monkeypatch, RagEngine, "_load_snapshot")
+    questions = [f"freight orchard question {i}" for i in range(8)]
+    barrier, got = threading.Barrier(8, timeout=120), {}
+
+    def worker(q):
+        barrier.wait()
+        got[q] = engine.ask(q)["retrieved"]
+
+    pool = [threading.Thread(target=worker, args=(q,)) for q in questions]
+    for th in pool:
+        th.start()
+    for th in pool:
+        th.join(timeout=300)
+    assert len(loads) == 1
+    assert got == {q: engine.ask(q)["retrieved"] for q in questions}
+    assert len(loads) == 1
+
+
+def test_each_ask_lists_the_index_once(engine, monkeypatch):
+    """One file listing decides a question's route: one per plain ask
+    and one per hybrid retrieval, whose three legs share the decision."""
+    engine.ask("warm-up")
+    listings = _counting(monkeypatch, RagEngine, "_index_listing")
+    engine.ask("order priorities?")
+    assert len(listings) == 1
+    engine.retrieve("priority freight shipments", search_type="hybrid").collect()
+    assert len(listings) == 2
+
+
+def test_history_df_is_a_local_frame_in_turn_order(engine):
+    """``history_df`` runs no Spark job to build, keeps turn order, and
+    an empty session keeps the schema."""
+    sid = "hist"
+    for q in ("first question", "second question", "third question"):
+        engine.ask(q, session_id=sid)
+    jobs, _ = job_stats(engine.spark, lambda: engine.history_df(sid))
+    assert jobs == 0
+    rows = engine.history_df(sid).collect()
+    assert [r.turn for r in rows] == list(range(6))
+    assert [r.content for r in rows][::2] == [
+        "first question",
+        "second question",
+        "third question",
+    ]
+    assert [r.role for r in rows] == ["user", "assistant"] * 3
+    empty = engine.history_df("never-seen")
+    assert empty.schema.simpleString() == (
+        "struct<session_id:string,turn:int,role:string,content:string>"
+    )
+    assert empty.collect() == []
 
 
 def test_small_append_runs_one_python_task_and_writes_one_file(spark, tmp_path):
