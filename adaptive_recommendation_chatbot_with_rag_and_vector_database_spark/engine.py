@@ -14,15 +14,19 @@ verbs on Spark:
   (TakeOrderedAndProject) → order-preserving context stuffing →
   pluggable answerer → refusal/first-line post-processing
   (AI.py:176-185). Below the ANN threshold, and up to
-  ``SNAPSHOT_MAX_BYTES`` of index, a warm ``ask`` runs NO Spark job: it
-  scores a driver-held snapshot of the index, bit-identical to the
-  top-k scan, keyed on the index's file listing, which every question
-  re-reads (one Hadoop-FS call), so an append by any writer, an
-  overwrite or a re-creation reloads it (one job). Otherwise an ask is
-  ONE job, the top-k scan. The answer is cleaned in driver Python
-  (``postprocess_answer``), and the index schema is read once per
-  instance, and kept across appends that do not change it, so no
-  retrieval re-runs parquet schema inference. The query *rewrite hook*
+  ``SNAPSHOT_MAX_BYTES`` of index, ``ask`` and ``recommend`` run NO
+  Spark job: they score a driver-held snapshot of the index,
+  bit-identical to the top-k scan, keyed on the index's data-file
+  listing, which every question re-reads (one Hadoop-FS call). The
+  driver reads the parquet files the snapshot does not hold itself
+  (Hadoop-FS copy, pyarrow read): after an append by any writer only
+  the added files, after an overwrite or a re-creation all of them.
+  Otherwise a question is ONE job, the top-k scan. The answer is
+  cleaned in driver Python (``postprocess_answer``), and the index
+  schema is read once per instance, and kept across appends that do
+  not change it, so no retrieval re-runs parquet schema inference.
+  Result frames the driver computed are Arrow-backed local frames,
+  which run no job to build or collect. The query *rewrite hook*
   (AI.py:137-139) is pluggable and defaults to pass-through, which is
   also the reference's effective behavior (its history is never
   written — SURVEY §3.2).
@@ -43,6 +47,8 @@ whole pipeline is deterministic and testable.
 from __future__ import annotations
 
 import hashlib
+import os
+import tempfile
 import threading
 from dataclasses import dataclass, field
 from typing import Callable, NamedTuple
@@ -50,7 +56,7 @@ from typing import Callable, NamedTuple
 import numpy as np
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType, LongType, StructType
+from pyspark.sql.types import DoubleType, IntegralType, LongType, StructField, StructType
 
 from .functions.chunker import DEFAULT_CHUNK_SIZE
 from .functions.embedder import EMBED_DIM, embed_text
@@ -138,6 +144,63 @@ def _listing_bytes(listing: tuple) -> int:
     return sum(length for _, length, _ in listing)
 
 
+def _is_data_file(name: str) -> bool:
+    """Whether Spark's file index reads the index child ``name``: not
+    ``HadoopFSUtils.shouldFilterOutPathName`` (a leading ``_`` outside a
+    ``k=v`` partition name, a leading ``.``, a ``._COPYING_`` suffix), nor
+    the ``_metadata`` summaries that rule keeps and the index then drops
+    as non-data. So ``_SUCCESS`` and checksum files are not data."""
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+_SNAPSHOT_COLS = ("doc_id", "chunk_id", "text", "embedding")
+
+
+def _snapshot_arrays(table, schema: StructType, dim: int) -> tuple | None:
+    """One index file's ``_SNAPSHOT_COLS`` as numpy (doc ids, chunk ids,
+    texts as a list, rows × dim embeddings as stored), or None when
+    ``index()`` would not read a column as ``schema`` types it (a
+    signed integral column reads as a long one), or a value is null,
+    wrong-length or non-finite."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    cols = {}
+    for name in _SNAPSHOT_COLS:
+        col, want = table.column(name), schema[name].dataType
+        if isinstance(want, LongType) and pa.types.is_signed_integer(col.type):
+            col = col.cast(pa.int64())
+        elif from_arrow_type(col.type).simpleString() != want.simpleString():
+            return None
+        if col.null_count:
+            return None
+        cols[name] = col.combine_chunks()
+    emb = cols["embedding"]
+    if (pc.list_value_length(emb).to_numpy() != dim).any():
+        return None
+    mat = emb.flatten().to_numpy(zero_copy_only=False).reshape(len(emb), dim)
+    if not np.isfinite(mat).all():  # a null or non-finite component
+        return None
+    return (
+        cols["doc_id"].to_numpy(zero_copy_only=False),
+        cols["chunk_id"].to_numpy(zero_copy_only=False),
+        cols["text"].to_pylist(),
+        mat,
+    )
+
+
+def _stack_f64(blocks) -> np.ndarray:
+    """``blocks`` (each rows × dim) stacked into one column-major
+    float64 array, with no intermediate copy."""
+    out = np.empty((sum(len(b) for b in blocks), blocks[0].shape[1]), order="F")
+    return np.concatenate(blocks, out=out)
+
+
 def _codebook_array(cb_rows):
     """Persisted codebook rows (``cell``, ``centroid``) → the
     (cells × dim) float64 array, row ``i`` being cell ``i``."""
@@ -148,22 +211,27 @@ def _codebook_array(cb_rows):
 
 
 SNAPSHOT_MAX_BYTES = 16 << 20
-"""Index parquet bytes past which ``ask`` keeps the Spark top-k scan
-instead of a driver-held snapshot. The driver holds about 3× the
-parquet bytes (texts as Python strings, vectors widened to float64).
-Measured on a 4-core container at 16.6 MB (51,000 chunk rows of ~300
-characters, the engine's embedder): loading took 1.0 s and raised the
-driver's RSS by 49 MiB held and 89 MiB at peak, against 138 MiB
-before; a warm ask then cost 16 ms of driver CPU (21 ms wall) where
-the scan took 558 ms wall. The cap keeps the snapshot under the size of
-the driver process it lives in; larger indexes stay on the executors."""
+"""Index parquet bytes past which ``ask`` and ``recommend`` keep the
+Spark top-k scan instead of a driver-held snapshot. The driver holds
+about 3× the parquet bytes (texts as Python strings, vectors widened to
+float64). Measured on a 4-core container at 16.6 MB (45,500 chunk rows
+of 300 characters, the engine's embedder, 4 files), against 139 MiB of
+driver RSS before: the driver-side read took 0.13-0.16 s wall and
+0.09-0.15 s of CPU (the Spark load it replaced: 0.60-0.66 s, 0.87-1.13
+s), and raised the RSS by 107-118 MiB at its peak, 53 MiB held once
+pyarrow's allocator returned the freed read buffers (Spark load: 79 and
+46 MiB). A warm ask then cost 7-10 ms of CPU and wall, where the scan
+took 386-598 ms wall. The cap keeps the snapshot under the size of the
+driver process it lives in; larger indexes stay on the executors."""
 
 
 class _IndexSnapshot(NamedTuple):
-    """The index as of one file listing (``key``), held on the driver:
-    what ``ask`` scores below the ANN threshold instead of running the
-    top-k scan. ``emb`` is None when the index holds a null or
-    wrong-length embedding, which only the Spark route scores."""
+    """The index as of one data-file listing (``key``), held on the
+    driver: what ``ask`` and ``recommend`` score below the ANN threshold
+    instead of running the top-k scan. ``emb`` is None when a file holds
+    a null, wrong-length or non-finite value, or a column type that
+    ``index()`` does not read (``_snapshot_arrays``), which only the
+    Spark route serves."""
 
     key: tuple
     doc_id: np.ndarray | None = None
@@ -233,6 +301,9 @@ class RagEngine:
     # keyed on the file listing it was read at; replaced whole, under
     # _layout_lock, when a question's listing differs from its key
     _snapshot: _IndexSnapshot | None = field(default=None, repr=False, compare=False)
+    # (Hadoop Path class, the index's Path, its FileSystem): each py4j
+    # package lookup of the class is several gateway round trips
+    _fs_handles: tuple | None = field(default=None, repr=False, compare=False)
 
     # -- index build (S2-S5, F5, F6, F8) -----------------------------------
 
@@ -257,21 +328,21 @@ class RagEngine:
         # layout state makes the first post-change retrieval re-verify
         # (fingerprint probe) or rebuild instead
         if n_new > 0:
-            with self._layout_lock:
-                self._lex_built = False
-                self._codebook = None
-                self._snapshot = None
             # re-read the schema once only if this write created the
             # index or changed a column type: doc_id is the one index
             # column whose type the caller picks (simpleString ignores
             # nullability)
             cached = self._index_schema
-            if cached is not None and (
+            retype = cached is not None and (
                 created
                 or cached["doc_id"].dataType.simpleString()
                 != docs.schema["doc_id"].dataType.simpleString()
-            ):
-                self._index_schema = None
+            )
+            with self._layout_lock:
+                self._lex_built = False
+                self._codebook = None
+                if retype:  # the snapshot's arrays were typed by that schema
+                    self._index_schema = self._snapshot = None
         return n_new
 
     @staticmethod
@@ -287,21 +358,29 @@ class RagEngine:
     def _lex_paths(self) -> tuple[str, str]:
         return f"{self.index_path}_lex", f"{self.index_path}_lex_stats"
 
+    def _index_fs(self) -> tuple:
+        if self._fs_handles is None:
+            path_cls = self.spark._jvm.org.apache.hadoop.fs.Path
+            root = path_cls(self.index_path)
+            fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            self._fs_handles = (path_cls, root, fs)
+        return self._fs_handles
+
     def _index_listing(self) -> tuple | None:
-        """The sorted ``(name, length, modificationTime)`` of every child
-        of the index directory: the files a fresh ``spark.read`` would
-        list, from one Hadoop-FS ``listStatus`` on the driver (no Spark
-        job). Any append, overwrite or re-creation changes it. None on
-        FS errors, a missing index included."""
+        """The sorted ``(name, length, modificationTime)`` of every data
+        file of the index directory: the files a fresh ``spark.read``
+        would read (``_is_data_file``), from one Hadoop-FS
+        ``listStatus`` on the driver (no Spark job). Any append,
+        overwrite or re-creation changes it; a ``_SUCCESS`` rewrite
+        alone does not. None on FS errors, a missing index included."""
         try:
-            jpath = self.spark._jvm.org.apache.hadoop.fs.Path(self.index_path)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            return tuple(
-                sorted(
-                    (st.getPath().getName(), st.getLen(), st.getModificationTime())
-                    for st in fs.listStatus(jpath)
-                )
-            )
+            _, root, fs = self._index_fs()
+            entries = []
+            for st in fs.listStatus(root):
+                name = st.getPath().getName()
+                if _is_data_file(name):
+                    entries.append((name, st.getLen(), st.getModificationTime()))
+            return tuple(sorted(entries))
         except Exception:
             return None
 
@@ -602,9 +681,10 @@ class RagEngine:
         when its key differs, or None when the Spark route must serve:
         no listing, an index whose bytes are not under both the ANN
         bytes bound (so the snapshot only ever serves the exact route)
-        and ``SNAPSHOT_MAX_BYTES``, or a null or wrong-length embedding.
-        The key is checked again under ``_layout_lock``, so concurrent
-        first asks read the index once."""
+        and ``SNAPSHOT_MAX_BYTES``, an index ``_snapshot_arrays`` does not
+        serve, or an FS error while reading it. The key is checked again
+        under ``_layout_lock``, so concurrent first asks read the index
+        once."""
         if listing is None or _listing_bytes(listing) >= min(
             self._ann_bytes_bound(), SNAPSHOT_MAX_BYTES
         ):
@@ -615,40 +695,73 @@ class RagEngine:
             with self._layout_lock:
                 snap = self._snapshot
                 if snap is None or snap.key != listing:
-                    snap = self._snapshot = self._load_snapshot(listing)
+                    snap = self._load_snapshot(listing, snap)
+                    if snap is None:  # an FS error: keep nothing partial
+                        return None
+                    self._snapshot = snap
         return snap if snap.emb is not None else None
 
-    def _load_snapshot(self, key: tuple) -> _IndexSnapshot:
-        """One read of ``index()`` (one Spark job) into an
-        ``_IndexSnapshot`` keyed ``key``. The listing is taken before the
-        read, so a write landing in between leaves a key that the next
-        question's listing no longer matches: it reloads, never serves
-        stale rows."""
-        import pyarrow.compute as pc
-
-        table = (
-            self.index().select("doc_id", "chunk_id", "text", "embedding").toArrow()
-        )
-        emb = table.column("embedding").combine_chunks()
-        if (
-            emb.null_count
-            or table.column("doc_id").null_count
-            or table.column("chunk_id").null_count
-            or (pc.list_value_length(emb).to_numpy() != self.dim).any()
-        ):
+    def _load_snapshot(
+        self, key: tuple, held: _IndexSnapshot | None
+    ) -> _IndexSnapshot | None:
+        """The ``_IndexSnapshot`` keyed ``key``, read on the driver with
+        no Spark job: when every entry of ``held`` is still listed
+        unchanged, only the added files are read and their rows
+        appended to ``held``'s; otherwise (an overwrite, a re-creation,
+        a compaction) every file is. None when a read fails (say, of a
+        file that a concurrent overwrite removed) or ``key`` names no
+        file. The listing is taken before the read, so a write landing
+        in between leaves a key that the next question's listing no
+        longer matches: it reloads, never serves stale rows."""
+        schema = self._schema()
+        kept = set(held.key) if held is not None else set()
+        if not kept <= set(key):
+            held, kept = None, set()
+        elif held is not None and held.emb is None:
+            return _IndexSnapshot(key)  # the unserved file is still there
+        parts = self._read_index_files([e[0] for e in key if e not in kept], schema)
+        if not parts:  # a failed read, or no data file: hold nothing
+            return None
+        if any(p is None for p in parts):
             return _IndexSnapshot(key)
-        flat = emb.flatten().to_numpy(zero_copy_only=False)
-        mat = np.asfortranarray(flat.reshape(len(emb), self.dim), dtype=np.float64)
-        if not np.isfinite(mat).all():  # a null or non-finite component
-            return _IndexSnapshot(key)
+        doc_id, chunk_id, texts, mats = zip(*parts)
+        mat = _stack_f64(mats)
+        norms = folded_norms(mat)
+        if held is not None:
+            doc_id, chunk_id = (held.doc_id, *doc_id), (held.chunk_id, *chunk_id)
+            texts = (held.text, *texts)
+            mat = _stack_f64((held.emb, mat))
+            norms = np.concatenate((held.norms, norms))
         return _IndexSnapshot(
             key,
-            table.column("doc_id").to_numpy(),
-            table.column("chunk_id").to_numpy(),
-            table.column("text").to_pylist(),
+            np.concatenate(doc_id),
+            np.concatenate(chunk_id),
+            [t for part in texts for t in part],
             mat,
-            folded_norms(mat),
+            norms,
         )
+
+    def _read_index_files(self, names: list[str], schema: StructType) -> list | None:
+        """``_snapshot_arrays`` of each named index file: the index's
+        Hadoop FS copies the file into a local temporary directory, the
+        one reader for every FS the Spark route reads, and pyarrow reads
+        the copy. None when a copy or a read fails."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from py4j.protocol import Py4JError
+
+        path_cls, root, fs = self._index_fs()
+        parts = []
+        with tempfile.TemporaryDirectory() as tmp:
+            for name in names:
+                dst = os.path.join(tmp, name)
+                try:
+                    fs.copyToLocalFile(False, path_cls(root, name), path_cls(dst), True)
+                    table = pq.read_table(dst, columns=list(_SNAPSHOT_COLS))
+                except (Py4JError, OSError, pa.ArrowException):
+                    return None
+                parts.append(_snapshot_arrays(table, schema, self.dim))
+        return parts
 
     def _topk_chunks(
         self,
@@ -679,7 +792,7 @@ class RagEngine:
         if below:
             index = self.index()
         else:
-            from pyspark.sql.types import IntegerType, StructField
+            from pyspark.sql.types import IntegerType
 
             from .operators.similarity import nearest_cells
             from .sources.loaders import read_partitions
@@ -738,9 +851,9 @@ class RagEngine:
 
         rel = {key: float(r.score) for key, r in cand.items()}
         picked = [cand[key] for key, _, _ in mmr_greedy(rel, cos, k)]
-        return self.spark.createDataFrame(
+        return self._local_frame(
             [(r.doc_id, r.chunk_id, r.text, float(r.score)) for r in picked],
-            "doc_id long, chunk_id int, text string, score double",
+            self._rows_schema(),
         )
 
     def _retrieve_hybrid(self, question: str, k: int, depth: int = 50) -> DataFrame:
@@ -800,8 +913,6 @@ class RagEngine:
         # 2 M rows to serve k of them. Below the threshold the scan is
         # the cheap part and the historical lazy plan stays untouched.
         if not below:
-            from pyspark.sql.types import DoubleType, StructField
-
             picked = top.collect()  # k rows by construction
             # doc_id values come back via the cid string; cast the
             # LITERALS to the index's own doc_id type (constant-folded,
@@ -821,15 +932,7 @@ class RagEngine:
                 .select("cid", "doc_id", "chunk_id", "text")
                 .collect()
             )
-            schema = StructType(
-                [
-                    idx.schema["doc_id"],
-                    idx.schema["chunk_id"],
-                    idx.schema["text"],
-                    StructField("score", DoubleType()),
-                ]
-            )
-            return self.spark.createDataFrame(
+            return self._local_frame(
                 sorted(
                     (
                         (r.doc_id, r.chunk_id, r.text, scores[r.cid])
@@ -837,7 +940,7 @@ class RagEngine:
                     ),
                     key=lambda t: (-t[3], t[0], t[1]),
                 ),
-                schema,
+                self._rows_schema(),
             )
         return (
             F.broadcast(top)
@@ -854,10 +957,10 @@ class RagEngine:
         One ``_index_listing`` decides the route. Below the ANN
         threshold, and under ``SNAPSHOT_MAX_BYTES``, the question is
         scored against the driver-held ``_IndexSnapshot`` of the files
-        that listing names, bit-identical to ``topk_cosine``: a warm
-        ask runs no Spark job, and the first ask after the listing
-        changes pays one, the reload. Otherwise it is the top-k scan,
-        one job."""
+        that listing names, bit-identical to ``topk_cosine``: no Spark
+        job, also on the first ask after the listing changes, which
+        reads the files the snapshot does not hold on the driver.
+        Otherwise it is the top-k scan, one job."""
         history = self.history(session_id) if session_id else []
         effective = self.rewrite(question, history)
         listing = self._index_listing()
@@ -892,10 +995,39 @@ class RagEngine:
         query and runs the same top-k path, so recommendations shift
         as the conversation does. An empty/unknown session degrades to
         the empty-profile embedding (deterministic, still k rows) —
-        the cold-start behavior a recommender needs defined."""
+        the cold-start behavior a recommender needs defined.
+
+        Routed like ``ask``: when the snapshot serves, the result is a
+        local frame of its rows, and building and collecting it run no
+        Spark job; otherwise it is ``retrieve``'s lazy top-k scan."""
         history = self.history(session_id)
         profile = " ".join(m["content"] for m in history if m["role"] == "user")
-        return self.retrieve(profile, k)
+        k = k or self.k
+        listing = self._index_listing()
+        qvec = embed_text(profile, self.dim)
+        snap = self._serving_snapshot(listing)
+        if snap is not None:
+            return self._local_frame(snap.topk(qvec, k), self._rows_schema())
+        return self._topk_chunks(qvec, k, ("text",), self._below_ann_threshold(listing))
+
+    def _rows_schema(self) -> StructType:
+        """The schema of a retrieval result: the index's ``doc_id``,
+        ``chunk_id`` and ``text``, then ``score double``."""
+        schema = self._schema()
+        return StructType(
+            [schema[c] for c in ("doc_id", "chunk_id", "text")]
+            + [StructField("score", DoubleType())]
+        )
+
+    def _local_frame(self, rows: list, schema: StructType) -> DataFrame:
+        """``rows`` (tuples in ``schema``'s column order) as an
+        Arrow-backed local frame: building and collecting it run no Spark
+        job, where a list input runs a Python stage of
+        ``defaultParallelism`` tasks."""
+        import pandas as pd
+
+        pdf = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
+        return self.spark.createDataFrame(pdf, schema)
 
     # -- session lifecycle (T1 batch view; AI.py:155-161,232-235) -----------
 
@@ -904,22 +1036,16 @@ class RagEngine:
             return list(self._sessions.get(session_id, []))
 
     def history_df(self, session_id: str) -> DataFrame:
-        """The session's log in turn order as an Arrow-backed local
-        frame: building it runs no Spark job (a list input or an
-        ``orderBy`` each cost jobs)."""
-        import pandas as pd
-
-        log = self.history(session_id)
-        pdf = pd.DataFrame(
-            {
-                "session_id": [session_id] * len(log),
-                "turn": pd.Series(range(len(log)), dtype="int32"),
-                "role": [m["role"] for m in log],
-                "content": [m["content"] for m in log],
-            }
-        )
-        return self.spark.createDataFrame(
-            pdf, "session_id string, turn int, role string, content string"
+        """The session's log in turn order as a local frame (an
+        ``orderBy`` would cost jobs)."""
+        return self._local_frame(
+            [
+                (session_id, turn, m["role"], m["content"])
+                for turn, m in enumerate(self.history(session_id))
+            ],
+            StructType.fromDDL(
+                "session_id string, turn int, role string, content string"
+            ),
         )
 
     def clear_session(self, session_id: str) -> None:

@@ -651,18 +651,39 @@ def test_concurrent_first_hybrid_asks_build_the_postings_once(spark, tmp_path, m
     assert len(writes) == 1
 
 
-def test_warm_ask_runs_no_job_and_recommend_one(engine):
+def test_warm_ask_and_recommend_run_no_job(engine):
     """Below the ANN threshold a warm ask scores the driver-held
     snapshot and runs no Spark job: the answer is cleaned in driver
-    Python. ``recommend`` returns a lazy plan, so it stays the top-k
-    scan, with the index schema not re-inferred."""
+    Python. ``recommend`` scores the same snapshot and returns a local
+    frame, which runs no job to build or collect; its rows are the
+    top-k scan's."""
     engine.ask("warm-up: reads the schema and the snapshot", session_id="jobs")
     assert job_stats(engine.spark, lambda: engine.ask("order priorities?"))[0] == 0
     assert (
         job_stats(engine.spark, lambda: engine.ask("orchard?", session_id="jobs"))[0]
         == 0
     )
-    assert job_stats(engine.spark, lambda: engine.recommend("jobs").collect())[0] == 1
+    assert job_stats(engine.spark, lambda: engine.recommend("jobs").collect())[0] == 0
+    history = engine.history("jobs")
+    profile = " ".join(m["content"] for m in history if m["role"] == "user")
+    rec = engine.recommend("jobs")
+    assert rec.schema.simpleString() == (
+        "struct<doc_id:bigint,chunk_id:int,text:string,score:double>"
+    )
+    assert rec.collect() == _topk(engine, profile)
+    assert engine.recommend("jobs", k=1).collect() == _topk(engine, profile)[:1]
+
+
+def test_mmr_below_threshold_runs_one_job(engine):
+    """MMR below the ANN threshold is the candidate scan, one job: the
+    greedy runs on the driver and its result is a local frame."""
+    engine.ask("warm-up: reads the schema")
+
+    def mmr():
+        return engine.retrieve("priority freight shipments", k=2, search_type="mmr")
+
+    assert job_stats(engine.spark, mmr)[0] == 1
+    assert job_stats(engine.spark, mmr().collect)[0] == 0
 
 
 def test_index_sees_rows_another_engine_appended(engine, spark):
@@ -703,16 +724,20 @@ def test_index_documents_resets_cached_schema(engine, spark, tmp_path):
     assert engine._index_schema is None
 
 
-def test_ask_after_append_runs_one_job(engine, spark):
-    """An append that keeps the index's column types keeps the cached
-    schema, so the next ask's one job is the snapshot reload, with no
-    schema inference."""
+def test_ask_after_append_runs_no_job(engine, spark):
+    """The ask after an append reads the added file on the driver and
+    runs no job. The append kept the index's column types, so it kept
+    the cached schema: the top-k scan stays one job, with no schema
+    inference."""
     engine.ask("warm-up: caches the index schema")
     docs = spark.createDataFrame(
         [(42, "Kettles whistle when the water boils.")], "doc_id long, text string"
     )
     assert engine.index_documents(docs) > 0
-    assert job_stats(spark, lambda: engine.ask("when does the kettle whistle?"))[0] == 1
+    q = "when does the kettle whistle?"
+    assert job_stats(spark, lambda: engine.ask(q))[0] == 0
+    assert engine.ask(q)["retrieved"] == _topk(engine, q)
+    assert job_stats(spark, lambda: engine.retrieve(q).collect())[0] == 1
 
 
 def _topk(eng, q):
@@ -778,31 +803,29 @@ def test_snapshot_ask_equals_topk_cosine(spark, tmp_path):
 def test_snapshot_sees_overwrite_and_recreation(engine, spark, tmp_path):
     """The snapshot is keyed on the index's file listing: an in-place
     overwrite by another writer, and an index deleted and built again,
-    are both seen by the next ask."""
+    are both seen by the next ask, which re-reads every data file on
+    the driver, with no job."""
     import shutil
 
-    def other_index(name: str, doc_id: int, text: str) -> str:
-        path = str(tmp_path / name)
-        docs = spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
-        assert RagEngine(spark, index_path=path).index_documents(docs) > 0
-        return path
-
     engine.ask("warm-up: loads the snapshot")
+    spy = _spy_fs(engine)
     text = "Glaciers carve valleys over thousands of years."
-    staged = other_index("staged", 71, text)
+    staged = str(tmp_path / "staged")
+    _append(spark, staged, 71, text)
     spark.read.parquet(staged).write.mode("overwrite").parquet(engine.index_path)
-    out = engine.ask(text)["retrieved"]
-    assert [r.doc_id for r in out] == [71]
+    jobs, out = _ask_jobs(engine, text)
+    assert jobs == 0 and [r.doc_id for r in out] == [71]
     assert out == _topk(engine, text)
+    assert spy.copied == _data_files(engine)
 
     shutil.rmtree(engine.index_path)
     text = "Volcanic ash enriches the surrounding soil."
-    other = RagEngine(spark, index_path=engine.index_path)
-    docs = spark.createDataFrame([(72, text)], "doc_id long, text string")
-    assert other.index_documents(docs) > 0
-    out = engine.ask(text)["retrieved"]
-    assert [r.doc_id for r in out] == [72]
+    _append(spark, engine.index_path, 72, text)
+    spy.copied.clear()
+    jobs, out = _ask_jobs(engine, text)
+    assert jobs == 0 and [r.doc_id for r in out] == [72]
     assert out == _topk(engine, text)
+    assert spy.copied == _data_files(engine)
 
 
 @pytest.mark.parametrize("embedding", [None, [0.5, 0.5, 0.5]])
@@ -852,6 +875,141 @@ def test_each_ask_lists_the_index_once(engine, monkeypatch):
     assert len(listings) == 1
     engine.retrieve("priority freight shipments", search_type="hybrid").collect()
     assert len(listings) == 2
+
+
+class _FsSpy:
+    """Stands in for the index's Hadoop FileSystem: lists through the
+    real one, and records the name of each file copied to the driver.
+    When ``fail`` is set, each copy asks the real one for a file that is
+    not there, as after an overwrite removed it, and raises its error."""
+
+    def __init__(self, fs):
+        self.fs, self.fail, self.copied = fs, False, []
+
+    def listStatus(self, path):
+        return self.fs.listStatus(path)
+
+    def copyToLocalFile(self, del_src, src, dst, raw):
+        if self.fail:
+            src = src.suffix(".gone")
+        else:
+            self.copied.append(src.getName())
+        return self.fs.copyToLocalFile(del_src, src, dst, raw)
+
+
+def _spy_fs(eng) -> _FsSpy:
+    path_cls, root, fs = eng._index_fs()
+    spy = _FsSpy(fs)
+    eng._fs_handles = (path_cls, root, spy)
+    return spy
+
+
+def _data_files(eng) -> list[str]:
+    return [name for name, _, _ in eng._index_listing()]
+
+
+def _append(spark, path: str, doc_id: int, text: str, id_type: str = "long"):
+    """Append one document to the index at ``path`` through another
+    engine, so the asking engine keeps its cached schema."""
+    docs = spark.createDataFrame([(doc_id, text)], f"doc_id {id_type}, text string")
+    assert RagEngine(spark, index_path=path).index_documents(docs) > 0
+
+
+def _ask_jobs(eng, q) -> tuple[int, list]:
+    got = []
+    jobs, _ = job_stats(eng.spark, lambda: got.append(eng.ask(q)["retrieved"]))
+    return jobs, got[0]
+
+
+def test_ask_after_any_append_reads_the_added_file_on_the_driver(engine, spark):
+    """The ask after this engine's append, and after another engine's,
+    runs no job, copies only the added file and returns the top-k
+    scan's rows."""
+    engine.ask("warm-up: loads the snapshot")
+    spy = _spy_fs(engine)
+    docs = spark.createDataFrame(
+        [(43, "Kites climb on steady coastal winds.")], "doc_id long, text string"
+    )
+    for append in (
+        lambda: engine.index_documents(docs),
+        lambda: _append(spark, engine.index_path, 44, "Lanterns glow along the pier."),
+    ):
+        before = _data_files(engine)
+        append()
+        added = sorted(set(_data_files(engine)) - set(before))
+        spy.copied.clear()
+        for q in ("kites on coastal winds", "lanterns on the pier"):
+            jobs, got = _ask_jobs(engine, q)
+            assert jobs == 0 and got == _topk(engine, q), q
+        assert spy.copied == added
+
+
+def test_success_marker_rewrite_reloads_nothing(engine, monkeypatch):
+    """The snapshot's key holds data files only: rewriting ``_SUCCESS``
+    leaves it unchanged, so the next ask reads no file."""
+    import os
+    import time
+
+    engine.ask("warm-up: loads the snapshot")
+    loads = _counting(monkeypatch, RagEngine, "_load_snapshot")
+    marker = os.path.join(engine.index_path, "_SUCCESS")
+    assert os.path.exists(marker)
+    with open(marker, "w") as f:
+        f.write("rewritten")
+    later = time.time() + 60
+    os.utime(marker, (later, later))
+    q = "orchard yield"
+    jobs, got = _ask_jobs(engine, q)
+    assert jobs == 0 and got == _topk(engine, q)
+    assert loads == []
+
+
+def test_snapshot_serves_int_and_long_doc_id_files(engine, spark):
+    """Files that wrote ``doc_id`` as int and as long are one index
+    (``index()`` reads both as long); the snapshot serves it with int64
+    ids and the top-k scan's rows."""
+    import numpy as np
+
+    engine.ask("warm-up: loads the snapshot")
+    text = "Beavers build dams from branches and mud."
+    _append(spark, engine.index_path, 45, text, id_type="int")
+    jobs, got = _ask_jobs(engine, text)
+    assert jobs == 0 and got == _topk(engine, text)
+    assert got[0].doc_id == 45
+    assert engine._snapshot.emb is not None
+    assert engine._snapshot.doc_id.dtype == np.int64
+
+
+def test_failed_copy_answers_on_the_spark_route(engine, spark):
+    """A copy that raises (a file an overwrite removed mid-read) leaves
+    the question to the top-k scan and keeps no partial snapshot; once
+    copies work again, the held snapshot is refreshed with the added
+    file."""
+    engine.ask("warm-up: loads the snapshot")
+    held, before = engine._snapshot, _data_files(engine)
+    spy = _spy_fs(engine)
+    _append(spark, engine.index_path, 46, "Owls hunt silently at dusk.")
+    spy.fail = True
+    q = "owls hunting at dusk"
+    jobs, got = _ask_jobs(engine, q)
+    assert jobs == 1 and got == _topk(engine, q)
+    assert engine._snapshot is held
+    spy.fail = False
+    jobs, got = _ask_jobs(engine, q)
+    assert jobs == 0 and got == _topk(engine, q)
+    assert spy.copied == sorted(set(_data_files(engine)) - set(before))
+
+
+def test_data_file_filter_agrees_with_spark(spark):
+    """``_is_data_file`` keeps exactly the names Spark's file listing
+    keeps (``HadoopFSUtils.shouldFilterOutPathName``)."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.engine import (
+        _is_data_file,
+    )
+
+    utils = spark._jvm.org.apache.spark.util.HadoopFSUtils
+    for name in ("_SUCCESS", ".x.crc", "part-0.parquet", "x._COPYING_", "_a=1"):
+        assert _is_data_file(name) == (not utils.shouldFilterOutPathName(name)), name
 
 
 def test_history_df_is_a_local_frame_in_turn_order(engine):
