@@ -9,7 +9,12 @@ verbs on Spark:
 - ``index_documents`` / ``index_files`` — chunk → embed → parquet
   index, content-hash incremental (the reference's LRU memoization at
   AI.py:89-96, storage-backed — re-indexing unchanged content embeds
-  nothing).
+  nothing). An input whose plan statistics predict one Python task is
+  appended on the driver: it reads the input (one job), skips the keys
+  and reuses the vectors of the driver-held snapshot below, and writes
+  one file (one job), with no Python worker. Larger inputs, inputs
+  without plan statistics, and indexes the snapshot does not serve
+  take ``write_index_incremental``.
 - ``retrieve`` / ``ask`` — embed question → top-k cosine
   (TakeOrderedAndProject) → order-preserving context stuffing →
   pluggable answerer → refusal/first-line post-processing
@@ -56,15 +61,23 @@ from typing import Callable, NamedTuple
 import numpy as np
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegralType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    DataType,
+    DoubleType,
+    IntegralType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from .functions.chunker import DEFAULT_CHUNK_SIZE
-from .functions.embedder import EMBED_DIM, embed_text
+from .functions.chunker import DEFAULT_CHUNK_SIZE, split_text_recursive
+from .functions.embedder import EMBED_DIM, embed_text, embed_texts
 from .functions.vector import cosine_scores, folded_norms
 from .operators.retrieval import (
     DEFAULT_K,
     REFUSAL_PREFIX,
-    _path_exists,
+    _python_tasks,
     postprocess_answer,
     # unused here; perfbench's traced run wraps this module attribute
     postprocess_answers,  # noqa: F401
@@ -157,15 +170,24 @@ def _is_data_file(name: str) -> bool:
     )
 
 
-_SNAPSHOT_COLS = ("doc_id", "chunk_id", "text", "embedding")
+_SNAPSHOT_COLS = ("doc_id", "chunk_id", "text", "embedding", "content_hash")
+
+
+def _key_kind(dtype: DataType) -> str | None:
+    """The kind of a ``doc_id`` type whose Python values match as the
+    Spark route's join keys do: any integral type (compared by value)
+    or the binary-collated string. None for any other type."""
+    if isinstance(dtype, IntegralType):
+        return "integral"
+    return "string" if dtype.simpleString() == "string" else None
 
 
 def _snapshot_arrays(table, schema: StructType, dim: int) -> tuple | None:
     """One index file's ``_SNAPSHOT_COLS`` as numpy (doc ids, chunk ids,
-    texts as a list, rows × dim embeddings as stored), or None when
-    ``index()`` would not read a column as ``schema`` types it (a
-    signed integral column reads as a long one), or a value is null,
-    wrong-length or non-finite."""
+    texts as a list, rows × dim embeddings as stored, content hashes as
+    a list), or None when ``index()`` would not read a column as
+    ``schema`` types it (a signed integral column reads as a long one),
+    or a value is null, wrong-length or non-finite."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.pandas.types import from_arrow_type
@@ -191,6 +213,7 @@ def _snapshot_arrays(table, schema: StructType, dim: int) -> tuple | None:
         cols["chunk_id"].to_numpy(zero_copy_only=False),
         cols["text"].to_pylist(),
         mat,
+        cols["content_hash"].to_pylist(),
     )
 
 
@@ -211,27 +234,33 @@ def _codebook_array(cb_rows):
 
 
 SNAPSHOT_MAX_BYTES = 16 << 20
-"""Index parquet bytes past which ``ask`` and ``recommend`` keep the
-Spark top-k scan instead of a driver-held snapshot. The driver holds
-about 3× the parquet bytes (texts as Python strings, vectors widened to
-float64). Measured on a 4-core container at 16.6 MB (45,500 chunk rows
-of 300 characters, the engine's embedder, 4 files), against 139 MiB of
-driver RSS before: the driver-side read took 0.13-0.16 s wall and
-0.09-0.15 s of CPU (the Spark load it replaced: 0.60-0.66 s, 0.87-1.13
-s), and raised the RSS by 107-118 MiB at its peak, 53 MiB held once
-pyarrow's allocator returned the freed read buffers (Spark load: 79 and
-46 MiB). A warm ask then cost 7-10 ms of CPU and wall, where the scan
-took 386-598 ms wall. The cap keeps the snapshot under the size of the
-driver process it lives in; larger indexes stay on the executors."""
+"""Index parquet bytes past which ``ask``, ``recommend``, MMR and the
+driver-side append keep the Spark route instead of a driver-held
+snapshot. The driver holds about 3× the parquet bytes (texts and content
+hashes as Python strings, vectors widened to float64). Measured on a
+4-core container at 16.6 MB (45,500 chunk rows of 300 characters, the
+engine's embedder, 4 files), against 139 MiB of driver RSS before: the
+driver-side read took 0.13-0.16 s wall and 0.09-0.15 s of CPU (the
+Spark load it replaced: 0.60-0.66 s, 0.87-1.13 s), and raised the RSS
+by 107-118 MiB at its peak, 53 MiB held once pyarrow's allocator
+returned the freed read buffers (Spark load: 79 and 46 MiB). A warm ask
+then cost 7-10 ms of CPU and wall, where the scan took 386-598 ms wall.
+Holding the content hashes too, re-measured at 16.3 MB (45,500 rows, 4
+files, 116 MiB before), 2 runs against 2 without them: the read took
+0.18-0.19 s (0.15-0.16 s), RSS rose by 123-137 MiB at its peak
+(119-120) and 57 MiB stayed held (51). The cap keeps the snapshot under
+the size of the driver process it lives in; larger indexes stay on the
+executors."""
 
 
 class _IndexSnapshot(NamedTuple):
     """The index as of one data-file listing (``key``), held on the
-    driver: what ``ask`` and ``recommend`` score below the ANN threshold
-    instead of running the top-k scan. ``emb`` is None when a file holds
-    a null, wrong-length or non-finite value, or a column type that
-    ``index()`` does not read (``_snapshot_arrays``), which only the
-    Spark route serves."""
+    driver: what ``ask``, ``recommend`` and MMR score below the ANN
+    threshold instead of running the top-k scan, and the keys and
+    vectors a driver-side append reuses (``content_hash``, beside the
+    ids). ``emb`` is None when a file holds a null, wrong-length or
+    non-finite value, or a column type that ``index()`` does not read
+    (``_snapshot_arrays``), which only the Spark route serves."""
 
     key: tuple
     doc_id: np.ndarray | None = None
@@ -239,22 +268,29 @@ class _IndexSnapshot(NamedTuple):
     text: list | None = None
     emb: np.ndarray | None = None  # rows × dim, float64, column-major
     norms: np.ndarray | None = None
+    content_hash: list | None = None
 
-    def topk(self, qvec, k: int) -> list[Row]:
+    def topk(self, qvec, k: int, embedding: bool = False) -> list[Row]:
         """``topk_cosine(index, qvec, k, id_cols=("doc_id", "chunk_id"),
         payload_cols=("text",)).collect()``: the same rows and scores
-        (``==``), in the same (score desc, doc_id, chunk_id) order."""
+        (``==``), in the same (score desc, doc_id, chunk_id) order. With
+        ``embedding``, each row carries its vector after ``text``, equal
+        to the collected ``array<float>``, as with ``payload_cols=("text",
+        "embedding")``."""
         scores = cosine_scores(self.emb, self.norms, qvec)
         top = np.lexsort((self.chunk_id, self.doc_id, -scores))[:k]
-        return [
-            Row(doc_id=d, chunk_id=c, text=self.text[i], score=s)
-            for i, d, c, s in zip(
-                top.tolist(),
-                self.doc_id[top].tolist(),
-                self.chunk_id[top].tolist(),
-                scores[top].tolist(),
-            )
-        ]
+        rows = []
+        for i, d, c, s in zip(
+            top.tolist(),
+            self.doc_id[top].tolist(),
+            self.chunk_id[top].tolist(),
+            scores[top].tolist(),
+        ):
+            payload = {"text": self.text[i]}
+            if embedding:
+                payload["embedding"] = self.emb[i].tolist()
+            rows.append(Row(doc_id=d, chunk_id=c, **payload, score=s))
+        return rows
 
 
 @dataclass
@@ -315,13 +351,20 @@ class RagEngine:
         index-BUILD-time costs paid once per corpus change (the
         reference's Pinecone upsert builds its ANN structures on write,
         AI.py:89-96) — deferred to the first retrieval after a change,
-        so a sub-threshold build never pays even the routing count."""
+        so a sub-threshold build never pays even the routing count.
+
+        An input whose plan statistics predict one Python task is
+        appended on the driver (``_append_on_driver``): two jobs, and no
+        Python worker. Any other input is ``write_index_incremental``."""
         self._index_rows = None  # size changed: re-count lazily
-        created = not _path_exists(self.spark, self.index_path)
-        schema = None if created else self._index_schema  # no index to read yet
-        n_new = write_index_incremental(
-            docs, self.index_path, self.chunk_size, self.dim, schema=schema
-        )
+        _, root, fs = self._index_fs()
+        created = not fs.exists(root)
+        n_new = self._append_on_driver(docs, created)
+        if n_new is None:
+            schema = None if created else self._index_schema  # no index to read yet
+            n_new = write_index_incremental(
+                docs, self.index_path, self.chunk_size, self.dim, schema=schema
+            )
         # defer the ANN build to the first retrieval: deciding the route
         # needs a row count, and paying that job here would tax every
         # sub-threshold (reference-scale) index build; clearing the
@@ -344,6 +387,76 @@ class RagEngine:
                 if retype:  # the snapshot's arrays were typed by that schema
                     self._index_schema = self._snapshot = None
         return n_new
+
+    def _append_on_driver(self, docs: DataFrame, created: bool) -> int | None:
+        """``write_index_incremental(docs, ...)`` run on the driver: the
+        same count, and the same rows, for an input whose plan statistics
+        give it one Python task (``_python_tasks``). The driver reads the
+        input (one job), runs the Spark plan's chunker and embedder on
+        it, skips the ``(doc_id, content_hash)`` keys the serving snapshot
+        holds, reuses the snapshot's vector of any hash it holds, and
+        writes the rows as one file (one job). Batch duplicates are kept,
+        as the Spark route anti-joins against the index only. None,
+        having written nothing, when the Spark route must serve: a wider
+        input, a ``text`` that is not a string, a ``doc_id`` whose values
+        do not match as join keys do in Python (``_key_kind``) or of
+        another kind than the index's, or an index that the snapshot
+        does not serve."""
+        types = {f.name: f.dataType for f in docs.schema}
+        kind = "doc_id" in types and _key_kind(types["doc_id"])
+        if not (
+            kind
+            and isinstance(types.get("text"), StringType)
+            and _python_tasks(docs) == 1
+        ):
+            return None
+        snap = None
+        if not created:
+            snap = self._serving_snapshot(self._index_listing())
+            if snap is None or _key_kind(self._schema()["doc_id"].dataType) != kind:
+                return None
+        table = docs.select("doc_id", "text").toArrow()
+        rows = []  # (doc_id, chunk_id, chunk, content_hash)
+        for doc_id, text in zip(*(c.to_pylist() for c in table.columns)):
+            if not isinstance(text, str):
+                continue
+            for chunk_id, chunk in enumerate(split_text_recursive(text, self.chunk_size)):
+                # Spark's sha2(text, 256)
+                digest = hashlib.sha256(chunk.encode("utf-8")).hexdigest()
+                rows.append((doc_id, chunk_id, chunk, digest))
+        known = {}  # content_hash → the stored vector
+        if snap is not None:
+            hashes = {r[3] for r in rows}
+            held = [i for i, h in enumerate(snap.content_hash) if h in hashes]
+            ids = snap.doc_id[held].tolist()
+            keys = {(d, snap.content_hash[i]) for d, i in zip(ids, held)}
+            rows = [r for r in rows if (r[0], r[3]) not in keys]
+            # float64 widened from the stored float32: narrowing is exact
+            known = {snap.content_hash[i]: snap.emb[i].astype(np.float32) for i in held}
+        if not rows:
+            return 0
+        import pandas as pd
+
+        doc_id, chunk_id, text, content_hash = zip(*rows)
+        unknown = [t for t, h in zip(text, content_hash) if h not in known]
+        fresh = iter(embed_texts(unknown, self.dim))
+        pdf = pd.DataFrame(
+            {
+                "doc_id": pd.Series(doc_id, dtype=object),  # a null stays None
+                "chunk_id": chunk_id,
+                "text": text,
+                "embedding": [known[h] if h in known else next(fresh) for h in content_hash],
+                "content_hash": content_hash,
+            }
+        )
+        ddl = "chunk_id int, text string, embedding array<float>, content_hash string"
+        schema = StructType(
+            [StructField("doc_id", types["doc_id"]), *StructType.fromDDL(ddl)]
+        )
+        self.spark.createDataFrame(pdf, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(self.index_path)
+        return len(rows)
 
     @staticmethod
     def _cid():
@@ -724,12 +837,12 @@ class RagEngine:
             return None
         if any(p is None for p in parts):
             return _IndexSnapshot(key)
-        doc_id, chunk_id, texts, mats = zip(*parts)
+        doc_id, chunk_id, texts, mats, hashes = zip(*parts)
         mat = _stack_f64(mats)
         norms = folded_norms(mat)
         if held is not None:
             doc_id, chunk_id = (held.doc_id, *doc_id), (held.chunk_id, *chunk_id)
-            texts = (held.text, *texts)
+            texts, hashes = (held.text, *texts), (held.content_hash, *hashes)
             mat = _stack_f64((held.emb, mat))
             norms = np.concatenate((held.norms, norms))
         return _IndexSnapshot(
@@ -739,6 +852,7 @@ class RagEngine:
             [t for part in texts for t in part],
             mat,
             norms,
+            [h for part in hashes for h in part],
         )
 
     def _read_index_files(self, names: list[str], schema: StructType) -> list | None:
@@ -831,16 +945,19 @@ class RagEngine:
         # engine's retriever cannot drift from the hash-verified
         # algebra. Collecting fetch_k (≈8) candidate rows is bounded by
         # construction; the distributed form for query batches is
-        # q_mmr_rerank.
+        # q_mmr_rerank. Routed like ask: the snapshot, when it serves,
+        # gives the candidates with no job.
         from .operators.ranking import mmr_greedy
 
+        listing = self._index_listing()
         qvec = embed_text(question, self.dim)
-        cand = {
-            (r.doc_id, r.chunk_id): r
-            for r in self._topk_chunks(
-                qvec, fetch_k, payload_cols=("text", "embedding")
-            ).collect()
-        }
+        snap = self._serving_snapshot(listing)
+        if snap is not None:  # its vectors equal the collected ones
+            rows = snap.topk(qvec, fetch_k, embedding=True)
+        else:
+            below = self._below_ann_threshold(listing)
+            rows = self._topk_chunks(qvec, fetch_k, ("text", "embedding"), below).collect()
+        cand = {(r.doc_id, r.chunk_id): r for r in rows}
 
         def cos(a, b) -> float:
             ea, eb = cand[a].embedding, cand[b].embedding

@@ -15,8 +15,9 @@ Spark shapes, chosen for the 100 TB posture:
   each document once, anti-joins the index's ``(doc_id, content_hash)``
   keys, left-joins the stored embedding per ``content_hash``, and one
   Python stage passes a stored vector through or embeds the text — so
-  identical content is never re-embedded, and an append is two Python
-  stages over two index scans.
+  identical content is never re-embedded, and an append on this route
+  is two Python stages over two index scans. ``RagEngine`` does the
+  work of a one-task append on the driver instead (engine.py).
 - Both size their Python stages from plan statistics
   (``_python_width``): each Python task has a fixed CPU cost, so an
   input runs as one task per ~200 KB of parquet, up to
@@ -59,7 +60,9 @@ PY_TASK_CPU_S = 0.3
 reused workers re-read ``pyspark.zip`` per task, ~0.05 s since ``session``
 stamps that re-read (README, "Engine index path"). Kept at 0.3 on purpose:
 a lower value gives the ``chat`` set-up build's 61.5 KB input width 2, not
-1, and every ask scans the extra index files; a refit is its own A/B."""
+1, and every ask scans the extra index files; a refit is its own A/B. An
+input of one task is also where ``RagEngine.index_documents`` switches to
+its driver route (no Python worker), so a refit moves that bound too."""
 
 PY_CPU_S_PER_BYTE = 1.5e-6
 """Chunk + embed CPU per byte of the input's parquet size: 0.5-0.7 µs
@@ -68,17 +71,23 @@ size. Only the ratio to ``PY_TASK_CPU_S`` sets a width: one task pays
 off per ~200 KB of parquet input."""
 
 
-def _python_width(docs: DataFrame) -> int:
-    """Tasks for the chunk + embed stages over ``docs``: the CPU its
-    plan-statistics size predicts, in units of one Python task's fixed
-    cost, clamped to [1, defaultParallelism]. The size comes from the
-    optimized plan and runs no job. A file scan or local relation
-    reports its real size; an input with no statistics reports
-    ``spark.sql.defaultSizeInBytes`` and a join an inflated product,
-    and both keep the full ``defaultParallelism``."""
+def _python_tasks(docs: DataFrame) -> int:
+    """The chunk + embed CPU that ``docs``' plan-statistics size
+    predicts, in units of one Python task's fixed cost, at least 1. The
+    size comes from the optimized plan and runs no job. A file scan or
+    local relation reports its real size; an input with no statistics
+    reports ``spark.sql.defaultSizeInBytes`` and a join an inflated
+    product."""
     size = docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return max(1, math.ceil(size * PY_CPU_S_PER_BYTE / PY_TASK_CPU_S))
+
+
+def _python_width(docs: DataFrame) -> int:
+    """Tasks for the chunk + embed stages over ``docs``:
+    ``_python_tasks(docs)`` clamped to ``defaultParallelism``, which an
+    input without statistics, or a join, keeps in full."""
     cap = docs.sparkSession.sparkContext.defaultParallelism
-    return max(1, min(cap, math.ceil(size * PY_CPU_S_PER_BYTE / PY_TASK_CPU_S)))
+    return min(cap, _python_tasks(docs))
 
 
 def build_chunk_index(
@@ -181,7 +190,9 @@ def write_index_incremental(
     The plan (``_append_rows``) is one branch: each document is chunked
     once, and reuse and embedding share one Python stage, so an append
     runs two Python stages (chunker, embedder) and scans the index twice
-    (keys, stored embeddings). At small appends the cost is Python
+    (keys, stored embeddings). ``RagEngine.index_documents`` computes the
+    same rows on the driver when this plan would run one Python task,
+    and calls this function otherwise. At small appends the cost is Python
     tasks, not rows; at scale embedding dominates (a model call per
     chunk) and both joins are hash-keyed over column-pruned parquet
     reads; a known index ``schema`` skips inferring it (one job). Appends

@@ -674,16 +674,25 @@ def test_warm_ask_and_recommend_run_no_job(engine):
     assert engine.recommend("jobs", k=1).collect() == _topk(engine, profile)[:1]
 
 
-def test_mmr_below_threshold_runs_one_job(engine):
-    """MMR below the ANN threshold is the candidate scan, one job: the
-    greedy runs on the driver and its result is a local frame."""
-    engine.ask("warm-up: reads the schema")
+def test_mmr_below_threshold_runs_no_job(engine, monkeypatch):
+    """MMR below the ANN threshold takes its candidates, with their
+    vectors, from the driver-held snapshot and runs no job; its rows and
+    scores are the Spark route's, where the candidate scan is one job."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark import (
+        engine as engine_mod,
+    )
 
-    def mmr():
-        return engine.retrieve("priority freight shipments", k=2, search_type="mmr")
+    engine.ask("warm-up: loads the snapshot")
 
+    def mmr(q="priority freight shipments"):
+        return engine.retrieve(q, k=2, search_type="mmr")
+
+    assert job_stats(engine.spark, lambda: mmr().collect())[0] == 0
+    questions = ("priority freight shipments", "orchard apples", "")
+    served = [mmr(q).collect() for q in questions]
+    monkeypatch.setattr(engine_mod, "SNAPSHOT_MAX_BYTES", 0)
     assert job_stats(engine.spark, mmr)[0] == 1
-    assert job_stats(engine.spark, mmr().collect)[0] == 0
+    assert [mmr(q).collect() for q in questions] == served
 
 
 def test_index_sees_rows_another_engine_appended(engine, spark):
@@ -889,6 +898,9 @@ class _FsSpy:
     def listStatus(self, path):
         return self.fs.listStatus(path)
 
+    def exists(self, path):
+        return self.fs.exists(path)
+
     def copyToLocalFile(self, del_src, src, dst, raw):
         if self.fail:
             src = src.suffix(".gone")
@@ -1035,32 +1047,156 @@ def test_history_df_is_a_local_frame_in_turn_order(engine):
     assert empty.collect() == []
 
 
-def test_small_append_runs_one_python_task_and_writes_one_file(spark, tmp_path):
-    """A 16-document append is sized from its plan statistics and not
-    widened to ``defaultParallelism``: every stage, the chunk + embed
-    stage included, runs one task, and one index file is added. (The
-    index was built from one small file, so its scans are one task.)"""
+def _write_batch(spark, path: str, first: int, n: int = 16) -> str:
+    """``n`` documents as one parquet file, whose plan carries its size."""
+    text = "Lighthouses guide ships past the reef at night. " * 20
+    spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(first, first + n), "text": [
+            f"Note {first + i}. {text}" for i in range(n)
+        ]})
+    ).coalesce(1).write.parquet(path)
+    return path
+
+
+def _sql_plans(spark, fn) -> list[str]:
+    """The physical plans of the SQL executions ``fn()`` ran."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsList().size()
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = store.executionsList()
+    return [runs.apply(i).physicalPlanDescription() for i in range(before, runs.size())]
+
+
+def test_small_append_runs_on_the_driver_in_two_jobs(spark, tmp_path, monkeypatch):
+    """On an engine whose snapshot serves, a 16-document parquet append
+    is one Python task's work, which the driver does: two jobs (the
+    input read and the write) of one task each, no Python UDF or
+    Python-fed scan in any plan, and exactly one index file added."""
     import glob
 
-    def batch(name: str, first: int) -> str:
-        path = str(tmp_path / name)
-        text = "Lighthouses guide ships past the reef at night. " * 20
-        spark.createDataFrame(
-            [(first + i, f"Note {first + i}. {text}") for i in range(16)],
-            "doc_id long, text string",
-        ).coalesce(1).write.parquet(path)
-        return path
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark import (
+        engine as engine_mod,
+    )
 
+    spark_route = _counting(monkeypatch, engine_mod, "write_index_incremental")
     eng = RagEngine(spark, index_path=str(tmp_path / "index"))
-    assert eng.index_documents(spark.read.parquet(batch("first", 0))) > 0
+    first = _write_batch(spark, str(tmp_path / "first"), 0)
+    assert eng.index_documents(spark.read.parquet(first)) > 0
+    eng.ask("warm-up: loads the snapshot")
     before = set(glob.glob(f"{eng.index_path}/*.parquet"))
-    path = batch("second", 100)
-    jobs, tasks = job_stats(spark, lambda: eng.index_documents(spark.read.parquet(path)))
-    added = set(glob.glob(f"{eng.index_path}/*.parquet")) - before
-    assert len(added) == 1
-    assert jobs > 0 and set(tasks) == {1}
+    docs = spark.read.parquet(_write_batch(spark, str(tmp_path / "second"), 100))
+    stats = []
+    plans = _sql_plans(
+        spark, lambda: stats.append(job_stats(spark, lambda: eng.index_documents(docs)))
+    )
+    assert stats == [(2, [1, 1])]
+    assert len(plans) == 2
+    assert not any("EvalPython" in p or "ExistingRDD" in p for p in plans)
+    assert len(set(glob.glob(f"{eng.index_path}/*.parquet")) - before) == 1
+    assert spark_route == []
 
 
+def _null_embedding(eng):
+    eng.spark.createDataFrame(
+        [(80, 0, "odd row", None, "h")], eng.index().schema
+    ).write.mode("append").parquet(eng.index_path)
+
+
+@pytest.mark.parametrize("case", ["list", "wide", "null_embedding", "ann"])
+def test_append_keeps_the_spark_route(spark, tmp_path, monkeypatch, case):
+    """These appends stay ``write_index_incremental``: an input without
+    plan statistics (``createDataFrame(list)``), one wider than one
+    Python task, and any index the snapshot does not serve (one null
+    embedding; past a small ``ann_threshold_rows``)."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark import (
+        engine as engine_mod,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators import (
+        retrieval,
+    )
+
+    eng = RagEngine(
+        spark,
+        index_path=str(tmp_path / "index"),
+        ann_threshold_rows=10 if case == "ann" else 1_000_000,
+    )
+    assert eng.index_documents(spark.read.parquet(_write_batch(spark, str(tmp_path / "a"), 0))) > 0
+    if case == "null_embedding":
+        _null_embedding(eng)
+    if case != "ann":  # an ask there would build the IVF layout
+        eng.ask("warm-up: reads the schema")
+    if case == "list":
+        docs = spark.createDataFrame([(500, "Tides turn twice a day.")], "doc_id long, text string")
+    else:
+        docs = spark.read.parquet(_write_batch(spark, str(tmp_path / "b"), 100))
+    if case == "wide":
+        monkeypatch.setattr(retrieval, "PY_TASK_CPU_S", 1e-3)
+        assert retrieval._python_width(docs) > 1
+    spark_route = _counting(monkeypatch, engine_mod, "write_index_incremental")
+    jobs, _ = job_stats(spark, lambda: eng.index_documents(docs))
+    assert len(spark_route) == 1 and jobs > 2
+
+
+def _index_rows(spark, path: str) -> list:
+    """Every row of the index at ``path``, sorted, read as ``index()``
+    reads it."""
+    rows = RagEngine(spark, index_path=path).index().collect()
+    return sorted(rows, key=repr)
+
+
+def test_driver_append_equals_the_spark_route(spark, tmp_path, monkeypatch):
+    """The same batches appended to two copies of one index, one through
+    ``index_documents`` (the driver route) and one through
+    ``write_index_incremental`` (the Spark route), give the same counts
+    and the same ``(doc_id, chunk_id, text, embedding, content_hash)``
+    rows: at creation (with the same schema), for new documents, exact
+    re-submits and new ids carrying indexed text, for a document twice
+    in one batch, for an ``int`` ``doc_id``, and for a null text, an
+    empty text and a null ``doc_id``."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark import (
+        engine as engine_mod,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
+        write_index_incremental,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    import os
+
+    corpus = load_table(spark, "documents", SF_DIR).orderBy("doc_id").limit(40).toPandas()
+    texts = corpus.text.tolist()
+    ids = corpus.doc_id.tolist()
+    spark_path = str(tmp_path / "spark_route")
+    spark_route = _counting(monkeypatch, engine_mod, "write_index_incremental")
+    eng = RagEngine(spark, index_path=str(tmp_path / "driver_route"), chunk_size=200)
+
+    def both(name: str, doc_ids, docs_text, id_dtype="Int64"):
+        path = str(tmp_path / name)
+        pd.DataFrame(
+            {"doc_id": pd.array(doc_ids, dtype=id_dtype), "text": docs_text}
+        ).to_parquet(path)
+        docs = spark.read.parquet(path)
+        n = eng.index_documents(docs)
+        # as index() reads it: inferring from one file may pick an int one
+        schema = RagEngine(spark, spark_path)._schema() if os.path.exists(spark_path) else None
+        assert n == write_index_incremental(docs, spark_path, chunk_size=200, schema=schema), name
+        assert _index_rows(spark, eng.index_path) == _index_rows(spark, spark_path), name
+        eng.ask("refreshes the snapshot")
+        return n
+
+    assert both("create", ids[:30], texts[:30]) > 0
+    fresh = RagEngine(spark, index_path=spark_path)
+    assert eng._schema().simpleString() == fresh._schema().simpleString()
+    assert both("mixed", [1000, 1001, *ids[:3], 1002, 1003], [
+        "A brand new note about harbor cranes.", texts[31], *texts[:3], texts[5], texts[32],
+    ]) > 0
+    assert both("twice", [2000, 2000], ["Same note, sent twice."] * 2) == 2
+    assert both("int_ids", [3000, ids[6]], ["Thirty-two bit ids.", texts[6]], "Int32") == 1
+    assert both("nulls", [4000, 4001, None], [None, "", "A note without an id."]) == 1
+    assert spark_route == []
 def test_concurrent_asks_keep_session_pairs_adjacent(engine):
     """Concurrent asks on one session must not interleave their
     user/assistant appends. The slow list widens the window between
@@ -1105,7 +1241,8 @@ def test_concurrent_asks_keep_session_pairs_adjacent(engine):
 def test_append_by_engine_that_read_its_index_runs_one_job_fewer(engine, spark):
     """An engine that has read its index passes the cached schema to
     the append, which skips the index read's schema-inference job; a
-    fresh engine on the same index still infers it."""
+    fresh engine on the same index still infers it. A list input has
+    no plan statistics, so both appends take the Spark route."""
     engine.ask("warm-up: caches the index schema")
     fresh = RagEngine(spark, index_path=engine.index_path)
 
