@@ -285,6 +285,12 @@ def bm25_dynamic_oracle_select(terms_cte: str, relation: str = "documents") -> s
 #: partitionBy stays a sane directory count
 LEX_BUCKETS = 256
 
+#: the posting-list layout as ``write_postings_index`` writes it
+#: (``bucket`` is the partition directory) and the stats columns a probe
+#: reads: declared, so a probe infers no schema from the footers
+POSTINGS_DDL = "term string, `{}` string, dl int, tf bigint, df double, bucket int"
+POSTINGS_STATS_DDL = "n double, avgdl double"
+
 
 def term_bucket(term: str) -> int:
     """Driver-side twin of ``term_bucket_expr``: sha1-hex-prefix mod —
@@ -328,10 +334,13 @@ def write_postings_index(
     built once per corpus change; a question then reads
     ~|terms|/LEX_BUCKETS of it instead of tokenizing every document
     per query (measured: the scan leg dominated hybrid latency at the
-    2 M-chunk tier)."""
+    2 M-chunk tier). Ids are stored as strings, the type
+    ``bm25_postings_scores`` reads and returns."""
     from ..sources.loaders import scatter
 
-    t = scatter(docs).select(F.col(id_col), tokens(text_col).alias("toks"))
+    t = scatter(docs).select(
+        F.col(id_col).cast("string").alias(id_col), tokens(text_col).alias("toks")
+    )
     m = t.select(
         id_col,
         F.size("toks").alias("dl"),
@@ -392,14 +401,19 @@ def bm25_postings_scores(
     for queries matching fewer than ``depth`` documents. The probed
     buckets resolve driver-side (``term_bucket``) into a basePath read
     of <=|terms| partition directories (``read_partitions``), like the
-    engine's IVF cell read."""
+    engine's IVF cell read. Both reads declare the layout's schema, so
+    building the plan runs no footer-inference job."""
     from ..sources.loaders import read_partitions
 
     uterms = list(dict.fromkeys(terms))  # order-preserving unique
     post = read_partitions(
-        spark, path, "bucket", sorted({term_bucket(t) for t in uterms})
+        spark,
+        path,
+        "bucket",
+        sorted({term_bucket(t) for t in uterms}),
+        POSTINGS_DDL.format(id_col),
     )
-    stats = spark.read.parquet(stats_path).select("n", "avgdl")
+    stats = spark.read.schema(POSTINGS_STATS_DDL).parquet(stats_path)
     if post is None:  # no term has a populated bucket: empty frame
         return spark.createDataFrame([], f"{id_col} string, bm25 double")
     post = post.filter(F.col("term").isin(uterms))

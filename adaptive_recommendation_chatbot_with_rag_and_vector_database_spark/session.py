@@ -11,6 +11,18 @@ while every setting is also the right call on a real cluster:
   never per-row.
 - Session timezone pinned to UTC so timestamps hash identically to the
   DuckDB oracle (duckdb timestamps are UTC-naive).
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: with it on,
+  every ``pyspark.sql.functions`` call and Column operator walks the
+  Python stack for its call site and makes extra py4j round trips
+  (``F.col``: 13 on, 3 off). A warm ``q_kruskal_wallis`` plan build
+  makes 1,344 round trips on and 374 off, and spends 37 ms of driver
+  Python CPU on and 11 ms off (4-core container). What errors lose: an
+  ANSI runtime error (``DIVIDE_BY_ZERO``) still raises with its error
+  class and message, but the ``== DataFrame ==`` context names a JVM
+  frame instead of the Python ``file:line`` that built the failing
+  expression. The conf is static, and pyspark reads it once
+  per process, from the session active at the first Column built, so
+  a process whose first session is not this factory's keeps capturing.
 """
 
 from __future__ import annotations
@@ -42,6 +54,7 @@ def get_spark(app_name: str = "rag_engine", cpus: int | None = None) -> SparkSes
         # convert in the loader (DuckDB equally truncates ns→µs)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

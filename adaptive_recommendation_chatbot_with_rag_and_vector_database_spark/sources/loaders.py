@@ -1,8 +1,12 @@
 """Parquet sources for the driver's fixture tables (SURVEY §2.1 S6).
 
-One parquet file per table under ``{sf_dir}/{name}.parquet``. All loads
-are plain ``spark.read.parquet`` so Catalyst gets the native vectorized
-reader, predicate pushdown, and column pruning for free.
+One parquet file per table under ``{sf_dir}/{name}.parquet``. Every load
+is a ``spark.read.parquet`` of that path, so Catalyst gets the native
+vectorized reader, predicate pushdown and column pruning for free. The
+first load of a path infers its schema from the parquet footers (one
+Spark job); later loads pass that schema to the reader (no job) for as
+long as the path's file listing and the inference confs are unchanged
+(:func:`load_table`).
 """
 
 from __future__ import annotations
@@ -13,6 +17,7 @@ import threading
 import time
 from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -31,8 +36,66 @@ TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+#: the confs that change the schema Spark 4.1 infers from parquet
+#: footers: ``ParquetToSparkSchemaConverter``'s type mapping, and which
+#: footers ``ParquetUtils.inferSchema`` reads and merges
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.caseSensitive",
+)
+
+#: table path -> (stamp, schema): the schema inferred at the path's last
+#: miss, one entry per path. Not a substrate, and
+#: :func:`clear_substrate_caches` leaves it: an entry is served only
+#: under its own stamp, so it is never stale.
+_TABLE_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _schema_stamp(spark: SparkSession, path: str) -> tuple | None:
+    """What the schema Spark infers for ``path`` depends on: the sorted
+    ``(name, length, modificationTime)`` of its entries from one
+    Hadoop-FS ``listStatus`` (a single file lists as itself), and the
+    :data:`_INFERENCE_CONFS` values. None when the path cannot be
+    listed, a missing one included, or holds a directory (partition
+    discovery reads the names under it)."""
+    try:
+        # one py4j lookup of the full class name, not one per package
+        jpath = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        files = []
+        for st in fs.listStatus(jpath):
+            if st.isDirectory():
+                return None
+            files.append(
+                (st.getPath().getName(), st.getLen(), st.getModificationTime())
+            )
+    except Py4JError:  # Py4JJavaError included: a Hadoop FS error
+        return None
+    return tuple(sorted(files)), tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """``{sf_dir}/{name}.parquet`` as a DataFrame (``events.ts``
+    normalized to TimestampType, below).
+
+    The schema Spark infers from the footers costs one Spark job per
+    read, so it is kept per path in :data:`_TABLE_SCHEMAS` under the
+    path's :func:`_schema_stamp` (file listing plus inference confs).
+    While the stamp is unchanged the read is given that schema and runs
+    no job; a rewritten table or a changed conf misses, is read as a
+    plain ``spark.read.parquet`` and replaces the entry. When the path
+    cannot be listed the read is plain and nothing is stored, so a
+    missing table raises Spark's own ``PATH_NOT_FOUND``."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
@@ -48,12 +111,22 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         # the UTC-naive DuckDB oracle even in a non-UTC vanilla
         # session, regardless of which layout the fixture carries.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _schema_stamp(spark, path)
+    held = _TABLE_SCHEMAS.get(path)
+    if stamp is not None and held is not None and held[0] == stamp:
+        schema = held[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if stamp is not None:
+            _TABLE_SCHEMAS[path] = (stamp, schema)
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
 
-        ts_type = df.schema["ts"].dataType
+        ts_type = schema["ts"].dataType
         if isinstance(ts_type, LongType):
             # NANOS layout: ts surfaced as long (ns since epoch) via
             # nanosAsLong; truncate to µs exactly as DuckDB does so the
@@ -390,15 +463,19 @@ def write_bucketed(
 
 
 def read_partitions(
-    spark: SparkSession, path: str, col: str, values, schema: StructType | None = None
+    spark: SparkSession,
+    path: str,
+    col: str,
+    values,
+    schema: StructType | str | None = None,
 ) -> DataFrame | None:
     """Read only the ``col=value`` directories of a partitioned parquet
     layout that exist (``basePath`` keeps ``col`` as a column), or None
     when none does. A plain read of the root makes the driver list EVERY
     partition directory before pruning — measured as the dominant
     per-question cost at 2048 IVF cells — while this lists only the
-    probed ones. A ``schema`` (``col`` included) spares the read its
-    footer-inference job."""
+    probed ones. A ``schema`` (``col`` included; a StructType or a DDL
+    string) spares the read its footer-inference job."""
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
         spark._jsc.hadoopConfiguration()

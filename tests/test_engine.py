@@ -347,6 +347,8 @@ def test_postings_bm25_bit_identical_to_scan_form(spark, tmp_path):
     bit-for-bit for every document containing >=1 query term (the only
     documents the postings emit — zero-match docs carry no lexical
     evidence by design)."""
+    from pyspark.sql import functions as F
+
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.ranking import (
         bm25_postings_scores,
         bm25_scores,
@@ -356,8 +358,9 @@ def test_postings_bm25_bit_identical_to_scan_form(spark, tmp_path):
         load_table,
     )
 
+    # the layout stores ids as strings
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
-        "doc_id", "text"
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
     lex = str(tmp_path / "lex")
     stats = str(tmp_path / "lex_stats")
@@ -400,6 +403,18 @@ def test_hybrid_routes_through_postings_above_threshold(spark, tmp_path, monkeyp
     q = "priority freight shipments delayed by clerk errors"
     rows = eng.retrieve(q, search_type="hybrid").collect()
     assert len(rows) == eng.k and eng._lex_built
+    # per question, with the layouts built: the fused top-k and payload
+    # collects, plus the vector leg's ranking when a term's bucket is
+    # populated; the postings and stats reads declare their schemas, so
+    # neither runs a footer-inference job
+    for question, jobs in ((q, 2), ("spark streaming state windows", 4)):
+        got = []
+        n, _ = job_stats(
+            spark, lambda: got.extend(eng.retrieve(question, search_type="hybrid").collect())
+        )
+        assert n == jobs, question
+        assert len(got) == eng.k
+    assert eng.retrieve(q, search_type="hybrid").collect() == rows
 
     def boom(*a, **k):
         raise AssertionError("fresh engine rebuilt an already-built postings layout")

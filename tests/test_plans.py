@@ -1696,3 +1696,24 @@ def test_order_value_pivot_substrate_build_shape(spark):
     assert "FileScan parquet" not in plan
     assert "Scan ExistingRDD" in plan
     assert "partial_sum" in plan
+
+
+@pytest.mark.parametrize(
+    "name, build_jobs, total_jobs",
+    [
+        ("q_kruskal_wallis", 0, 6),
+        ("q_wilcoxon_signed_rank", 5, 11),
+        ("q_fifo_inventory", 1, 7),
+    ],
+)
+def test_slice_query_job_counts(spark, name, build_jobs, total_jobs):
+    """The Spark jobs of the benchmark slice's queries, warm (substrates
+    built, table schemas cached): building the plan runs only the
+    query's own eager jobs, and build + collect runs ``total_jobs``. A
+    per-call schema-inference job or a new eager collect fails here."""
+    from conftest import job_stats
+
+    query = E.queries()[name]
+    query(spark, SF).collect()  # warm the substrates and table schemas
+    assert job_stats(spark, lambda: query(spark, SF))[0] == build_jobs
+    assert job_stats(spark, lambda: query(spark, SF).collect())[0] == total_jobs

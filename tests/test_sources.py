@@ -22,7 +22,7 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.
     utf8_extractor,
 )
 
-from conftest import count_nodes, file_scans, plan_nodes
+from conftest import SF_DIR, count_nodes, file_scans, job_stats, plan_nodes
 
 
 @pytest.fixture()
@@ -405,6 +405,144 @@ def test_load_table_normalizes_both_events_ts_layouts(spark, tmp_path):
         assert df.schema["ts"].dataType.typeName() == "timestamp"
         got[str(d)] = sorted((r.event_id, r.ts) for r in df.select("event_id", "ts").collect())
     assert got[str(nanos_dir)] == got[str(micros_dir)]
+
+
+def _fields(schema) -> list:
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in schema]
+
+
+def test_load_table_serves_the_inferred_schema_cold_and_warm(spark):
+    """A cached schema is the schema Spark infers: for every fixture
+    table the schema the reader is given equals a plain read's, and the
+    loaded frame is the same cold (inferred) and warm (served)."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources import (
+        loaders,
+    )
+
+    for name in loaders.TABLES:
+        path = f"{SF_DIR}/{name}.parquet"
+        loaders._TABLE_SCHEMAS.pop(path, None)
+        cold = _fields(loaders.load_table(spark, name, SF_DIR).schema)
+        assert path in loaders._TABLE_SCHEMAS, name
+        warm = _fields(loaders.load_table(spark, name, SF_DIR).schema)
+        plain = _fields(spark.read.parquet(path).schema)
+        assert _fields(loaders._TABLE_SCHEMAS[path][1]) == plain, name
+        assert warm == cold, name
+        if name != "events":  # events.ts is normalized after the read
+            assert cold == plain, name
+
+
+def test_warm_load_table_runs_no_job(spark):
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        _TABLE_SCHEMAS,
+        load_table,
+    )
+
+    for name in ("lineitem", "events"):
+        _TABLE_SCHEMAS.pop(f"{SF_DIR}/{name}.parquet", None)
+        assert job_stats(spark, lambda: load_table(spark, name, SF_DIR))[0] == 1
+        assert job_stats(spark, lambda: load_table(spark, name, SF_DIR))[0] == 0
+
+
+def test_load_table_sees_a_table_rewritten_at_the_same_path(spark, tmp_path):
+    """A rewrite changes the path's file listing, so the next load
+    infers again: an added column and a changed type both show."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    path = str(tmp_path / "region.parquet")
+    keys = pa.array([0, 1, 2], pa.int32())
+    names = pa.array(["a", "b", "c"])
+    versions = [
+        ({"r_regionkey": keys}, "r_regionkey:int"),
+        ({"r_regionkey": keys, "r_name": names}, "r_regionkey:int,r_name:string"),
+        (
+            {"r_regionkey": keys.cast(pa.int64()), "r_name": names},
+            "r_regionkey:bigint,r_name:string",
+        ),
+    ]
+    for cols, want in versions:
+        pq.write_table(pa.table(cols), path)
+        for _ in range(2):  # the load that infers, then the one served
+            df = load_table(spark, "region", str(tmp_path))
+            assert df.schema.simpleString() == f"struct<{want}>"
+            assert df.count() == 3
+
+
+def test_load_table_does_not_cache_a_partitioned_table(spark, tmp_path):
+    """A file rewritten in place under a partition directory leaves the
+    path's own listing unchanged, so a path holding directories is read
+    plainly every time and never cached."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        _TABLE_SCHEMAS,
+        load_table,
+    )
+
+    part = tmp_path / "region.parquet" / "r_regionkey=1"
+    part.mkdir(parents=True)
+    names = pa.array(["a", "b"])
+    for cols, want in (
+        ({"r_name": names}, "r_name:string,r_regionkey:int"),
+        (
+            {"r_name": names, "r_comment": names},
+            "r_name:string,r_comment:string,r_regionkey:int",
+        ),
+    ):
+        pq.write_table(pa.table(cols), str(part / "part-0.parquet"))
+        for _ in range(2):
+            df = load_table(spark, "region", str(tmp_path))
+            assert df.schema.simpleString() == f"struct<{want}>"
+    assert f"{tmp_path}/region.parquet" not in _TABLE_SCHEMAS
+
+
+def test_binary_as_string_changes_the_served_type(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    pq.write_table(
+        pa.table({"r_name": pa.array([b"x", b"y"], pa.binary())}),
+        str(tmp_path / "region.parquet"),
+    )
+    conf = "spark.sql.parquet.binaryAsString"
+    prior = spark.conf.get(conf)
+    try:
+        for flag, want in (("false", "binary"), ("true", "string"), ("false", "binary")):
+            spark.conf.set(conf, flag)
+            for _ in range(2):
+                df = load_table(spark, "region", str(tmp_path))
+                assert df.schema["r_name"].dataType.simpleString() == want
+        spark.conf.set(conf, "true")
+        rows = load_table(spark, "region", str(tmp_path)).collect()
+        assert sorted(r.r_name for r in rows) == ["x", "y"]
+    finally:
+        spark.conf.set(conf, prior)
+
+
+def test_missing_table_raises_path_not_found_and_caches_nothing(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        _TABLE_SCHEMAS,
+        load_table,
+    )
+
+    missing = str(tmp_path / "absent")
+    for _ in range(2):
+        with pytest.raises(AnalysisException) as err:
+            load_table(spark, "region", missing)
+        assert err.value.getCondition() == "PATH_NOT_FOUND"
+    assert f"{missing}/region.parquet" not in _TABLE_SCHEMAS
 
 
 def test_substrate_caches_evict_on_session_stop(spark):
