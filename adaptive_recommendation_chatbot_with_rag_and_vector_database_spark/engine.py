@@ -18,23 +18,24 @@ verbs on Spark:
 - ``retrieve`` / ``ask`` — embed question → top-k cosine
   (TakeOrderedAndProject) → order-preserving context stuffing →
   pluggable answerer → refusal/first-line post-processing
-  (AI.py:176-185). Below the ANN threshold, and up to
-  ``SNAPSHOT_MAX_BYTES`` of index, ``ask`` and ``recommend`` run NO
-  Spark job: they score a driver-held snapshot of the index,
-  bit-identical to the top-k scan, keyed on the index's data-file
-  listing, which every question re-reads (one Hadoop-FS call). The
-  driver reads the parquet files the snapshot does not hold itself
-  (Hadoop-FS copy, pyarrow read): after an append by any writer only
-  the added files, after an overwrite or a re-creation all of them.
-  Otherwise a question is ONE job, the top-k scan. The answer is
-  cleaned in driver Python (``postprocess_answer``), and the index
-  schema is read once per instance, and kept across appends that do
-  not change it, so no retrieval re-runs parquet schema inference.
-  Result frames the driver computed are Arrow-backed local frames,
-  which run no job to build or collect. The query *rewrite hook*
-  (AI.py:137-139) is pluggable and defaults to pass-through, which is
-  also the reference's effective behavior (its history is never
-  written — SURVEY §3.2).
+  (AI.py:176-185). Each call lists the index's data files once (one
+  Hadoop-FS call), and ``_route`` decides from that listing:
+  ``snapshot`` below the ANN threshold and up to ``SNAPSHOT_MAX_BYTES``
+  of index, where ``ask``, ``recommend``, MMR and ``retrieve`` run NO
+  Spark job, scoring a driver-held snapshot of the index bit-identical
+  to the top-k scan (the driver reads the files the snapshot does not
+  hold itself: after an append by any writer only the added ones);
+  ``scan``, the top-k scan, ONE job; ``ivf`` above the threshold, the
+  same scan over the IVF layout's probed cells. What the engine knows
+  of its index (schema, row count, snapshot, IVF codebook, postings
+  flag) is one ``_IndexState`` keyed on that listing, so any writer's
+  change is seen by the next call; only the schema carries across
+  listings, so no retrieval re-runs parquet schema inference. Result
+  frames the driver computed are Arrow-backed local frames
+  (``sources.loaders.local_frame``), which run no job to build or
+  collect. The query *rewrite hook* (AI.py:137-139) is pluggable and
+  defaults to pass-through, also the reference's effective behavior
+  (its history is never written — SURVEY §3.2).
 - ``history`` / ``clear_session`` — append-only per-session message
   log with get-or-create and clear semantics (AI.py:155-161,29-30).
   The log lives driver-side like the reference's in-process ``store``
@@ -85,6 +86,7 @@ from .operators.retrieval import (
     write_index_incremental,
 )
 from .sources.binary_docs import load_binary_documents, utf8_extractor
+from .sources.loaders import local_frame
 
 
 def passthrough_rewrite(question: str, history: list[dict]) -> str:
@@ -151,10 +153,6 @@ def extractive_answerer(question: str, context: str) -> str:
     if not context:
         return REFUSAL_PREFIX + " to answer this question."
     return context.split("\n")[0]
-
-
-def _listing_bytes(listing: tuple) -> int:
-    return sum(length for _, length, _ in listing)
 
 
 def _is_data_file(name: str) -> bool:
@@ -255,7 +253,7 @@ executors."""
 
 class _IndexSnapshot(NamedTuple):
     """The index as of one data-file listing (``key``), held on the
-    driver: what ``ask``, ``recommend`` and MMR score below the ANN
+    driver: what ``retrieve``, ``ask`` and MMR score below the ANN
     threshold instead of running the top-k scan, and the keys and
     vectors a driver-side append reuses (``content_hash``, beside the
     ids). ``emb`` is None when a file holds a null, wrong-length or
@@ -293,6 +291,27 @@ class _IndexSnapshot(NamedTuple):
         return rows
 
 
+class _IndexState(NamedTuple):
+    """What the engine knows of its index as of one data-file listing
+    (``_index_listing``; None on FS errors). ``_state_at`` replaces it
+    whole when a call's listing differs, so an append, overwrite or
+    re-creation by any writer drops the row count, the codebook and the
+    postings flag, and the next above-threshold call re-verifies the
+    layouts. The schema carries over (``index_documents`` drops the
+    record when its write created the index or retyped ``doc_id``), and
+    so does the snapshot: keyed on its own listing, it is the ``held``
+    one that the next ``_load_snapshot`` extends."""
+
+    listing: tuple | None
+    schema: StructType | None = None
+    rows: int | None = None
+    snapshot: _IndexSnapshot | None = None
+    # the codebook of an IVF layout verified (or written) for the listing
+    codebook: np.ndarray | None = None
+    # the postings layout was verified (or written) for the listing
+    postings: bool = False
+
+
 @dataclass
 class RagEngine:
     spark: SparkSession
@@ -317,26 +336,18 @@ class RagEngine:
     _sessions_lock: threading.Lock = field(
         default_factory=threading.Lock, repr=False, compare=False
     )
-    _index_rows: int | None = field(default=None, repr=False)
-    # the index schema from this instance's first read; later reads pass
-    # it so no retrieval re-runs parquet schema inference (a Spark job)
-    _index_schema: StructType | None = field(default=None, repr=False)
-    # guards the verify-or-build of the derived layouts (IVF, postings)
-    # and index_documents' reset of their state: without it, the first
-    # asks of two threads above the threshold both build, and both
-    # overwrite the same paths under each other's readers
-    _layout_lock: threading.Lock = field(
-        default_factory=threading.Lock, repr=False, compare=False
+    # what the engine knows of its index as of one file listing
+    _state: _IndexState = field(
+        default_factory=lambda: _IndexState(None), repr=False, compare=False
     )
-    _lex_built: bool = field(default=False, repr=False)
-    # the IVF codebook, set once THIS instance has verified (or written)
-    # a layout matching the current corpus — the per-question
-    # short-circuit; an in-session corpus change resets it
-    _codebook: object = field(default=None, repr=False)
-    # the index held on the driver for ask below the ANN threshold,
-    # keyed on the file listing it was read at; replaced whole, under
-    # _layout_lock, when a question's listing differs from its key
-    _snapshot: _IndexSnapshot | None = field(default=None, repr=False, compare=False)
+    # guards each replacement of _state and the verify-or-build of the
+    # derived layouts (IVF, postings): without it, the first asks of two
+    # threads above the threshold both build, and both overwrite the
+    # same paths under each other's readers. Reentrant, since the
+    # builds store their result in _state
+    _layout_lock: threading.RLock = field(
+        default_factory=threading.RLock, repr=False, compare=False
+    )
     # (Hadoop Path class, the index's Path, its FileSystem): each py4j
     # package lookup of the class is several gateway round trips
     _fs_handles: tuple | None = field(default=None, repr=False, compare=False)
@@ -356,36 +367,30 @@ class RagEngine:
         An input whose plan statistics predict one Python task is
         appended on the driver (``_append_on_driver``): two jobs, and no
         Python worker. Any other input is ``write_index_incremental``."""
-        self._index_rows = None  # size changed: re-count lazily
         _, root, fs = self._index_fs()
         created = not fs.exists(root)
         n_new = self._append_on_driver(docs, created)
         if n_new is None:
-            schema = None if created else self._index_schema  # no index to read yet
+            schema = None if created else self._state.schema  # no index to read yet
             n_new = write_index_incremental(
                 docs, self.index_path, self.chunk_size, self.dim, schema=schema
             )
-        # defer the ANN build to the first retrieval: deciding the route
-        # needs a row count, and paying that job here would tax every
-        # sub-threshold (reference-scale) index build; clearing the
-        # layout state makes the first post-change retrieval re-verify
-        # (fingerprint probe) or rebuild instead
-        if n_new > 0:
-            # re-read the schema once only if this write created the
-            # index or changed a column type: doc_id is the one index
-            # column whose type the caller picks (simpleString ignores
-            # nullability)
-            cached = self._index_schema
-            retype = cached is not None and (
-                created
-                or cached["doc_id"].dataType.simpleString()
-                != docs.schema["doc_id"].dataType.simpleString()
-            )
+        # The write changed the listing, so the next call routes on a new
+        # record: with no row count, codebook or postings flag, its first
+        # retrieval re-verifies (fingerprint probe) or rebuilds the
+        # layouts, and a sub-threshold build never pays the routing
+        # count. Only the schema outlives a listing: drop the whole record
+        # when this write created the index or changed doc_id's type, the
+        # one index column whose type the caller picks (simpleString
+        # ignores nullability); the snapshot's arrays were typed by it
+        held = self._state.schema
+        if n_new > 0 and held is not None and (
+            created
+            or held["doc_id"].dataType.simpleString()
+            != docs.schema["doc_id"].dataType.simpleString()
+        ):
             with self._layout_lock:
-                self._lex_built = False
-                self._codebook = None
-                if retype:  # the snapshot's arrays were typed by that schema
-                    self._index_schema = self._snapshot = None
+                self._state = _IndexState(None)
         return n_new
 
     def _append_on_driver(self, docs: DataFrame, created: bool) -> int | None:
@@ -412,9 +417,10 @@ class RagEngine:
             return None
         snap = None
         if not created:
-            snap = self._serving_snapshot(self._index_listing())
-            if snap is None or _key_kind(self._schema()["doc_id"].dataType) != kind:
+            route, state = self._route(self._index_listing())
+            if route != "snapshot" or _key_kind(self._schema()["doc_id"].dataType) != kind:
                 return None
+            snap = state.snapshot
         table = docs.select("doc_id", "text").toArrow()
         rows = []  # (doc_id, chunk_id, chunk, content_hash)
         for doc_id, text in zip(*(c.to_pylist() for c in table.columns)):
@@ -435,27 +441,16 @@ class RagEngine:
             known = {snap.content_hash[i]: snap.emb[i].astype(np.float32) for i in held}
         if not rows:
             return 0
-        import pandas as pd
-
-        doc_id, chunk_id, text, content_hash = zip(*rows)
-        unknown = [t for t, h in zip(text, content_hash) if h not in known]
-        fresh = iter(embed_texts(unknown, self.dim))
-        pdf = pd.DataFrame(
-            {
-                "doc_id": pd.Series(doc_id, dtype=object),  # a null stays None
-                "chunk_id": chunk_id,
-                "text": text,
-                "embedding": [known[h] if h in known else next(fresh) for h in content_hash],
-                "content_hash": content_hash,
-            }
-        )
+        fresh = iter(embed_texts([r[2] for r in rows if r[3] not in known], self.dim))
         ddl = "chunk_id int, text string, embedding array<float>, content_hash string"
         schema = StructType(
             [StructField("doc_id", types["doc_id"]), *StructType.fromDDL(ddl)]
         )
-        self.spark.createDataFrame(pdf, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.index_path)
+        local_frame(
+            self.spark,
+            [(d, c, t, known[h] if h in known else next(fresh), h) for d, c, t, h in rows],
+            schema,
+        ).coalesce(1).write.mode("append").parquet(self.index_path)
         return len(rows)
 
     @staticmethod
@@ -497,41 +492,47 @@ class RagEngine:
         except Exception:
             return None
 
-    def _corpus_signature(self, rows: int) -> str:
+    def _corpus_signature(self, state: _IndexState) -> str:
         """Reuse fingerprint for derived layouts (IVF codebook, postings
-        stats). Row count alone would let any corpus change that
-        preserves row count (an external rewrite of ``index_path``, an
-        in-place re-chunk by another process) silently serve a stale
-        layout, so the signature also folds in a digest of
-        ``_index_listing``. Degrades to rows-only on FS quirks: the safe
-        direction, since a later successful probe then mismatches and
-        rebuilds."""
-        listing = self._index_listing()
-        if listing is None:
-            return f"rows={rows}"
-        digest = hashlib.sha256(repr(listing).encode()).hexdigest()[:32]
-        return f"rows={rows};listing={digest}"
+        stats): the record's row count and a digest of its listing. Row
+        count alone would let any corpus change that preserves row count
+        (an external rewrite of ``index_path``, an in-place re-chunk by
+        another process) silently serve a stale layout. Degrades to
+        rows-only on FS quirks: the safe direction, since a later
+        successful probe then mismatches and rebuilds."""
+        if state.listing is None:
+            return f"rows={state.rows}"
+        digest = hashlib.sha256(repr(state.listing).encode()).hexdigest()[:32]
+        return f"rows={state.rows};listing={digest}"
 
-    def _ensure_lex_index(self) -> None:
+    def _counted(self, state: _IndexState) -> _IndexState:
+        """``state`` with its row count: one parquet-metadata count per
+        listing, never one per question."""
+        if state.rows is None:
+            state = self._state_at(state.listing, rows=self.index().count())
+        return state
+
+    def _ensure_lex_index(self, state: _IndexState) -> None:
         """Lexical twin of ``_ensure_ann_index``: above the routing
         threshold the hybrid path's BM25 leg reads a bucket-partitioned
         posting-list layout instead of tokenizing every chunk per
         question (the scan leg dominated hybrid latency at the
         2 M-chunk tier). Same per-corpus reuse contract: the stats
         parquet carries the corpus signature, a fresh engine verifies
-        it before rebuilding, and ``_lex_built`` short-circuits every
-        later question. Built lazily on the first hybrid retrieval —
-        vector-only users never pay it."""
+        it before rebuilding, and the record's ``postings`` flag
+        short-circuits every later question on ``state``'s listing.
+        Built lazily on the first hybrid retrieval — vector-only users
+        never pay it."""
         from .operators.ranking import write_postings_index
 
-        if self._lex_built:
+        if state.postings:
             return
         with self._layout_lock:
-            if self._lex_built:  # another thread verified or built it
+            state = self._counted(self._state_at(state.listing))
+            if state.postings:  # another thread verified or built it
                 return
-            rows = self._count_index_rows()
             lex_path, stats_path = self._lex_paths()
-            sig = self._corpus_signature(rows)
+            sig = self._corpus_signature(state)
             try:
                 st = self.spark.read.parquet(stats_path).collect()
             except Exception:
@@ -547,25 +548,25 @@ class RagEngine:
                     lex_path,
                     stats_path,
                     id_col="cid",
-                    fingerprint=rows,
+                    fingerprint=state.rows,
                     signature=sig,
                 )
-            self._lex_built = True
+            self._state_at(state.listing, postings=True)
 
-    def _ensure_ann_index(self):
-        """The IVF codebook of a layout that serves the current corpus:
-        verified, appended to or built on this instance's first
-        above-threshold retrieval (and after each in-session corpus
-        change), then returned from ``_codebook`` with zero jobs."""
+    def _ensure_ann_index(self, state: _IndexState):
+        """The IVF codebook of a layout that serves ``state``'s listing:
+        verified, appended to or built on the first above-threshold
+        retrieval of each listing, then read from the record with zero
+        jobs."""
         from .operators.similarity import train_centroids_sample, write_ivf_index
 
-        codebook = self._codebook
-        if codebook is not None:  # verified in-session: zero jobs per question
-            return codebook
+        if state.codebook is not None:  # verified for this listing
+            return state.codebook
         with self._layout_lock:
-            if self._codebook is not None:  # another thread verified or built it
-                return self._codebook
-            rows = self._count_index_rows()
+            state = self._counted(self._state_at(state.listing))
+            if state.codebook is not None:  # another thread verified or built it
+                return state.codebook
+            rows = state.rows
             # The IVF layout is a PER-CORPUS artifact, not per-instance:
             # a fresh engine pointed at an already-built index must reuse
             # the on-disk codebook+layout, not retrain KMeans and rewrite
@@ -573,53 +574,49 @@ class RagEngine:
             # fingerprint (_corpus_signature at build time) beside the
             # centroids; a match proves the layout serves the current
             # corpus, and the read doubles as the codebook load.
-            sig = self._corpus_signature(rows)
+            sig = self._corpus_signature(state)
             try:
                 cb_rows = self.spark.read.parquet(self._ann_paths()[1]).collect()
             except Exception:
                 cb_rows = []  # absent codebook: build below
-            if cb_rows and all(
-                getattr(r, "corpus_sig", None) == sig for r in cb_rows
-            ):
-                self._codebook = _codebook_array(cb_rows)
-                return self._codebook
-            if cb_rows and self._try_ivf_append(cb_rows, rows, sig):
-                return self._codebook
-            import math
+            codebook = None
+            if cb_rows and all(getattr(r, "corpus_sig", None) == sig for r in cb_rows):
+                codebook = _codebook_array(cb_rows)
+            elif cb_rows:
+                codebook = self._try_ivf_append(cb_rows, rows, sig)
+            if codebook is None:
+                import math
 
-            n_cells = int(
-                min(4096, max(16, 2 ** round(math.log2(max(math.sqrt(rows), 16.0)))))
-            )
-            centroids = train_centroids_sample(
-                self.index(),
-                n_cells,
-                "embedding",
-                sample_rows=max(4096, 8 * n_cells),
-                # corpus-versioned key: a stale-rebuild after index growth
-                # must RETRAIN, not replay the previous corpus's centroids
-                # memoized under the bare path
-                cache_key=f"{self.index_path}@rows={rows}",
-            )
-            write_ivf_index(
-                self.index().select(
-                    self._cid(), "embedding", "doc_id", "chunk_id", "text"
-                ),
-                self._ann_paths()[0],
-                centroids,
-                index_id="cid",
-                payload_cols=("doc_id", "chunk_id", "text"),
-            )
-            self._write_codebook(centroids, rows, sig)
-            self._codebook = centroids
-            return centroids
+                n_cells = int(
+                    min(4096, max(16, 2 ** round(math.log2(max(math.sqrt(rows), 16.0)))))
+                )
+                codebook = train_centroids_sample(
+                    self.index(),
+                    n_cells,
+                    "embedding",
+                    sample_rows=max(4096, 8 * n_cells),
+                    # corpus-versioned key: a stale-rebuild after index
+                    # growth must RETRAIN, not replay the previous
+                    # corpus's centroids memoized under the bare path
+                    cache_key=f"{self.index_path}@rows={rows}",
+                )
+                write_ivf_index(
+                    self.index().select(
+                        self._cid(), "embedding", "doc_id", "chunk_id", "text"
+                    ),
+                    self._ann_paths()[0],
+                    codebook,
+                    index_id="cid",
+                    payload_cols=("doc_id", "chunk_id", "text"),
+                )
+                self._write_codebook(codebook, rows, sig)
+            return self._state_at(state.listing, codebook=codebook).codebook
 
     def _write_codebook(self, centroids, rows: int, sig: str) -> None:
         # one row per cell, with the corpus fingerprint the layout serves
-        self.spark.createDataFrame(
-            [
-                (i, [float(x) for x in c], rows, sig)
-                for i, c in enumerate(centroids)
-            ],
+        local_frame(
+            self.spark,
+            [(i, [float(x) for x in c], rows, sig) for i, c in enumerate(centroids)],
             "cell int, centroid array<double>, corpus_rows long, corpus_sig string",
         ).coalesce(1).write.mode("overwrite").parquet(self._ann_paths()[1])
 
@@ -631,7 +628,7 @@ class RagEngine:
     #: steady-state trickle, not for doublings
     IVF_APPEND_MAX_GROWTH = 0.25
 
-    def _try_ivf_append(self, cb_rows, rows: int, sig: str) -> bool:
+    def _try_ivf_append(self, cb_rows, rows: int, sig: str):
         """Incremental IVF maintenance: when the corpus GREW (bounded,
         append-only — the engine's own ``index_documents`` contract)
         since the layout was built, assign only the delta chunks to the
@@ -643,19 +640,19 @@ class RagEngine:
         clean subset of the current index (zero orphan cids — an
         external rewrite that removed rows fails this and falls through
         to the retrain path) and growth must stay within
-        ``IVF_APPEND_MAX_GROWTH``. Returns True when the append served;
-        False falls through to the rebuild."""
+        ``IVF_APPEND_MAX_GROWTH``. Returns the codebook when the append
+        served; None falls through to the rebuild."""
         ivf_path = self._ann_paths()[0]
         old_rows = {getattr(r, "corpus_rows", -1) for r in cb_rows}
         if len(old_rows) != 1:
-            return False
+            return None
         old = old_rows.pop()
         if not (0 < old < rows and rows - old <= self.IVF_APPEND_MAX_GROWTH * old):
-            return False
+            return None
         try:
             layout_ids = self.spark.read.parquet(ivf_path).select("cid")
         except Exception:
-            return False
+            return None
         # subset proof + delta discovery in ONE pass over the 8-byte
         # cid lanes: a full-outer marker join, keeping only the rows
         # missing from either side (delta + would-be orphans), eagerly
@@ -672,7 +669,7 @@ class RagEngine:
             .localCheckpoint(eager=True)
         )
         if anomalies.filter(F.col("in_f").isNull()).limit(1).count():
-            return False  # orphans: the old layout is not a subset
+            return None  # orphans: the old layout is not a subset
         from .operators.similarity import append_ivf_index
 
         codebook = _codebook_array(cb_rows)
@@ -690,8 +687,7 @@ class RagEngine:
             payload_cols=("doc_id", "chunk_id", "text"),
         )
         self._write_codebook(codebook, rows, sig)
-        self._codebook = codebook
-        return True
+        return codebook
 
     def index_files(
         self,
@@ -715,12 +711,71 @@ class RagEngine:
         return self.spark.read.schema(self._schema()).parquet(self.index_path)
 
     def _schema(self) -> StructType:
-        if self._index_schema is None:
+        schema = self._state.schema
+        if schema is None:
             schema = self.spark.read.parquet(self.index_path).schema
             if isinstance(schema["doc_id"].dataType, IntegralType):
                 schema["doc_id"].dataType = LongType()
-            self._index_schema = schema
-        return self._index_schema
+            with self._layout_lock:  # the schema serves every listing
+                self._state = self._state._replace(schema=schema)
+        return schema
+
+    def _state_at(self, listing: tuple | None, **facts) -> _IndexState:
+        """The record for ``listing`` with ``facts`` set in it, read
+        without the lock when it is held and nothing changes. A record
+        keyed on another listing is replaced, under ``_layout_lock``, by
+        one that keeps only its schema and snapshot (``_IndexState``)."""
+        state = self._state
+        if state.listing == listing and not facts:
+            return state
+        with self._layout_lock:
+            state = self._state
+            if state.listing != listing:
+                state = _IndexState(listing, state.schema, snapshot=state.snapshot)
+            self._state = state = state._replace(**facts)
+            return state
+
+    def _route(self, listing: tuple | None) -> tuple[str, _IndexState]:
+        """The route of a call that took ``listing`` (``_index_listing``),
+        and the record it was decided on:
+
+        - ``"snapshot"``: the index is under the ANN bytes bound (so the
+          snapshot only stands in for the exact route) and
+          ``SNAPSHOT_MAX_BYTES``, and ``_IndexSnapshot`` serves it. A
+          snapshot keyed on another listing is re-read under
+          ``_layout_lock``, so concurrent first asks read the index once;
+          a failed read keeps the held one and takes the Spark route.
+        - ``"scan"``: the exact top-k scan. Under the bytes bound
+          ``ann_threshold_rows × max(32, dim)`` the index holds fewer rows
+          than the threshold, with no count job: even compressed parquet
+          keeps a random-float vector at ~1 byte per component or more
+          (a fixed 100 MB/100 k pair routed a 150 k-row index past a
+          100 k threshold to the scan). The shortcut only ever picks the
+          exact route, and the tiny thresholds tests use bypass it.
+        - ``"ivf"``: the row count (``_counted``) exceeds the threshold."""
+        state = self._state_at(listing)
+        bound = self.ann_threshold_rows * max(32, self.dim)
+        size = None if listing is None else sum(n for _, n, _ in listing)
+        if size is not None and size < min(bound, SNAPSHOT_MAX_BYTES):
+            snap = state.snapshot
+            if snap is None or snap.key != listing:
+                with self._layout_lock:
+                    state = self._state_at(listing)
+                    snap = state.snapshot
+                    if snap is None or snap.key != listing:
+                        snap = self._load_snapshot(listing, snap)
+                        if snap is not None:  # an FS error keeps nothing partial
+                            state = self._state_at(listing, snapshot=snap)
+            if snap is not None and snap.emb is not None:
+                return "snapshot", state
+        elif state.snapshot is not None:  # free what another writer outgrew
+            state = self._state_at(listing, snapshot=None)
+        if state.rows is None and self.ann_threshold_rows >= 100_000 and (
+            size is not None and size < bound
+        ):
+            return "scan", state
+        state = self._counted(state)
+        return ("scan" if state.rows <= self.ann_threshold_rows else "ivf"), state
 
     # -- query path (J1, O1, A1, P1, P2) ------------------------------------
 
@@ -736,7 +791,8 @@ class RagEngine:
         AI.py:138 (``as_retriever(search_type=...)``):
 
         - ``"similarity"`` (reference behavior): one broadcastable
-          literal query vector scored against the index scan.
+          literal query vector scored against the index scan; when the
+          snapshot serves, its rows as a local frame, which runs no job.
         - ``"mmr"``: fetch_k cosine candidates, then the MMR greedy
           (operators/ranking weights) diversifies down to k. The
           greedy here runs driver-side over the collected fetch_k≈2k
@@ -748,71 +804,16 @@ class RagEngine:
         """
         k = k or self.k
         if search_type == "similarity":
+            route, state = self._route(self._index_listing())
             qvec = embed_text(question, self.dim)
-            return self._topk_chunks(qvec, k, payload_cols=("text",))
+            if route == "snapshot":
+                return local_frame(self.spark, state.snapshot.topk(qvec, k), self._rows_schema())
+            return self._topk_chunks(qvec, k, ("text",), route, state)
         if search_type == "mmr":
             return self._retrieve_mmr(question, k, fetch_k or max(2 * k, 8))
         if search_type == "hybrid":
             return self._retrieve_hybrid(question, k)
         raise ValueError(f"unknown search_type: {search_type!r}")
-
-    def _count_index_rows(self) -> int:
-        # one parquet-metadata count per built index, then cached — the
-        # router must not pay a count per question
-        if self._index_rows is None:
-            self._index_rows = self.index().count()
-        return self._index_rows
-
-    def _below_ann_threshold(self, listing: tuple | None = None) -> bool:
-        """Route decision with a free fast path: a driver-side FS size
-        listing (no Spark job) proves a reference-scale index is below
-        the ANN threshold. The bytes bound SCALES with the configured
-        threshold: each index row carries a dim-float embedding plus
-        id+text payload, and even byte-stream-split+compressed parquet
-        does not shrink a random-float vector below ~1 byte per
-        component, so < threshold_rows × max(32, dim) bytes implies
-        rows < threshold for any threshold (a fixed 100 MB/100 k pair
-        silently routed a 150 k-row index past a 100 k threshold to
-        the exact scan, defeating the user's setting). The shortcut
-        can only ever pick the EXACT route (a misestimate costs a
-        scan, never recall), and it is bypassed for the artificially
-        tiny thresholds tests use. Only past the bytes bound does the
-        exact count job run (cached). ``listing`` is the question's
-        ``_index_listing()`` when the caller has taken it."""
-        if self._index_rows is None and self.ann_threshold_rows >= 100_000:
-            if listing is None:
-                listing = self._index_listing()  # None on FS quirks: count below
-            if listing is not None and _listing_bytes(listing) < self._ann_bytes_bound():
-                return True
-        return self._count_index_rows() <= self.ann_threshold_rows
-
-    def _ann_bytes_bound(self) -> int:
-        return self.ann_threshold_rows * max(32, self.dim)
-
-    def _serving_snapshot(self, listing: tuple | None) -> _IndexSnapshot | None:
-        """The driver-held index for the files ``listing`` names, (re)read
-        when its key differs, or None when the Spark route must serve:
-        no listing, an index whose bytes are not under both the ANN
-        bytes bound (so the snapshot only ever serves the exact route)
-        and ``SNAPSHOT_MAX_BYTES``, an index ``_snapshot_arrays`` does not
-        serve, or an FS error while reading it. The key is checked again
-        under ``_layout_lock``, so concurrent first asks read the index
-        once."""
-        if listing is None or _listing_bytes(listing) >= min(
-            self._ann_bytes_bound(), SNAPSHOT_MAX_BYTES
-        ):
-            self._snapshot = None  # free what another writer outgrew
-            return None
-        snap = self._snapshot
-        if snap is None or snap.key != listing:
-            with self._layout_lock:
-                snap = self._snapshot
-                if snap is None or snap.key != listing:
-                    snap = self._load_snapshot(listing, snap)
-                    if snap is None:  # an FS error: keep nothing partial
-                        return None
-                    self._snapshot = snap
-        return snap if snap.emb is not None else None
 
     def _load_snapshot(
         self, key: tuple, held: _IndexSnapshot | None
@@ -882,7 +883,8 @@ class RagEngine:
         qvec,
         k: int,
         payload_cols: tuple[str, ...],
-        below: bool | None = None,
+        route: str,
+        state: _IndexState,
     ) -> DataFrame:
         """Single-question top-k against the chunk index: ``topk_cosine``
         on both sides of ``ann_threshold_rows``, with the same raw score
@@ -898,12 +900,10 @@ class RagEngine:
         tier: that join cost more than the exact scan). Only
         index-time structure beats the exact scan at scale: inline LSH
         banding per question measured 17.9 s against the scan's 3.4 s.
-        ``below`` is the caller's route decision for this question, taken
-        here when not given. Output schema: (doc_id, chunk_id, *payload,
-        score)."""
-        if below is None:
-            below = self._below_ann_threshold()
-        if below:
+        ``route`` (``scan`` or ``ivf``) and ``state`` are the caller's
+        ``_route`` of this question. Output schema: (doc_id, chunk_id,
+        *payload, score)."""
+        if route == "scan":
             index = self.index()
         else:
             from pyspark.sql.types import IntegerType
@@ -913,7 +913,7 @@ class RagEngine:
 
             ivf_path = self._ann_paths()[0]
             cells = sorted(
-                nearest_cells(qvec, self._ensure_ann_index(), self.ann_nprobe)
+                nearest_cells(qvec, self._ensure_ann_index(state), self.ann_nprobe)
             )
             # the layout's columns, declared so the read infers nothing
             schema = self._schema()
@@ -949,14 +949,7 @@ class RagEngine:
         # gives the candidates with no job.
         from .operators.ranking import mmr_greedy
 
-        listing = self._index_listing()
-        qvec = embed_text(question, self.dim)
-        snap = self._serving_snapshot(listing)
-        if snap is not None:  # its vectors equal the collected ones
-            rows = snap.topk(qvec, fetch_k, embedding=True)
-        else:
-            below = self._below_ann_threshold(listing)
-            rows = self._topk_chunks(qvec, fetch_k, ("text", "embedding"), below).collect()
+        rows = self._nearest(embed_text(question, self.dim), fetch_k, embedding=True)
         cand = {(r.doc_id, r.chunk_id): r for r in rows}
 
         def cos(a, b) -> float:
@@ -968,7 +961,8 @@ class RagEngine:
 
         rel = {key: float(r.score) for key, r in cand.items()}
         picked = [cand[key] for key, _, _ in mmr_greedy(rel, cos, k)]
-        return self._local_frame(
+        return local_frame(
+            self.spark,
             [(r.doc_id, r.chunk_id, r.text, float(r.score)) for r in picked],
             self._rows_schema(),
         )
@@ -991,11 +985,13 @@ class RagEngine:
         )[:5]
         if not terms:
             return self.retrieve(question, k, search_type="similarity")
+        # one route for all three legs; the snapshot serves no BM25 leg
+        route, state = self._route(self._index_listing())
+        route = "scan" if route == "snapshot" else route
         idx = self.index().withColumn(
             "cid", F.concat_ws("#", F.col("doc_id"), F.col("chunk_id"))
         )
-        below = self._below_ann_threshold()  # one route for all three legs
-        if below:
+        if route == "scan":
             # reference-scale: tokenize-and-score scan, bit-stable with
             # the historical path and the oracle-checked operator
             bm = bm25_scores(
@@ -1009,14 +1005,14 @@ class RagEngine:
             # containing >=1 query term (bm25_postings_scores docstring).
             from .operators.ranking import bm25_postings_scores
 
-            self._ensure_lex_index()
+            self._ensure_lex_index(state)
             lex_path, stats_path = self._lex_paths()
             bm = bm25_postings_scores(
                 self.spark, lex_path, stats_path, terms, id_col="cid"
             )
         qvec = embed_text(question, self.dim)
         # the vector leg routes on index size like every retrieval
-        vs = self._topk_chunks(qvec, depth, payload_cols=(), below=below).select(
+        vs = self._topk_chunks(qvec, depth, (), route, state).select(
             F.concat_ws("#", F.col("doc_id"), F.col("chunk_id")).alias("cid"),
             "score",
         )
@@ -1029,7 +1025,7 @@ class RagEngine:
         # scan; the broadcast-join-against-the-full-scan form read all
         # 2 M rows to serve k of them. Below the threshold the scan is
         # the cheap part and the historical lazy plan stays untouched.
-        if not below:
+        if route == "ivf":
             picked = top.collect()  # k rows by construction
             # doc_id values come back via the cid string; cast the
             # LITERALS to the index's own doc_id type (constant-folded,
@@ -1049,7 +1045,8 @@ class RagEngine:
                 .select("cid", "doc_id", "chunk_id", "text")
                 .collect()
             )
-            return self._local_frame(
+            return local_frame(
+                self.spark,
                 sorted(
                     (
                         (r.doc_id, r.chunk_id, r.text, scores[r.cid])
@@ -1071,23 +1068,16 @@ class RagEngine:
         shape {input, context, answer} (AI.py:173-185) plus the
         retrieved rows, equal to ``retrieve(...).collect()``.
 
-        One ``_index_listing`` decides the route. Below the ANN
-        threshold, and under ``SNAPSHOT_MAX_BYTES``, the question is
-        scored against the driver-held ``_IndexSnapshot`` of the files
+        One ``_index_listing`` decides the route (``_nearest``). Below
+        the ANN threshold, and under ``SNAPSHOT_MAX_BYTES``, the question
+        is scored against the driver-held ``_IndexSnapshot`` of the files
         that listing names, bit-identical to ``topk_cosine``: no Spark
         job, also on the first ask after the listing changes, which
         reads the files the snapshot does not hold on the driver.
         Otherwise it is the top-k scan, one job."""
         history = self.history(session_id) if session_id else []
         effective = self.rewrite(question, history)
-        listing = self._index_listing()
-        qvec = embed_text(effective, self.dim)
-        snap = self._serving_snapshot(listing)
-        if snap is not None:
-            retrieved = snap.topk(qvec, self.k)
-        else:  # k rows, k≈4
-            below = self._below_ann_threshold(listing)
-            retrieved = self._topk_chunks(qvec, self.k, ("text",), below).collect()
+        retrieved = self._nearest(embed_text(effective, self.dim), self.k)
         context = "\n\n".join(r.text for r in retrieved)
         answer = postprocess_answer(self.answerer(effective, context))
         if session_id is not None:
@@ -1114,18 +1104,23 @@ class RagEngine:
         the empty-profile embedding (deterministic, still k rows) —
         the cold-start behavior a recommender needs defined.
 
-        Routed like ``ask``: when the snapshot serves, the result is a
-        local frame of its rows, and building and collecting it run no
-        Spark job; otherwise it is ``retrieve``'s lazy top-k scan."""
+        It is ``retrieve(profile, k)``: a local frame of the snapshot's
+        rows when it serves, otherwise the lazy top-k scan."""
         history = self.history(session_id)
         profile = " ".join(m["content"] for m in history if m["role"] == "user")
-        k = k or self.k
-        listing = self._index_listing()
-        qvec = embed_text(profile, self.dim)
-        snap = self._serving_snapshot(listing)
-        if snap is not None:
-            return self._local_frame(snap.topk(qvec, k), self._rows_schema())
-        return self._topk_chunks(qvec, k, ("text",), self._below_ann_threshold(listing))
+        return self.retrieve(profile, k)
+
+    def _nearest(self, qvec, k: int, embedding: bool = False) -> list[Row]:
+        """The collected top-k of ``qvec`` on one ``_route`` of one
+        listing: the snapshot's rows, or ``_topk_chunks`` collected (one
+        job). With ``embedding`` each row carries its vector after
+        ``text``; the snapshot's float64 vectors equal the collected
+        float32 ones."""
+        route, state = self._route(self._index_listing())
+        if route == "snapshot":
+            return state.snapshot.topk(qvec, k, embedding)
+        payload = ("text", "embedding") if embedding else ("text",)
+        return self._topk_chunks(qvec, k, payload, route, state).collect()
 
     def _rows_schema(self) -> StructType:
         """The schema of a retrieval result: the index's ``doc_id``,
@@ -1136,16 +1131,6 @@ class RagEngine:
             + [StructField("score", DoubleType())]
         )
 
-    def _local_frame(self, rows: list, schema: StructType) -> DataFrame:
-        """``rows`` (tuples in ``schema``'s column order) as an
-        Arrow-backed local frame: building and collecting it run no Spark
-        job, where a list input runs a Python stage of
-        ``defaultParallelism`` tasks."""
-        import pandas as pd
-
-        pdf = pd.DataFrame.from_records(rows, columns=schema.fieldNames())
-        return self.spark.createDataFrame(pdf, schema)
-
     # -- session lifecycle (T1 batch view; AI.py:155-161,232-235) -----------
 
     def history(self, session_id: str) -> list[dict]:
@@ -1155,14 +1140,13 @@ class RagEngine:
     def history_df(self, session_id: str) -> DataFrame:
         """The session's log in turn order as a local frame (an
         ``orderBy`` would cost jobs)."""
-        return self._local_frame(
+        return local_frame(
+            self.spark,
             [
                 (session_id, turn, m["role"], m["content"])
                 for turn, m in enumerate(self.history(session_id))
             ],
-            StructType.fromDDL(
-                "session_id string, turn int, role string, content string"
-            ),
+            "session_id string, turn int, role string, content string",
         )
 
     def clear_session(self, session_id: str) -> None:

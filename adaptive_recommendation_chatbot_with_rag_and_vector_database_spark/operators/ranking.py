@@ -403,7 +403,7 @@ def bm25_postings_scores(
     of <=|terms| partition directories (``read_partitions``), like the
     engine's IVF cell read. Both reads declare the layout's schema, so
     building the plan runs no footer-inference job."""
-    from ..sources.loaders import read_partitions
+    from ..sources.loaders import local_frame, read_partitions
 
     uterms = list(dict.fromkeys(terms))  # order-preserving unique
     post = read_partitions(
@@ -415,7 +415,7 @@ def bm25_postings_scores(
     )
     stats = spark.read.schema(POSTINGS_STATS_DDL).parquet(stats_path)
     if post is None:  # no term has a populated bucket: empty frame
-        return spark.createDataFrame([], f"{id_col} string, bm25 double")
+        return local_frame(spark, [], f"{id_col} string, bm25 double")
     post = post.filter(F.col("term").isin(uterms))
     wide = post.groupBy(id_col, "dl").agg(
         *[

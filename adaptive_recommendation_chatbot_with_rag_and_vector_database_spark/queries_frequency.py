@@ -24,7 +24,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .functions.tokenize import SQL_TOKS, py_toks, toks_col
 from .registry import query
-from .sources.loaders import load_table, scatter
+from .sources.loaders import load_table, local_frame, scatter
 
 
 # --- H1: pairwise association rules over order baskets ---------------------
@@ -475,8 +475,8 @@ def q_cms_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    rows_df = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)], "rid int, a int, b int"
+    rows_df = local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)], "rid int, a int, b int"
     )
     cells = (
         vocab.join(F.broadcast(rows_df))

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .operators.ranks import class_cum
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, local_frame
 
 # LCG constants (glibc's rand): public-domain mixing for seeded,
 # engine-portable pseudo-randomness. int64-safe for every fixture key.
@@ -839,9 +839,7 @@ def q_grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         (comp, n_cells, n_points)
         for comp, (n_cells, n_points) in sorted(agg.items())
     ]
-    return spark.createDataFrame(
-        out, "cluster_id long, n_cells long, n_points long"
-    )
+    return local_frame(spark, out, "cluster_id long, n_cells long, n_points long")
 
 
 # --- M9: Mann-Whitney U rank-sum test ---------------------------------------
@@ -1670,7 +1668,7 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — checkpoint conversion cost > the saved pruned events scan —
     # and was reverted, the d63a41f discipline)
     users = ev.select("user_id").distinct()
-    periods = spark.createDataFrame([(0,), (1,)], "period int")
+    periods = local_frame(spark, [(0,), (1,)], "period int")
     grid = (
         users.crossJoin(F.broadcast(periods))
         .join(spend, ["user_id", "period"], "left")

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .operators.ranks import class_cum
 from .registry import query
-from .sources.loaders import load_table, substrate
+from .sources.loaders import load_table, local_frame, substrate
 
 # --- W18a: PSI feature-drift report ----------------------------------------
 
@@ -1349,9 +1349,7 @@ def q_threshold_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     cls = _score_classes(spark, sf_dir).select(
         "score", "pos_cnt", "neg_cnt"
     )
-    grid = spark.createDataFrame(
-        [(t,) for t in _THR_GRID], "thr int"
-    )
+    grid = local_frame(spark, [(t,) for t in _THR_GRID], "thr int")
     m = (
         F.broadcast(grid)
         .join(cls)

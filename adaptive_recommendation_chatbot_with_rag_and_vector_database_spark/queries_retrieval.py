@@ -32,7 +32,7 @@ from .operators.ranking import (
     rrf_fuse,
 )
 from .registry import query
-from .sources.loaders import load_table, substrate
+from .sources.loaders import load_table, local_frame, substrate
 
 # Fixed lexical query: three mid-frequency corpus terms (order matters —
 # the per-term contribution sum is left-to-right on both engines).
@@ -707,8 +707,8 @@ def q_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the session _rm_hits checkpoint (shared with q_rec_exposure)."""
     emb = load_table(spark, "embeddings", sf_dir)
     hits, panel_rows = _rm_hits(spark, sf_dir)
-    qlabels = spark.createDataFrame(
-        [(r.vec_id, r.label) for r in panel_rows], "query_id long, qlabel int"
+    qlabels = local_frame(
+        spark, [(r.vec_id, r.label) for r in panel_rows], "query_id long, qlabel int"
     )
     lbl = emb.groupBy("label").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     ranked = (

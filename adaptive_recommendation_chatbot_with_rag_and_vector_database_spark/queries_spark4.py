@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, local_frame
 from .sources.pyds import _LCG_A, _LCG_C, _LCG_M, _TAG_MOD
 
 _GEN_ROWS = 20000
@@ -394,7 +394,8 @@ def q_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("max_disc", DoubleType()),
         ]
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m["n_rows"],

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import query
-from .sources.loaders import load_table
+from .sources.loaders import load_table, local_frame
 
 # --- W16a: overlapping-interval merge --------------------------------------
 
@@ -1284,8 +1284,8 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         lvl_new = _round_half_away(0.5 * xs[i - 1] + 0.5 * (lvl + trd), 6)
         trd = _round_half_away(0.3 * (lvl_new - lvl) + 0.7 * trd, 6)
         lvl = lvl_new
-    return spark.createDataFrame(
-        out, "d date, actual double, forecast double, abs_err double"
+    return local_frame(
+        spark, out, "d date, actual double, forecast double, abs_err double"
     ).orderBy("d")
 
 
@@ -1444,7 +1444,7 @@ def q_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = daily.select(
         "d", "rev", F.row_number().over(w_idx).cast("long").alias("i")
     )
-    ws = spark.createDataFrame([(w,) for w in _HURST_WINDOWS], "w long")
+    ws = local_frame(spark, [(w,) for w in _HURST_WINDOWS], "w long")
     blk = idx.crossJoin(F.broadcast(ws)).select(
         "w", "rev", "d", ((F.col("i") - 1) / F.col("w")).cast("long").alias("b")
     )

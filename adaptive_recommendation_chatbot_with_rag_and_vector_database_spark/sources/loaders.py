@@ -462,6 +462,27 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table)
 
 
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s column order; ``schema`` a
+    StructType or a DDL string) as a local frame: an Arrow table handed
+    to ``createDataFrame`` plans a ``LocalTableScan``, which runs no Spark
+    job to build or collect, where a list input runs a Python stage of
+    ``defaultParallelism`` tasks. Each column is built in its Arrow type,
+    so a nullable integer stays an integer (a pandas frame widens it to
+    float), and no rows still give ``schema``'s columns."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def read_partitions(
     spark: SparkSession,
     path: str,
@@ -476,14 +497,11 @@ def read_partitions(
     per-question cost at 2048 IVF cells — while this lists only the
     probed ones. A ``schema`` (``col`` included; a StructType or a DDL
     string) spares the read its footer-inference job."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    # one py4j lookup of the full class name, not one per package
+    path_cls = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
+    fs = path_cls(path).getFileSystem(spark._jsc.hadoopConfiguration())
     subdirs = [
-        p
-        for p in (f"{path}/{col}={v}" for v in values)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(p))
+        p for p in (f"{path}/{col}={v}" for v in values) if fs.exists(path_cls(p))
     ]
     if not subdirs:
         return None

@@ -251,7 +251,7 @@ def test_retrieve_routes_through_ann_above_threshold(spark, tmp_path):
     )
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     assert eng.index_documents(docs) > 0
-    assert eng._count_index_rows() > 10  # the route is actually ANN
+    assert eng._route(eng._index_listing())[1].rows > 10  # the route is actually ANN
 
     exact = RagEngine(spark, index_path=str(tmp_path / "index"))
     q = "priority freight shipments delayed by clerk errors"
@@ -292,7 +292,7 @@ def test_fresh_engine_reuses_on_disk_ann_layout(spark, tmp_path, monkeypatch):
     assert eng.index_documents(docs) > 0
     q = "priority freight shipments delayed by clerk errors"
     built = eng.retrieve(q).collect()
-    assert eng._codebook is not None and len(built) == eng.k
+    assert eng._state.codebook is not None and len(built) == eng.k
 
     def boom(*a, **k):
         raise AssertionError("fresh engine rebuilt an already-built layout")
@@ -301,7 +301,7 @@ def test_fresh_engine_reuses_on_disk_ann_layout(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sim, "write_ivf_index", boom)
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     got = fresh.retrieve(q).collect()
-    assert fresh._codebook is not None
+    assert fresh._state.codebook is not None
     assert [(r.doc_id, r.chunk_id) for r in got] == [
         (r.doc_id, r.chunk_id) for r in built
     ]
@@ -335,7 +335,7 @@ def test_ann_rebuild_after_corpus_growth_retrains(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(sim, "train_centroids_sample", spy)
     eng.retrieve(q).collect()  # first build
     assert eng.index_documents(docs.filter("doc_id % 2 = 1")) > 0
-    assert eng._codebook is None  # corpus change invalidates in-session
+    assert eng._state_at(eng._index_listing()).codebook is None  # corpus change invalidates in-session
     eng.retrieve(q).collect()  # fingerprint mismatch => rebuild
     assert len(seen_keys) == 2  # retrained, not replayed from memo/disk
     assert seen_keys[0] != seen_keys[1]  # corpus-versioned cache keys
@@ -402,7 +402,7 @@ def test_hybrid_routes_through_postings_above_threshold(spark, tmp_path, monkeyp
     assert eng.index_documents(docs) > 0
     q = "priority freight shipments delayed by clerk errors"
     rows = eng.retrieve(q, search_type="hybrid").collect()
-    assert len(rows) == eng.k and eng._lex_built
+    assert len(rows) == eng.k and eng._state.postings
     # per question, with the layouts built: the fused top-k and payload
     # collects, plus the vector leg's ranking when a term's bucket is
     # populated; the postings and stats reads declare their schemas, so
@@ -422,7 +422,7 @@ def test_hybrid_routes_through_postings_above_threshold(spark, tmp_path, monkeyp
     monkeypatch.setattr(rk, "write_postings_index", boom)
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     got = fresh.retrieve(q, search_type="hybrid").collect()
-    assert fresh._lex_built
+    assert fresh._state.postings
     assert [(r.doc_id, r.chunk_id) for r in got] == [
         (r.doc_id, r.chunk_id) for r in rows
     ]
@@ -470,7 +470,7 @@ def test_fresh_engine_detects_equal_rowcount_corpus_rewrite(
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     got = fresh.retrieve(q).collect()
     assert calls, "fresh engine trusted a stale fingerprint after an equal-rowcount rewrite"
-    assert fresh._codebook is not None and len(got) == fresh.k
+    assert fresh._state.codebook is not None and len(got) == fresh.k
 
 
 def test_bounded_corpus_growth_appends_into_ivf_layout(
@@ -511,7 +511,7 @@ def test_bounded_corpus_growth_appends_into_ivf_layout(
         .first()
     )
     got = eng.retrieve(new_chunk.text).collect()
-    assert eng._codebook is not None
+    assert eng._state.codebook is not None
     assert got[0].doc_id == new_chunk.doc_id and got[0].chunk_id == 0
 
     # the layout now covers the whole corpus, no duplicates
@@ -522,7 +522,36 @@ def test_bounded_corpus_growth_appends_into_ivf_layout(
     # and a FRESH engine reuses the appended layout (fingerprint matches)
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     fresh.retrieve("delayed clerk errors").collect()
-    assert fresh._codebook is not None
+    assert fresh._state.codebook is not None
+
+
+def test_another_writers_append_reaches_the_ivf_route(spark, tmp_path):
+    """Engine A verifies its IVF layout above a small threshold, then
+    engine B appends one document to the same index. A's next
+    similarity, MMR and ask top hits are a fresh engine's, and the row
+    count A routes on is the index's: what A knows of its index is kept
+    per file listing, so B's new file makes A re-verify the layout."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    path = str(tmp_path / "index")
+    eng = RagEngine(spark, index_path=path, ann_threshold_rows=10)
+    assert eng.index_documents(load_table(spark, "documents", SF_DIR)) > 0
+    eng.retrieve("priority freight shipments").collect()  # verifies or builds the layout
+    text = "zebra quokka marmalade telescope nebula"
+    docs = spark.createDataFrame([(999999, text)], "doc_id long, text string")
+    assert RagEngine(spark, index_path=path, ann_threshold_rows=10).index_documents(docs) > 0
+    got = [
+        eng.retrieve(text).collect()[0],
+        eng.retrieve(text, search_type="mmr").collect()[0],
+        eng.ask(text)["retrieved"][0],
+    ]
+    top = RagEngine(spark, index_path=path, ann_threshold_rows=10).retrieve(text).collect()[0]
+    assert (top.doc_id, top.chunk_id) == (999999, 0)
+    assert [(r.doc_id, r.chunk_id) for r in got] == [(999999, 0)] * 3
+    route, state = eng._route(eng._index_listing())
+    assert route == "ivf" and state.rows == eng.index().count()
 
 
 def test_ivf_route_is_topk_over_probed_cells(spark, tmp_path):
@@ -566,7 +595,7 @@ def test_ivf_route_is_topk_over_probed_cells(spark, tmp_path):
     layout = spark.read.parquet(ivf_path)
     for q in questions:
         qvec = embed_text(q, eng.dim)
-        cells = nearest_cells(qvec, eng._codebook, eng.ann_nprobe)
+        cells = nearest_cells(qvec, eng._state.codebook, eng.ann_nprobe)
         want = topk_cosine(
             layout.filter(F.col("cell").isin(cells)),
             qvec,
@@ -715,7 +744,7 @@ def test_index_sees_rows_another_engine_appended(engine, spark):
     engine appending to the same index path is visible to the first
     engine's next ask."""
     engine.ask("warm-up: caches the index schema")
-    assert engine._index_schema is not None
+    assert engine._state.schema is not None
     other = RagEngine(spark, index_path=engine.index_path)
     text = "Zebras graze on savanna grasslands near the watering hole."
     docs = spark.createDataFrame([(99, text)], "doc_id long, text string")
@@ -732,27 +761,27 @@ def test_index_documents_resets_cached_schema(engine, spark, tmp_path):
     import shutil
 
     engine.ask("warm-up: caches the index schema")
-    assert engine._index_schema is not None
+    assert engine._state.schema is not None
     (tmp_path / "files" / "tea.txt").write_text("Green tea leaves are steamed.")
     assert engine.index_files(str(tmp_path / "files"), glob="*.txt") > 0
-    assert engine._index_schema is not None
+    assert engine._state.schema is not None
 
     ints = spark.createDataFrame([(7, "Black tea is oxidized.")], "doc_id int, text string")
     assert engine.index_documents(ints) > 0
-    assert engine._index_schema is None
+    assert engine._state.schema is None
 
     engine.ask("re-reads the schema")
-    assert engine._index_schema is not None
+    assert engine._state.schema is not None
     shutil.rmtree(engine.index_path)
     assert engine.index_files(str(tmp_path / "files"), glob="*.txt") > 0
-    assert engine._index_schema is None
+    assert engine._state.schema is None
 
 
 def test_ask_after_append_runs_no_job(engine, spark):
     """The ask after an append reads the added file on the driver and
     runs no job. The append kept the index's column types, so it kept
-    the cached schema: the top-k scan stays one job, with no schema
-    inference."""
+    the cached schema, and ``retrieve`` returns the snapshot's rows as a
+    local frame: no job either."""
     engine.ask("warm-up: caches the index schema")
     docs = spark.createDataFrame(
         [(42, "Kettles whistle when the water boils.")], "doc_id long, text string"
@@ -761,7 +790,7 @@ def test_ask_after_append_runs_no_job(engine, spark):
     q = "when does the kettle whistle?"
     assert job_stats(spark, lambda: engine.ask(q))[0] == 0
     assert engine.ask(q)["retrieved"] == _topk(engine, q)
-    assert job_stats(spark, lambda: engine.retrieve(q).collect())[0] == 1
+    assert job_stats(spark, lambda: engine.retrieve(q).collect())[0] == 0
 
 
 def _topk(eng, q):
@@ -815,7 +844,7 @@ def test_snapshot_ask_equals_topk_cosine(spark, tmp_path):
     for q in questions:
         got = eng.ask(q)["retrieved"]
         assert got == _topk(eng, q), q
-    assert eng._snapshot is not None and eng._snapshot.emb is not None
+    assert eng._state.snapshot is not None and eng._state.snapshot.emb is not None
     top = [(r.doc_id, r.chunk_id) for r in eng.ask(src.text)["retrieved"]]
     assert [key for key in top if key[0] > 9000] == [(9001, 3), (9002, 0), (9002, 1)]
     eng.k = eng.index().count()
@@ -862,7 +891,7 @@ def test_bad_embedding_keeps_the_spark_route(engine, spark, embedding):
     ).write.mode("append").parquet(engine.index_path)
     q = "priority freight"
     assert engine.ask(q)["retrieved"] == engine.retrieve(q).collect()
-    assert engine._snapshot.emb is None
+    assert engine._state.snapshot.emb is None
     assert job_stats(spark, lambda: engine.ask("orchard?"))[0] == 1
 
 
@@ -1003,8 +1032,8 @@ def test_snapshot_serves_int_and_long_doc_id_files(engine, spark):
     jobs, got = _ask_jobs(engine, text)
     assert jobs == 0 and got == _topk(engine, text)
     assert got[0].doc_id == 45
-    assert engine._snapshot.emb is not None
-    assert engine._snapshot.doc_id.dtype == np.int64
+    assert engine._state.snapshot.emb is not None
+    assert engine._state.snapshot.doc_id.dtype == np.int64
 
 
 def test_failed_copy_answers_on_the_spark_route(engine, spark):
@@ -1013,14 +1042,14 @@ def test_failed_copy_answers_on_the_spark_route(engine, spark):
     copies work again, the held snapshot is refreshed with the added
     file."""
     engine.ask("warm-up: loads the snapshot")
-    held, before = engine._snapshot, _data_files(engine)
+    held, before = engine._state.snapshot, _data_files(engine)
     spy = _spy_fs(engine)
     _append(spark, engine.index_path, 46, "Owls hunt silently at dusk.")
     spy.fail = True
     q = "owls hunting at dusk"
     jobs, got = _ask_jobs(engine, q)
     assert jobs == 1 and got == _topk(engine, q)
-    assert engine._snapshot is held
+    assert engine._state.snapshot is held
     spy.fail = False
     jobs, got = _ask_jobs(engine, q)
     assert jobs == 0 and got == _topk(engine, q)
@@ -1314,11 +1343,15 @@ def test_topk_cosine_bit_identical_to_generic_cosine(engine, spark):
 def test_retrieve_builds_score_expression_at_most_once(engine, monkeypatch):
     """Distinct questions bind new literals into one session-cached
     score expression instead of rebuilding it: ``dot`` is called at
-    most once over five retrievals."""
+    most once over five retrievals on the Spark route."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark import (
+        engine as engine_mod,
+    )
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.functions import (
         vector,
     )
 
+    monkeypatch.setattr(engine_mod, "SNAPSHOT_MAX_BYTES", 0)
     calls = []
     real = vector.dot
 
@@ -1332,10 +1365,15 @@ def test_retrieve_builds_score_expression_at_most_once(engine, monkeypatch):
     assert len(calls) <= 1
 
 
-def test_ask_plan_is_one_projection_over_the_scan(engine):
+def test_ask_plan_is_one_projection_over_the_scan(engine, monkeypatch):
     """The two bound literals collapse into the scoring projection: the
-    ask's plan is one scan, one ``Project`` and the top-k, with no
-    exchange and no Python."""
+    ask's plan on the Spark route is one scan, one ``Project`` and the
+    top-k, with no exchange and no Python."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark import (
+        engine as engine_mod,
+    )
+
+    monkeypatch.setattr(engine_mod, "SNAPSHOT_MAX_BYTES", 0)
     df = engine.retrieve("order priorities?")
     df.collect()
     assert count_nodes(df, "TakeOrderedAndProject") == 1
