@@ -18,8 +18,9 @@ verbs on Spark:
 - ``retrieve`` / ``ask`` — embed question → top-k cosine
   (TakeOrderedAndProject) → order-preserving context stuffing →
   pluggable answerer → refusal/first-line post-processing
-  (AI.py:176-185). Each call lists the index's data files once (one
-  Hadoop-FS call), and ``_route`` decides from that listing:
+  (AI.py:176-185). Each call lists the index's data files once
+  (``os.scandir`` on a local index, one Hadoop-FS call on any other),
+  and ``_route`` decides from that listing:
   ``snapshot`` below the ANN threshold and up to ``SNAPSHOT_MAX_BYTES``
   of index, where ``ask``, ``recommend``, MMR and ``retrieve`` run NO
   Spark job, scoring a driver-held snapshot of the index bit-identical
@@ -53,13 +54,14 @@ whole pipeline is deterministic and testable.
 from __future__ import annotations
 
 import hashlib
-import os
 import tempfile
 import threading
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 from typing import Callable, NamedTuple
 
 import numpy as np
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -86,7 +88,7 @@ from .operators.retrieval import (
     write_index_incremental,
 )
 from .sources.binary_docs import load_binary_documents, utf8_extractor
-from .sources.loaders import local_frame
+from .sources.loaders import PathFs, local_frame
 
 
 def passthrough_rewrite(question: str, history: list[dict]) -> str:
@@ -246,9 +248,18 @@ then cost 7-10 ms of CPU and wall, where the scan took 386-598 ms wall.
 Holding the content hashes too, re-measured at 16.3 MB (45,500 rows, 4
 files, 116 MiB before), 2 runs against 2 without them: the read took
 0.18-0.19 s (0.15-0.16 s), RSS rose by 123-137 MiB at its peak
-(119-120) and 57 MiB stayed held (51). The cap keeps the snapshot under
-the size of the driver process it lives in; larger indexes stay on the
-executors."""
+(119-120) and 57 MiB stayed held (51). Reading a local index's files in
+place, at 16.7 MB (45,500 rows, 4 files, 120 MiB before; 3 runs against
+3 of the copy-then-read form): 0.25-0.30 s wall (0.23-0.39 s), RSS up
+123-126 MiB at its peak (130-139) and 52 MiB held 3 s later (54). The
+peak is pyarrow's jemalloc pool keeping freed pages for its 1 s decay;
+neither pool option lowers it (3 runs each, on a ``read_table`` form of
+the in-place read that peaked at 122-138 MiB): ``release_unused()``
+after the load left it at 132-139 MiB, and reading through
+``pa.system_memory_pool()`` at 126-131 MiB with 97-103 MiB still held
+3 s later, since glibc keeps the freed buffers. The cap keeps the
+snapshot under the size of the driver process it lives in; larger
+indexes stay on the executors."""
 
 
 class _IndexSnapshot(NamedTuple):
@@ -348,9 +359,8 @@ class RagEngine:
     _layout_lock: threading.RLock = field(
         default_factory=threading.RLock, repr=False, compare=False
     )
-    # (Hadoop Path class, the index's Path, its FileSystem): each py4j
-    # package lookup of the class is several gateway round trips
-    _fs_handles: tuple | None = field(default=None, repr=False, compare=False)
+    # the index path on its file system, local or not decided once
+    _fs: PathFs | None = field(default=None, repr=False, compare=False)
 
     # -- index build (S2-S5, F5, F6, F8) -----------------------------------
 
@@ -367,8 +377,7 @@ class RagEngine:
         An input whose plan statistics predict one Python task is
         appended on the driver (``_append_on_driver``): two jobs, and no
         Python worker. Any other input is ``write_index_incremental``."""
-        _, root, fs = self._index_fs()
-        created = not fs.exists(root)
+        created = not self._index_fs().exists()
         n_new = self._append_on_driver(docs, created)
         if n_new is None:
             schema = None if created else self._state.schema  # no index to read yet
@@ -466,31 +475,25 @@ class RagEngine:
     def _lex_paths(self) -> tuple[str, str]:
         return f"{self.index_path}_lex", f"{self.index_path}_lex_stats"
 
-    def _index_fs(self) -> tuple:
-        if self._fs_handles is None:
-            path_cls = self.spark._jvm.org.apache.hadoop.fs.Path
-            root = path_cls(self.index_path)
-            fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            self._fs_handles = (path_cls, root, fs)
-        return self._fs_handles
+    def _index_fs(self) -> PathFs:
+        if self._fs is None:
+            self._fs = PathFs(self.spark, self.index_path)
+        return self._fs
 
     def _index_listing(self) -> tuple | None:
         """The sorted ``(name, length, modificationTime)`` of every data
         file of the index directory: the files a fresh ``spark.read``
-        would read (``_is_data_file``), from one Hadoop-FS
-        ``listStatus`` on the driver (no Spark job). Any append,
-        overwrite or re-creation changes it; a ``_SUCCESS`` rewrite
-        alone does not. None on FS errors, a missing index included."""
+        would read (``_is_data_file``), from one ``PathFs.status`` on the
+        driver (no Spark job): ``os.scandir`` on a local index, with no
+        JVM round trip, and Hadoop-FS ``listStatus`` on any other. Any
+        append, overwrite or re-creation changes it; a ``_SUCCESS``
+        rewrite alone does not. None on FS errors, a missing index
+        included."""
         try:
-            _, root, fs = self._index_fs()
-            entries = []
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                if _is_data_file(name):
-                    entries.append((name, st.getLen(), st.getModificationTime()))
-            return tuple(sorted(entries))
-        except Exception:
+            entries = self._index_fs().status()
+        except (OSError, Py4JError):
             return None
+        return tuple(sorted(e[:3] for e in entries if _is_data_file(e[0])))
 
     def _corpus_signature(self, state: _IndexState) -> str:
         """Reuse fingerprint for derived layouts (IVF codebook, postings
@@ -857,22 +860,23 @@ class RagEngine:
         )
 
     def _read_index_files(self, names: list[str], schema: StructType) -> list | None:
-        """``_snapshot_arrays`` of each named index file: the index's
-        Hadoop FS copies the file into a local temporary directory, the
-        one reader for every FS the Spark route reads, and pyarrow reads
-        the copy. None when a copy or a read fails."""
+        """``_snapshot_arrays`` of each named index file, read by pyarrow:
+        in place on a local index, and on any other from a copy that the
+        index's Hadoop FS makes in a local temporary directory
+        (``PathFs.readable``), the one reader for every FS the Spark route
+        reads. None when a copy or a read fails."""
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from py4j.protocol import Py4JError
 
-        path_cls, root, fs = self._index_fs()
+        fs = self._index_fs()
         parts = []
-        with tempfile.TemporaryDirectory() as tmp:
+        with nullcontext() if fs.local is not None else tempfile.TemporaryDirectory() as tmp:
             for name in names:
-                dst = os.path.join(tmp, name)
                 try:
-                    fs.copyToLocalFile(False, path_cls(root, name), path_cls(dst), True)
-                    table = pq.read_table(dst, columns=list(_SNAPSHOT_COLS))
+                    # a ParquetFile, not read_table's dataset discovery:
+                    # 0.3 ms against 1.0 ms for a one-append file
+                    with pq.ParquetFile(fs.readable(name, tmp)) as f:
+                        table = f.read(columns=list(_SNAPSHOT_COLS))
                 except (Py4JError, OSError, pa.ArrowException):
                     return None
                 parts.append(_snapshot_arrays(table, schema, self.dim))

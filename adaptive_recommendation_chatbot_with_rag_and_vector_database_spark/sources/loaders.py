@@ -13,8 +13,11 @@ from __future__ import annotations
 
 import functools
 import inspect
+import os
+import stat
 import threading
 import time
+import weakref
 from collections.abc import Callable
 
 from py4j.protocol import Py4JError
@@ -61,27 +64,143 @@ _INFERENCE_CONFS = (
 _TABLE_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
+#: SparkContext -> whether its Hadoop ``fs.defaultFS`` is the local file
+#: system, read once per context
+_DEFAULT_FS_IS_LOCAL: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def local_path(spark: SparkSession, path: str) -> str | None:
+    """The OS path that ``path`` names when Hadoop resolves it on the
+    local file system: an absolute path with a ``file:`` scheme and an
+    empty authority, or with no scheme while the context's
+    ``fs.defaultFS`` is ``file:`` (read once per SparkContext). None for
+    any other path: another scheme (HDFS, S3A and the like), whose
+    configuration and credentials reach it only through the JVM, and a
+    relative path, which Hadoop resolves against the JVM's working
+    directory."""
+    colon, slash = path.find(":"), path.find("/")
+    if colon != -1 and (slash == -1 or colon < slash):  # Hadoop Path's scheme rule
+        if path[:colon].lower() != "file":
+            return None
+        path = path[colon + 1 :]
+        if path.startswith("//"):  # an authority; only ``file:///`` is local
+            if not path.startswith("///"):
+                return None
+            path = path[2:]
+    else:
+        sc = spark.sparkContext
+        local = _DEFAULT_FS_IS_LOCAL.get(sc)
+        if local is None:
+            default = sc._jsc.hadoopConfiguration().get("fs.defaultFS") or "file:///"
+            local = _DEFAULT_FS_IS_LOCAL[sc] = default.lower().startswith("file:")
+        if not local:
+            return None
+    if not path.startswith("/"):
+        return None
+    return path.rstrip("/") or "/"  # Hadoop drops a trailing slash
+
+
+def _hidden_checksum(name: str) -> bool:
+    # what ChecksumFileSystem.listStatus hides (ChecksumFileSystem.DEFAULT_FILTER)
+    return name.startswith(".") and name.endswith(".crc")
+
+
+def _local_status(path: str) -> list[tuple[str, int, int, bool]]:
+    """``LocalFileSystem.listStatus`` of the OS path ``path`` from
+    ``os.scandir``: ``st_size`` is the length and ``st_mtime_ns`` in whole
+    milliseconds the modification time (``File.lastModified``); checksum
+    files are hidden, an entry gone between the listing and its stat is
+    skipped, and a file lists as itself. Raises OSError when ``path``
+    cannot be listed, a missing one included."""
+    try:
+        with os.scandir(path) as it:
+            found = []
+            for entry in it:
+                if _hidden_checksum(entry.name):
+                    continue
+                try:
+                    found.append((entry.name, entry.stat()))
+                except FileNotFoundError:  # removed since, or a dangling link
+                    continue
+    except NotADirectoryError:
+        name = os.path.basename(path)
+        found = [] if _hidden_checksum(name) else [(name, os.stat(path))]
+    return [
+        (name, st.st_size, st.st_mtime_ns // 1_000_000, stat.S_ISDIR(st.st_mode))
+        for name, st in found
+    ]
+
+
+class PathFs:
+    """``path`` on the file system Spark reads it from, decided once, at
+    construction (:func:`local_path`). On the local file system
+    :meth:`status` and :meth:`exists` are ``os`` calls and :meth:`readable`
+    names the file in place: no JVM round trip. On any other (HDFS, S3A
+    and the like) they are Hadoop-FS calls over py4j, through handles
+    built on first use. Set ``local`` to None to take the Hadoop form on
+    a local path."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark, self.path = spark, path
+        self.local = local_path(spark, path)
+        self._handles: tuple | None = None
+
+    def hadoop(self) -> tuple:
+        """(Hadoop ``Path`` class, the path's ``Path``, its ``FileSystem``)."""
+        if self._handles is None:
+            # one py4j lookup of the full class name, not one per package
+            path_cls = getattr(self.spark._jvm, "org.apache.hadoop.fs.Path")
+            root = path_cls(self.path)
+            fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            self._handles = (path_cls, root, fs)
+        return self._handles
+
+    def status(self) -> list[tuple[str, int, int, bool]]:
+        """``FileSystem.listStatus`` of the path as ``(name, length,
+        modificationTime, isDirectory)`` tuples, in listing order; a file
+        lists as itself. Raises OSError (local) or Py4JError (Hadoop)
+        when the path cannot be listed, a missing one included."""
+        if self.local is not None:
+            return _local_status(self.local)
+        _, root, fs = self.hadoop()
+        return [
+            (st.getPath().getName(), st.getLen(), st.getModificationTime(), st.isDirectory())
+            for st in fs.listStatus(root)
+        ]
+
+    def exists(self) -> bool:
+        if self.local is not None:
+            return os.path.exists(self.local)
+        _, root, fs = self.hadoop()
+        return fs.exists(root)
+
+    def readable(self, name: str, tmp: str | None) -> str:
+        """An OS path that holds the path's child ``name``: the file
+        itself on the local file system, else a copy in the directory
+        ``tmp`` (``copyToLocalFile``). Raises OSError or Py4JError."""
+        if self.local is not None:
+            return os.path.join(self.local, name)
+        path_cls, root, fs = self.hadoop()
+        dst = os.path.join(tmp, name)
+        fs.copyToLocalFile(False, path_cls(root, name), path_cls(dst), True)
+        return dst
+
+
 def _schema_stamp(spark: SparkSession, path: str) -> tuple | None:
     """What the schema Spark infers for ``path`` depends on: the sorted
     ``(name, length, modificationTime)`` of its entries from one
-    Hadoop-FS ``listStatus`` (a single file lists as itself), and the
+    :meth:`PathFs.status` (a single file lists as itself), and the
     :data:`_INFERENCE_CONFS` values. None when the path cannot be
     listed, a missing one included, or holds a directory (partition
     discovery reads the names under it)."""
     try:
-        # one py4j lookup of the full class name, not one per package
-        jpath = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        files = []
-        for st in fs.listStatus(jpath):
-            if st.isDirectory():
-                return None
-            files.append(
-                (st.getPath().getName(), st.getLen(), st.getModificationTime())
-            )
-    except Py4JError:  # Py4JJavaError included: a Hadoop FS error
+        entries = PathFs(spark, path).status()
+    except (OSError, Py4JError):  # Py4JJavaError included: a Hadoop FS error
         return None
-    return tuple(sorted(files)), tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    if any(is_dir for *_, is_dir in entries):
+        return None
+    files = tuple(sorted(entry[:3] for entry in entries))
+    return files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -497,9 +616,7 @@ def read_partitions(
     per-question cost at 2048 IVF cells — while this lists only the
     probed ones. A ``schema`` (``col`` included; a StructType or a DDL
     string) spares the read its footer-inference job."""
-    # one py4j lookup of the full class name, not one per package
-    path_cls = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
-    fs = path_cls(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    path_cls, _, fs = PathFs(spark, path).hadoop()
     subdirs = [
         p for p in (f"{path}/{col}={v}" for v in values) if fs.exists(path_cls(p))
     ]

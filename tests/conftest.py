@@ -51,6 +51,25 @@ def file_scans(df, location: str) -> int:
     return n
 
 
+def py4j_calls(fn) -> int:
+    """How many py4j gateway round trips ``fn()`` makes: the calls of
+    ``ClientServerConnection.send_command``, through which every command
+    the driver sends the JVM goes."""
+    from unittest import mock
+
+    from py4j.clientserver import ClientServerConnection
+
+    send, calls = ClientServerConnection.send_command, []
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    with mock.patch.object(ClientServerConnection, "send_command", counted):
+        fn()
+    return len(calls)
+
+
 def job_stats(spark, fn) -> tuple[int, list[int]]:
     """The Spark jobs ``fn()`` runs, counted through a job group: how
     many, and the ``numTasks`` of each stage they ran (skipped stages,

@@ -14,7 +14,7 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operator
     REFUSAL_PREFIX,
 )
 
-from conftest import SF_DIR, count_nodes, file_scans, job_stats, plan_nodes
+from conftest import SF_DIR, count_nodes, file_scans, job_stats, plan_nodes, py4j_calls
 
 
 @pytest.fixture()
@@ -853,15 +853,17 @@ def test_snapshot_ask_equals_topk_cosine(spark, tmp_path):
         assert len(got) == eng.k and got == _topk(eng, q), q
 
 
-def test_snapshot_sees_overwrite_and_recreation(engine, spark, tmp_path):
+@pytest.mark.parametrize("form", ["local", "hadoop"])
+def test_snapshot_sees_overwrite_and_recreation(engine, spark, tmp_path, form):
     """The snapshot is keyed on the index's file listing: an in-place
     overwrite by another writer, and an index deleted and built again,
     are both seen by the next ask, which re-reads every data file on
-    the driver, with no job."""
+    the driver, with no job, whether the index is listed and read with
+    ``os`` calls or through Hadoop FS."""
     import shutil
 
     engine.ask("warm-up: loads the snapshot")
-    spy = _spy_fs(engine)
+    spy = _spy_reads(engine, form)
     text = "Glaciers carve valleys over thousands of years."
     staged = str(tmp_path / "staged")
     _append(spark, staged, 71, text)
@@ -869,16 +871,16 @@ def test_snapshot_sees_overwrite_and_recreation(engine, spark, tmp_path):
     jobs, out = _ask_jobs(engine, text)
     assert jobs == 0 and [r.doc_id for r in out] == [71]
     assert out == _topk(engine, text)
-    assert spy.copied == _data_files(engine)
+    assert spy.read == _data_files(engine)
 
     shutil.rmtree(engine.index_path)
     text = "Volcanic ash enriches the surrounding soil."
     _append(spark, engine.index_path, 72, text)
-    spy.copied.clear()
+    spy.read.clear()
     jobs, out = _ask_jobs(engine, text)
     assert jobs == 0 and [r.doc_id for r in out] == [72]
     assert out == _topk(engine, text)
-    assert spy.copied == _data_files(engine)
+    assert spy.read == _data_files(engine)
 
 
 @pytest.mark.parametrize("embedding", [None, [0.5, 0.5, 0.5]])
@@ -930,33 +932,32 @@ def test_each_ask_lists_the_index_once(engine, monkeypatch):
     assert len(listings) == 2
 
 
-class _FsSpy:
-    """Stands in for the index's Hadoop FileSystem: lists through the
-    real one, and records the name of each file copied to the driver.
-    When ``fail`` is set, each copy asks the real one for a file that is
-    not there, as after an overwrite removed it, and raises its error."""
+class _ReadSpy:
+    """Stands in for the index's ``PathFs.readable``, which names each
+    index file the driver reads: the file in place, or a Hadoop-FS copy
+    of it. Records each name and hands it to the real one. When ``fail``
+    is set, it asks the real one for a file that is not there, as after
+    an overwrite removed it, so the read (or the copy) raises."""
 
-    def __init__(self, fs):
-        self.fs, self.fail, self.copied = fs, False, []
+    def __init__(self, readable):
+        self.readable, self.fail, self.read = readable, False, []
 
-    def listStatus(self, path):
-        return self.fs.listStatus(path)
-
-    def exists(self, path):
-        return self.fs.exists(path)
-
-    def copyToLocalFile(self, del_src, src, dst, raw):
+    def __call__(self, name, tmp):
         if self.fail:
-            src = src.suffix(".gone")
-        else:
-            self.copied.append(src.getName())
-        return self.fs.copyToLocalFile(del_src, src, dst, raw)
+            return self.readable(name + ".gone", tmp)
+        self.read.append(name)
+        return self.readable(name, tmp)
 
 
-def _spy_fs(eng) -> _FsSpy:
-    path_cls, root, fs = eng._index_fs()
-    spy = _FsSpy(fs)
-    eng._fs_handles = (path_cls, root, spy)
+def _spy_reads(eng, form: str) -> _ReadSpy:
+    """A ``_ReadSpy`` on ``eng``'s index reads, which from now on list
+    and read the index with ``os`` calls (``form="local"``) or through
+    Hadoop FS (``"hadoop"``)."""
+    fs = eng._index_fs()
+    assert fs.local is not None
+    if form == "hadoop":
+        fs.local = None
+    fs.readable = spy = _ReadSpy(fs.readable)
     return spy
 
 
@@ -977,12 +978,14 @@ def _ask_jobs(eng, q) -> tuple[int, list]:
     return jobs, got[0]
 
 
-def test_ask_after_any_append_reads_the_added_file_on_the_driver(engine, spark):
+@pytest.mark.parametrize("form", ["local", "hadoop"])
+def test_ask_after_any_append_reads_the_added_file_on_the_driver(engine, spark, form):
     """The ask after this engine's append, and after another engine's,
-    runs no job, copies only the added file and returns the top-k
-    scan's rows."""
+    runs no job, reads only the added file and returns the top-k scan's
+    rows, whether the index is listed and read with ``os`` calls or
+    through Hadoop FS."""
     engine.ask("warm-up: loads the snapshot")
-    spy = _spy_fs(engine)
+    spy = _spy_reads(engine, form)
     docs = spark.createDataFrame(
         [(43, "Kites climb on steady coastal winds.")], "doc_id long, text string"
     )
@@ -993,11 +996,11 @@ def test_ask_after_any_append_reads_the_added_file_on_the_driver(engine, spark):
         before = _data_files(engine)
         append()
         added = sorted(set(_data_files(engine)) - set(before))
-        spy.copied.clear()
+        spy.read.clear()
         for q in ("kites on coastal winds", "lanterns on the pier"):
             jobs, got = _ask_jobs(engine, q)
             assert jobs == 0 and got == _topk(engine, q), q
-        assert spy.copied == added
+        assert spy.read == added
 
 
 def test_success_marker_rewrite_reloads_nothing(engine, monkeypatch):
@@ -1036,15 +1039,16 @@ def test_snapshot_serves_int_and_long_doc_id_files(engine, spark):
     assert engine._state.snapshot.doc_id.dtype == np.int64
 
 
-def test_failed_copy_answers_on_the_spark_route(engine, spark):
-    """A copy that raises (a file an overwrite removed mid-read) leaves
-    the question to the top-k scan and keeps no partial snapshot; once
-    copies work again, the held snapshot is refreshed with the added
-    file."""
+@pytest.mark.parametrize("form", ["local", "hadoop"])
+def test_failed_read_answers_on_the_spark_route(engine, spark, form):
+    """A read (or, through Hadoop FS, a copy) that raises, as for a file
+    an overwrite removed mid-read, leaves the question to the top-k scan
+    and keeps no partial snapshot; once reads work again, the held
+    snapshot is refreshed with the added file."""
     engine.ask("warm-up: loads the snapshot")
     held, before = engine._state.snapshot, _data_files(engine)
-    spy = _spy_fs(engine)
     _append(spark, engine.index_path, 46, "Owls hunt silently at dusk.")
+    spy = _spy_reads(engine, form)
     spy.fail = True
     q = "owls hunting at dusk"
     jobs, got = _ask_jobs(engine, q)
@@ -1053,7 +1057,7 @@ def test_failed_copy_answers_on_the_spark_route(engine, spark):
     spy.fail = False
     jobs, got = _ask_jobs(engine, q)
     assert jobs == 0 and got == _topk(engine, q)
-    assert spy.copied == sorted(set(_data_files(engine)) - set(before))
+    assert spy.read == sorted(set(_data_files(engine)) - set(before))
 
 
 def test_data_file_filter_agrees_with_spark(spark):
@@ -1066,6 +1070,85 @@ def test_data_file_filter_agrees_with_spark(spark):
     utils = spark._jvm.org.apache.spark.util.HadoopFSUtils
     for name in ("_SUCCESS", ".x.crc", "part-0.parquet", "x._COPYING_", "_a=1"):
         assert _is_data_file(name) == (not utils.shouldFilterOutPathName(name)), name
+
+
+def test_local_and_hadoop_listings_agree(spark, tmp_path, monkeypatch):
+    """On a local path, the ``os.scandir`` and Hadoop-FS forms of the
+    engine's ``_index_listing`` and of ``load_table``'s ``_schema_stamp``
+    are ``==``: over a directory holding every kind of name Spark's
+    writers leave (checksum files hidden, ``_SUCCESS`` and other
+    non-data names kept by the stamp), with and without subdirectories,
+    over a single file, and over a missing path (None in both). The
+    local listing makes no py4j round trip."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources import (
+        loaders,
+    )
+
+    def forms(path):
+        """(local, Hadoop) forms of (``_index_listing``, ``_schema_stamp``)."""
+        eng = RagEngine(spark, index_path=path)
+        assert eng._index_fs().local is not None
+        local = (eng._index_listing(), loaders._schema_stamp(spark, path))
+        with monkeypatch.context() as m:
+            m.setattr(loaders, "local_path", lambda spark, path: None)
+            eng = RagEngine(spark, index_path=path)
+            hadoop = (eng._index_listing(), loaders._schema_stamp(spark, path))
+        return local, hadoop
+
+    root = tmp_path / "t"
+    spark.range(10).coalesce(1).write.parquet(str(root))
+    (root / "x._COPYING_").write_text("partial")
+    (root / ".hidden").write_text("hidden")
+    part = next(root.glob("part-*.parquet")).name
+    assert (root / f".{part}.crc").exists() and (root / "._SUCCESS.crc").exists()
+    local, hadoop = forms(str(root))
+    assert local == hadoop and forms(f"file://{root}") == (local, hadoop)
+    listing, (files, _) = local
+    assert [name for name, _, _ in listing] == [part]
+    assert [name for name, _, _ in files] == sorted([".hidden", "_SUCCESS", part, "x._COPYING_"])
+
+    (root / "_temporary").mkdir()
+    (root / "k=v").mkdir()
+    local, hadoop = forms(str(root))
+    assert local == hadoop
+    assert [name for name, _, _ in local[0]] == ["k=v", part] and local[1] is None
+
+    local, hadoop = forms(str(root / part))
+    part_entry = tuple(e for e in files if e[0] == part)
+    assert local == hadoop and local[0] == local[1][0] == part_entry
+    assert forms(str(tmp_path / "missing")) == ((None, None), (None, None))
+
+    eng = RagEngine(spark, index_path=str(root))
+    eng._index_listing()
+    assert py4j_calls(eng._index_listing) == 0
+    for path, local in (
+        ("file:/a/b/", "/a/b"),
+        ("file:///a/b", "/a/b"),
+        ("file://host/a/b", None),
+        ("hdfs://nn:8020/a/b", None),
+        ("s3a://bucket/a/b", None),
+        ("a/b", None),  # relative: Hadoop resolves it in the JVM
+    ):
+        assert loaders.local_path(spark, path) == local, path
+
+
+def test_warm_ask_makes_no_gateway_round_trip(engine, spark):
+    """On a local index, a warm ask on the snapshot route and the ask
+    after another engine's append send the JVM nothing: no py4j round
+    trip and no Spark job."""
+
+    def ask(q):
+        calls, got = [], []
+        jobs, _ = job_stats(
+            spark, lambda: calls.append(py4j_calls(lambda: got.append(engine.ask(q))))
+        )
+        assert got[0]["retrieved"] == _topk(engine, q), q
+        return jobs, calls[0]
+
+    engine.ask("warm-up: loads the snapshot")
+    assert ask("order priorities?") == (0, 0)
+    _append(spark, engine.index_path, 47, "Herons wade through shallow marshes.")
+    assert ask("herons in the marsh") == (0, 0)
 
 
 def test_history_df_is_a_local_frame_in_turn_order(engine):
