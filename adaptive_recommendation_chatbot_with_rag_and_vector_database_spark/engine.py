@@ -12,9 +12,9 @@ verbs on Spark:
   nothing). An input whose plan statistics predict one Python task is
   appended on the driver: it reads the input (one job), skips the keys
   and reuses the vectors of the driver-held snapshot below, and writes
-  one file (one job), with no Python worker. Larger inputs, inputs
-  without plan statistics, and indexes the snapshot does not serve
-  take ``write_index_incremental``.
+  one file with pyarrow (``PathFs.publish``): no write job and no
+  Python worker. Larger inputs, inputs without plan statistics, and
+  indexes the snapshot does not serve take ``write_index_incremental``.
 - ``retrieve`` / ``ask`` — embed question → top-k cosine
   (TakeOrderedAndProject) → order-preserving context stuffing →
   pluggable answerer → refusal/first-line post-processing
@@ -56,6 +56,7 @@ from __future__ import annotations
 import hashlib
 import tempfile
 import threading
+import uuid
 from contextlib import nullcontext
 from dataclasses import dataclass, field
 from typing import Callable, NamedTuple
@@ -88,7 +89,7 @@ from .operators.retrieval import (
     write_index_incremental,
 )
 from .sources.binary_docs import load_binary_documents, utf8_extractor
-from .sources.loaders import PathFs, local_frame
+from .sources.loaders import PathFs, arrow_table, local_frame
 
 
 def passthrough_rewrite(question: str, history: list[dict]) -> str:
@@ -375,8 +376,9 @@ class RagEngine:
         so a sub-threshold build never pays even the routing count.
 
         An input whose plan statistics predict one Python task is
-        appended on the driver (``_append_on_driver``): two jobs, and no
-        Python worker. Any other input is ``write_index_incremental``."""
+        appended on the driver (``_append_on_driver``): one job, the
+        input read, and no Python worker. Any other input is
+        ``write_index_incremental``."""
         created = not self._index_fs().exists()
         n_new = self._append_on_driver(docs, created)
         if n_new is None:
@@ -409,13 +411,17 @@ class RagEngine:
         input (one job), runs the Spark plan's chunker and embedder on
         it, skips the ``(doc_id, content_hash)`` keys the serving snapshot
         holds, reuses the snapshot's vector of any hash it holds, and
-        writes the rows as one file (one job). Batch duplicates are kept,
-        as the Spark route anti-joins against the index only. None,
+        writes the rows with pyarrow, with no Spark job, as one file that
+        ``PathFs.publish`` adds whole; its footer holds Spark's schema, so
+        Spark reads the types its own writer gives. Batch duplicates are
+        kept, as the Spark route anti-joins against the index only. None,
         having written nothing, when the Spark route must serve: a wider
         input, a ``text`` that is not a string, a ``doc_id`` whose values
         do not match as join keys do in Python (``_key_kind``) or of
         another kind than the index's, or an index that the snapshot
         does not serve."""
+        import pyarrow.parquet as pq
+
         types = {f.name: f.dataType for f in docs.schema}
         kind = "doc_id" in types and _key_kind(types["doc_id"])
         if not (
@@ -455,11 +461,16 @@ class RagEngine:
         schema = StructType(
             [StructField("doc_id", types["doc_id"]), *StructType.fromDDL(ddl)]
         )
-        local_frame(
-            self.spark,
+        table = arrow_table(
             [(d, c, t, known[h] if h in known else next(fresh), h) for d, c, t, h in rows],
             schema,
-        ).coalesce(1).write.mode("append").parquet(self.index_path)
+        ).replace_schema_metadata({"org.apache.spark.sql.parquet.row.metadata": schema.json()})
+        # store_schema stays on: without the Arrow schema, pyarrow writes
+        # no footer metadata at all, Spark's key included
+        self._index_fs().publish(
+            f"part-00000-{uuid.uuid4()}-c000.snappy.parquet",
+            lambda path: pq.write_table(table, path, compression="snappy"),
+        )
         return len(rows)
 
     @staticmethod

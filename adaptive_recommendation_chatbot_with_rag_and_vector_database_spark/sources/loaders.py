@@ -15,6 +15,7 @@ import functools
 import inspect
 import os
 import stat
+import tempfile
 import threading
 import time
 import weakref
@@ -134,11 +135,11 @@ def _local_status(path: str) -> list[tuple[str, int, int, bool]]:
 class PathFs:
     """``path`` on the file system Spark reads it from, decided once, at
     construction (:func:`local_path`). On the local file system
-    :meth:`status` and :meth:`exists` are ``os`` calls and :meth:`readable`
-    names the file in place: no JVM round trip. On any other (HDFS, S3A
-    and the like) they are Hadoop-FS calls over py4j, through handles
-    built on first use. Set ``local`` to None to take the Hadoop form on
-    a local path."""
+    :meth:`status`, :meth:`exists` and :meth:`publish` are ``os`` calls
+    and :meth:`readable` names the file in place: no JVM round trip. On
+    any other (HDFS, S3A and the like) they are Hadoop-FS calls over
+    py4j, through handles built on first use. Set ``local`` to None to
+    take the Hadoop form on a local path."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark, self.path = spark, path
@@ -184,6 +185,39 @@ class PathFs:
         dst = os.path.join(tmp, name)
         fs.copyToLocalFile(False, path_cls(root, name), path_cls(dst), True)
         return dst
+
+    def publish(self, name: str, write: Callable[[str], object]) -> None:
+        """Add the file ``name`` whole to the directory at the path (made
+        when missing): ``write(os_path)`` writes it under the hidden name
+        ``.<name>.tmp``, which Spark's reader and the engine's listing
+        skip, a rename publishes it, and an empty ``_SUCCESS`` follows, as
+        Spark's committer writes. Off the local file system the file is
+        written locally and copied to the hidden name first
+        (``copyFromLocalFile``). A failure removes the hidden file."""
+        hidden = f".{name}.tmp"
+        if self.local is not None:
+            os.makedirs(self.local, exist_ok=True)
+            tmp = os.path.join(self.local, hidden)
+            try:
+                write(tmp)
+                os.replace(tmp, os.path.join(self.local, name))
+            finally:
+                if os.path.lexists(tmp):  # the write or the rename failed
+                    os.remove(tmp)
+            open(os.path.join(self.local, "_SUCCESS"), "wb").close()
+            return
+        path_cls, root, fs = self.hadoop()
+        dst = path_cls(root, hidden)
+        with tempfile.TemporaryDirectory() as tmp:
+            write(os.path.join(tmp, name))
+            try:
+                fs.copyFromLocalFile(False, True, path_cls(os.path.join(tmp, name)), dst)
+                if not fs.rename(dst, path_cls(root, name)):
+                    raise OSError(f"{self.path}: cannot rename {hidden} to {name}")
+            except BaseException:
+                fs.delete(dst, False)
+                raise
+        fs.create(path_cls(root, "_SUCCESS"), True).close()
 
 
 def _schema_stamp(spark: SparkSession, path: str) -> tuple | None:
@@ -581,25 +615,30 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table)
 
 
-def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
-    """``rows`` (tuples in ``schema``'s column order; ``schema`` a
-    StructType or a DDL string) as a local frame: an Arrow table handed
-    to ``createDataFrame`` plans a ``LocalTableScan``, which runs no Spark
-    job to build or collect, where a list input runs a Python stage of
-    ``defaultParallelism`` tasks. Each column is built in its Arrow type,
+def arrow_table(rows: list, schema: StructType):
+    """``rows`` (tuples in ``schema``'s column order) as an Arrow table of
+    ``to_arrow_schema(schema)``. Each column is built in its Arrow type,
     so a nullable integer stays an integer (a pandas frame widens it to
     float), and no rows still give ``schema``'s columns."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
     columns = list(zip(*rows)) if rows else [()] * len(arrow)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(col, type=f.type) for col, f in zip(columns, arrow)], schema=arrow
     )
-    return spark.createDataFrame(table, schema)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s column order; ``schema`` a
+    StructType or a DDL string) as a local frame: an :func:`arrow_table`
+    handed to ``createDataFrame`` plans a ``LocalTableScan``, which runs
+    no Spark job to build or collect, where a list input runs a Python
+    stage of ``defaultParallelism`` tasks."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
 
 
 def read_partitions(

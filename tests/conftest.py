@@ -54,15 +54,21 @@ def file_scans(df, location: str) -> int:
 def py4j_calls(fn) -> int:
     """How many py4j gateway round trips ``fn()`` makes: the calls of
     ``ClientServerConnection.send_command``, through which every command
-    the driver sends the JVM goes."""
+    the driver sends the JVM goes, made on the thread that runs ``fn``.
+    Other threads' commands are not counted: py4j's finalizer thread
+    sends a delete command (``m``/``d``/id) for each proxy that Python
+    freed, up to a second after it was freed, so one lands inside
+    ``fn`` at random."""
+    import threading
     from unittest import mock
 
     from py4j.clientserver import ClientServerConnection
 
-    send, calls = ClientServerConnection.send_command, []
+    send, calls, caller = ClientServerConnection.send_command, [], threading.get_ident()
 
     def counted(self, command, *args, **kwargs):
-        calls.append(command)
+        if threading.get_ident() == caller:
+            calls.append(command)
         return send(self, command, *args, **kwargs)
 
     with mock.patch.object(ClientServerConnection, "send_command", counted):

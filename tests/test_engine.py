@@ -1195,11 +1195,11 @@ def _sql_plans(spark, fn) -> list[str]:
     return [runs.apply(i).physicalPlanDescription() for i in range(before, runs.size())]
 
 
-def test_small_append_runs_on_the_driver_in_two_jobs(spark, tmp_path, monkeypatch):
+def test_small_append_runs_on_the_driver_in_one_job(spark, tmp_path, monkeypatch):
     """On an engine whose snapshot serves, a 16-document parquet append
-    is one Python task's work, which the driver does: two jobs (the
-    input read and the write) of one task each, no Python UDF or
-    Python-fed scan in any plan, and exactly one index file added."""
+    is one Python task's work, which the driver does: one job of one
+    task (the input read), no write command, Python UDF or Python-fed
+    scan in any plan, and exactly one index file added."""
     import glob
 
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark import (
@@ -1217,9 +1217,12 @@ def test_small_append_runs_on_the_driver_in_two_jobs(spark, tmp_path, monkeypatc
     plans = _sql_plans(
         spark, lambda: stats.append(job_stats(spark, lambda: eng.index_documents(docs)))
     )
-    assert stats == [(2, [1, 1])]
-    assert len(plans) == 2
+    assert stats == [(1, [1])]
+    assert len(plans) == 1
     assert not any("EvalPython" in p or "ExistingRDD" in p for p in plans)
+    assert not any(
+        "InsertIntoHadoopFsRelationCommand" in p or "WriteFiles" in p for p in plans
+    )
     assert len(set(glob.glob(f"{eng.index_path}/*.parquet")) - before) == 1
     assert spark_route == []
 
@@ -1272,7 +1275,8 @@ def _index_rows(spark, path: str) -> list:
     return sorted(rows, key=repr)
 
 
-def test_driver_append_equals_the_spark_route(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("form", ["local", "hadoop"])
+def test_driver_append_equals_the_spark_route(spark, tmp_path, monkeypatch, form):
     """The same batches appended to two copies of one index, one through
     ``index_documents`` (the driver route) and one through
     ``write_index_incremental`` (the Spark route), give the same counts
@@ -1280,12 +1284,17 @@ def test_driver_append_equals_the_spark_route(spark, tmp_path, monkeypatch):
     rows: at creation (with the same schema), for new documents, exact
     re-submits and new ids carrying indexed text, for a document twice
     in one batch, for an ``int`` ``doc_id``, and for a null text, an
-    empty text and a null ``doc_id``."""
+    empty text and a null ``doc_id``. The driver route publishes its
+    files with ``os`` calls (``form="local"``) or through Hadoop FS
+    (``"hadoop"``)."""
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark import (
         engine as engine_mod,
     )
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
         write_index_incremental,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources import (
+        loaders,
     )
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
         load_table,
@@ -1298,7 +1307,10 @@ def test_driver_append_equals_the_spark_route(spark, tmp_path, monkeypatch):
     ids = corpus.doc_id.tolist()
     spark_path = str(tmp_path / "spark_route")
     spark_route = _counting(monkeypatch, engine_mod, "write_index_incremental")
+    if form == "hadoop":
+        monkeypatch.setattr(loaders, "local_path", lambda spark, path: None)
     eng = RagEngine(spark, index_path=str(tmp_path / "driver_route"), chunk_size=200)
+    assert (eng._index_fs().local is None) == (form == "hadoop")
 
     def both(name: str, doc_ids, docs_text, id_dtype="Int64"):
         path = str(tmp_path / name)
@@ -1324,6 +1336,94 @@ def test_driver_append_equals_the_spark_route(spark, tmp_path, monkeypatch):
     assert both("int_ids", [3000, ids[6]], ["Thirty-two bit ids.", texts[6]], "Int32") == 1
     assert both("nulls", [4000, 4001, None], [None, "", "A note without an id."]) == 1
     assert spark_route == []
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "int"])
+def test_published_file_reads_as_the_spark_written_one(spark, tmp_path, id_type):
+    """A file the driver append wrote with pyarrow and a file Spark
+    writes of the same rows read back with ``==`` schemas and rows. The
+    published file's footer carries Spark's schema under Spark's
+    row-metadata key."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        local_frame,
+    )
+
+    src = _write_batch(spark, str(tmp_path / "docs"), 0)
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"))
+    docs = spark.read.parquet(src).selectExpr(f"cast(doc_id as {id_type}) doc_id", "text")
+    assert eng.index_documents(docs) > 0
+    (name,) = _data_files(eng)
+    published = os.path.join(eng.index_path, name)
+    schema = StructType.fromDDL(
+        f"doc_id {id_type}, chunk_id int, text string, embedding array<float>, "
+        "content_hash string"
+    )
+    rows = [tuple(r.values()) for r in pq.read_table(published).to_pylist()]
+    written = str(tmp_path / "spark_written")
+    local_frame(spark, rows, schema).coalesce(1).write.parquet(written)
+    by_spark = spark.read.parquet(written)
+    assert spark.read.parquet(published).schema == by_spark.schema
+    assert by_spark.schema["doc_id"].dataType.simpleString() == id_type
+    assert sorted(spark.read.parquet(published).collect()) == sorted(by_spark.collect())
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    footer = pq.ParquetFile(published).metadata.metadata[key]
+    assert StructType.fromJson(json.loads(footer)) == schema
+
+
+@pytest.mark.parametrize("form", ["local", "hadoop"])
+def test_no_reader_sees_a_partial_or_failed_append(spark, tmp_path, monkeypatch, form):
+    """While the driver append writes its file, the index's listing is
+    the one from before the append and an ask returns the pre-append
+    top-k. A write that raises leaves the listing and the directory as
+    they were: no data file added, and its hidden file removed."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources import (
+        loaders,
+    )
+
+    if form == "hadoop":
+        monkeypatch.setattr(loaders, "local_path", lambda spark, path: None)
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"))
+    assert eng.index_documents(spark.read.parquet(_write_batch(spark, str(tmp_path / "a"), 0)))
+    q = "lighthouses guide ships"
+    listing, top = eng._index_listing(), eng.ask(q)["retrieved"]
+    write, seen, paths = pq.write_table, [], []
+
+    def observed(table, where, **kwargs):
+        write(table, where, **kwargs)
+        paths.append(where)
+        seen.append((eng._index_listing(), eng.ask(q)["retrieved"]))
+
+    monkeypatch.setattr(pq, "write_table", observed)
+    docs = spark.read.parquet(_write_batch(spark, str(tmp_path / "b"), 100))
+    assert eng.index_documents(docs) > 0
+    assert seen == [(listing, top)]
+    assert len(eng._index_listing()) == len(listing) + 1
+
+    def failing(table, where, **kwargs):
+        write(table, where, **kwargs)
+        paths.append(where)
+        raise OSError("no space left on device")
+
+    monkeypatch.setattr(pq, "write_table", failing)
+    listing, names = eng._index_listing(), sorted(os.listdir(eng.index_path))
+    docs = spark.read.parquet(_write_batch(spark, str(tmp_path / "c"), 200))
+    with pytest.raises(OSError, match="no space left"):
+        eng.index_documents(docs)
+    assert eng._index_listing() == listing
+    assert sorted(os.listdir(eng.index_path)) == names
+    assert not os.path.exists(paths[-1])
+
+
 def test_concurrent_asks_keep_session_pairs_adjacent(engine):
     """Concurrent asks on one session must not interleave their
     user/assistant appends. The slow list widens the window between
